@@ -16,6 +16,7 @@ Re-expresses the reference's entity machinery Spark-first:
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -110,11 +111,17 @@ def link_entities(triples: DataFrame, pool: DataFrame, pred: str) -> DataFrame:
     tiny input single-partitions that stage and (a foldable constant
     partition key gets optimized away, bringing the WindowExec
     single-partition warning right back).
+
+    The rank table is handed to Spark as a pandas frame with an explicit
+    schema: with Arrow enabled the JVM builds it from Arrow batches, while
+    a list of tuples becomes a PythonRDD whose broadcast job starts a
+    Python worker per core just to read ≤ top_k rows.
     """
     spark = triples.sparkSession
     ranked = sorted(pool.collect(), key=lambda r: (-r["cnt"], r["name"]))
+    names = [r["name"] for r in ranked]
     w_rank = spark.createDataFrame(
-        [(r["name"], i) for i, r in enumerate(ranked)],
+        pd.DataFrame({"name": names, "entity_rank": range(len(names))}),
         "name string, entity_rank int",
     )
     return triples.join(

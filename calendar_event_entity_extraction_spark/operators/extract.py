@@ -422,9 +422,11 @@ def extract_events(
 ) -> DataFrame:
     """transcripts → one row per detected calendar request with the 8 fields.
 
-    Narrow map-only stage: filter + projections, no shuffle. Keeps
+    Narrow map-only stage: filter + ONE projection, no shuffle. Keeps
     (conv_id, turn_idx, text, ts) so downstream canonicalization and the
-    per-turn text-equality invariant hold.
+    per-turn text-equality invariant hold. The fields are projected in a
+    single ``select``, which is analysed once instead of once per added
+    column.
 
     Detection runs as ONE cheap rlike alternation per column (DATE_ANY_RE /
     TIME_ANY_RE, provably equivalent to "normalization non-null") placed in
@@ -433,24 +435,19 @@ def extract_events(
     cascade into the filter condition and evaluate it twice per row.
     """
     text = F.col("text")
-    return (
-        transcripts.filter(
-            (F.col("role") == "user")
-            & text.rlike(DATE_ANY_RE)
-            & text.rlike(TIME_ANY_RE)
-        )
-        .withColumn("date", date_norm_col(text))
-        .withColumn("time", time_norm_col(text))
-        .withColumn("event_id", F.xxhash64(F.col("conv_id"), F.col("turn_idx")))
-        .withColumn("action", action_col(text, name_pool))
-        .withColumn("attendees", attendees_col(text, name_pool))
-        .withColumn("location", location_col(text, mediums, location_pool, name_pool))
-        .withColumn("duration", duration_norm_col(text))
-        .withColumn("recurrence", recurrence_col(text))
-        .withColumn("notes", notes_col(text))
-        .select(
-            "event_id", "conv_id", "turn_idx", "text", "ts",
-            "action", "date", "time", "attendees", "location",
-            "duration", "recurrence", "notes",
-        )
+    return transcripts.filter(
+        (F.col("role") == "user")
+        & text.rlike(DATE_ANY_RE)
+        & text.rlike(TIME_ANY_RE)
+    ).select(
+        F.xxhash64(F.col("conv_id"), F.col("turn_idx")).alias("event_id"),
+        "conv_id", "turn_idx", "text", "ts",
+        action_col(text, name_pool).alias("action"),
+        date_norm_col(text).alias("date"),
+        time_norm_col(text).alias("time"),
+        attendees_col(text, name_pool).alias("attendees"),
+        location_col(text, mediums, location_pool, name_pool).alias("location"),
+        duration_norm_col(text).alias("duration"),
+        recurrence_col(text).alias("recurrence"),
+        notes_col(text).alias("notes"),
     )

@@ -30,8 +30,9 @@ from ..sources import manifest as mf
 
 
 def input_fingerprint(transcripts: DataFrame) -> str:
-    """Cheap content fingerprint: row count + xor of conv hashes. One pass,
-    executor-side."""
+    """Cheap content fingerprint: row count + the sum of
+    ``xxhash64(conv_id, turn_idx) % 1_000_003`` over all rows. One pass,
+    executor-side; it sees the row keys only, not ``text``."""
     row = transcripts.agg(
         F.count("*").alias("n"),
         F.sum(F.xxhash64("conv_id", "turn_idx") % 1_000_003).alias("h"),
@@ -46,17 +47,24 @@ def run_pipeline(
     resume: bool = True,
     top_k: int = 500,
 ) -> dict:
-    """Run (or resume) the full pipeline; returns the stage manifests."""
+    """Run (or resume) the full pipeline; returns the stage manifests.
+
+    ``entity_pools``, ``edges`` and ``nodes`` depend on ``top_k`` as well as
+    on the input, so their fingerprint carries it: a resume with another
+    ``top_k`` rebuilds those three and keeps ``events`` and ``triples``."""
     fp = input_fingerprint(transcripts)
+    fp_k = f"{fp};top_k={top_k}"
     manifests = {}
 
-    def stage(name: str, build, partition_by=None):
-        if resume and mf.stage_is_complete(out_dir, name, fp):
+    def stage(name: str, fingerprint: str, build, partition_by=None):
+        if resume and mf.stage_is_complete(out_dir, name, fingerprint):
             manifests[name] = mf.read_manifest(out_dir, name)
             manifests[name]["resumed"] = True
             return mf.read_stage(spark, out_dir, name)
         df = build()
-        manifests[name] = mf.write_stage(df, out_dir, name, fp, partition_by)
+        manifests[name] = mf.write_stage(
+            df, out_dir, name, fingerprint, partition_by
+        )
         return mf.read_stage(spark, out_dir, name)
 
     # SLIM projection before the canonicalize shuffle AND the write: the KG
@@ -65,11 +73,12 @@ def run_pipeline(
     # exchange payload and the stage's parquet volume
     events = stage(
         "events",
+        fp,
         lambda: canonicalize_events(
             extract_events(transcripts).select(*SLIM_EVENT_COLS)
         ),
     )
-    triples = stage("triples", lambda: events_to_triples(events))
+    triples = stage("triples", fp, lambda: events_to_triples(events))
 
     def build_pools():
         # ONE scan for both pools (round-6): the former per-pred
@@ -94,7 +103,7 @@ def run_pipeline(
             .select("name", "cnt", "pred")
         )
 
-    pools = stage("entity_pools", build_pools)
+    pools = stage("entity_pools", fp_k, build_pools)
 
     def build_edges():
         att_pool = pools.filter(F.col("pred") == "attendee").select("name", "cnt")
@@ -103,12 +112,12 @@ def run_pipeline(
     # edges use PARTITION-level checkpointing: a kill mid-stage resumes by
     # writing only the missing pred partitions (north_rule: per-partition
     # lineage + resume)
-    if resume and mf.stage_is_complete(out_dir, "edges", fp):
+    if resume and mf.stage_is_complete(out_dir, "edges", fp_k):
         manifests["edges"] = mf.read_manifest(out_dir, "edges")
         manifests["edges"]["resumed"] = True
     else:
         manifests["edges"] = mf.write_stage_partitioned_resumable(
-            build_edges(), out_dir, "edges", fp, "pred"
+            build_edges(), out_dir, "edges", fp_k, "pred"
         )
     edges = mf.read_stage(spark, out_dir, "edges")
 
@@ -137,5 +146,5 @@ def run_pipeline(
             ev.select("node_id", "name", "kind")
         )
 
-    stage("nodes", build_nodes, partition_by=["kind"])
+    stage("nodes", fp_k, build_nodes, partition_by=["kind"])
     return manifests

@@ -1,9 +1,17 @@
 """End-to-end pipeline + checkpoint/resume idempotence (SURVEY.md §7.2 #9)."""
 
+import os
+import shutil
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
-from calendar_event_entity_extraction_spark.plans.pipeline import run_pipeline
+from calendar_event_entity_extraction_spark.plans.pipeline import (
+    input_fingerprint,
+    run_pipeline,
+)
+from calendar_event_entity_extraction_spark.sources import manifest as mf
 from calendar_event_entity_extraction_spark.synth import keys_df, transcripts_from_keys
 
 N = 800
@@ -101,3 +109,126 @@ def test_edge_table_partition_pruning(spark, out_dir):
     assert n_partitions_on_disk >= 7
     assert metrics["numPartitions"] == 1
     assert metrics["numFiles"] == len(attendee_files) > 0
+
+
+STAGES = ("events", "triples", "entity_pools", "edges", "nodes")
+# Spark jobs of a fresh run_pipeline at this size. Recording a stage's
+# manifest and reading the stage back launch no job; when each of the five
+# stages ran two one-task footer-merge reads for that, the build ran 25.
+FRESH_BUILD_JOBS = 15
+
+
+def _count_jobs(spark, fn):
+    """(result of ``fn()``, number of Spark jobs it launched)."""
+    sc = spark.sparkContext
+    group = f"job-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    # the status store is fed by the listener bus, which may lag the action
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture(scope="module")
+def fresh_build(spark, tmp_path_factory):
+    """A fresh build into its own directory, with its Spark job count."""
+    out = str(tmp_path_factory.mktemp("kg_fresh"))
+    tr = transcripts_from_keys(keys_df(spark, N))
+    _, n_jobs = _count_jobs(
+        spark, lambda: run_pipeline(spark, tr, out, resume=False)
+    )
+    return out, n_jobs
+
+
+@pytest.fixture
+def fresh_copy(fresh_build, tmp_path):
+    """A private copy of ``fresh_build``'s output, for tests that change it."""
+    out = str(tmp_path / "kg")
+    shutil.copytree(fresh_build[0], out)
+    return out
+
+
+def test_fresh_build_job_budget(fresh_build):
+    _, n_jobs = fresh_build
+    assert n_jobs <= FRESH_BUILD_JOBS, n_jobs
+
+
+def test_full_resume_runs_only_fingerprint_jobs(spark, fresh_build):
+    out, _ = fresh_build
+    tr = transcripts_from_keys(keys_df(spark, N))
+    _, fp_jobs = _count_jobs(spark, lambda: input_fingerprint(tr))
+    m, resume_jobs = _count_jobs(spark, lambda: run_pipeline(spark, tr, out))
+    assert all(man.get("resumed") for man in m.values())
+    assert resume_jobs == fp_jobs, (resume_jobs, fp_jobs)
+
+
+def test_read_stage_schema_matches_inference(spark, fresh_build):
+    """The schema a manifest records is the one inference would find:
+    names, types, order and nullability, partitioned stages included."""
+    out, _ = fresh_build
+    for stage in STAGES:
+        assert mf.read_manifest(out, stage)["schema"]
+        pinned = mf.read_stage(spark, out, stage).schema
+        inferred = spark.read.parquet(os.path.join(out, stage)).schema
+        assert pinned == inferred, (stage, pinned, inferred)
+
+
+def test_stage_writes_skip_success_marker(fresh_build):
+    """The manifest marks a stage complete, so no stage writes the
+    committer's _SUCCESS file (each costs a forked chmod, plus one for its
+    .crc sidecar, on a local file system)."""
+    out, _ = fresh_build
+    for stage in STAGES:
+        names = os.listdir(os.path.join(out, stage))
+        assert mf.MANIFEST_NAME in names, stage
+        assert not [n for n in names if "_SUCCESS" in n], (stage, names)
+
+
+def test_manifest_without_schema_reads_and_resumes(spark, fresh_copy):
+    """Manifests written before the ``schema`` key was used by the reader
+    (or hand-edited ones without it) still read and resume."""
+    out = fresh_copy
+    before = {s: _digest(mf.read_stage(spark, out, s)) for s in STAGES}
+    for stage in ("events", "edges"):
+        m = mf.read_manifest(out, stage)
+        del m["schema"]
+        mf.write_manifest(out, stage, m)
+        assert _digest(mf.read_stage(spark, out, stage)) == before[stage]
+    tr = transcripts_from_keys(keys_df(spark, N))
+    m = run_pipeline(spark, tr, out)
+    assert all(man.get("resumed") for man in m.values())
+    assert {s: _digest(mf.read_stage(spark, out, s)) for s in STAGES} == before
+
+
+def test_resume_with_changed_top_k_rebuilds_pool_stages(spark, fresh_copy):
+    """top_k shapes entity_pools, edges and nodes but not events/triples:
+    a resume under another top_k must rebuild exactly those three."""
+    out = fresh_copy
+    tr = transcripts_from_keys(keys_df(spark, N))
+    m = run_pipeline(spark, tr, out, top_k=3)
+    resumed = {s: bool(man.get("resumed")) for s, man in m.items()}
+    assert resumed == {
+        "events": True,
+        "triples": True,
+        "entity_pools": False,
+        "edges": False,
+        "nodes": False,
+    }
+    assert m["entity_pools"]["rows"] <= 2 * 3
+    ranks = mf.read_stage(spark, out, "edges").filter(
+        F.col("entity_rank").isNotNull()
+    )
+    assert ranks.agg(F.max("entity_rank")).collect()[0][0] <= 2
+    again = run_pipeline(spark, tr, out, top_k=3)
+    assert all(man.get("resumed") for man in again.values())
+
+
+def _digest(df):
+    row = df.agg(
+        F.count("*").alias("n"),
+        F.sum(F.xxhash64(*df.columns).cast("decimal(38,0)")).alias("h"),
+    ).collect()[0]
+    return row["n"], row["h"]
