@@ -310,16 +310,7 @@ def section_materialize(spark):
             ),
         )
         triples = stage("triples", lambda: events_to_triples(events))
-        pools = stage(
-            "entity_pools",
-            lambda: build_entity_pools(triples, "attendee", 500)
-            .withColumn("pred", F.lit("attendee"))
-            .unionByName(
-                build_entity_pools(triples, "location", 500).withColumn(
-                    "pred", F.lit("location")
-                )
-            ),
-        )
+        pools = stage("entity_pools", lambda: build_entity_pools(triples, 500))
 
         def build_edges():
             att_pool = pools.filter(F.col("pred") == "attendee").select(
@@ -340,11 +331,11 @@ def section_materialize(spark):
                 .distinct()
                 .withColumn("node_id", F.xxhash64("kind", "name"))
             )
-            ev = edges.select(
+            ev = events.select(
                 F.col("event_id").alias("node_id"),
                 F.col("conv_id").alias("name"),
                 F.lit("event").alias("kind"),
-            ).distinct()
+            )
             return ent.select("node_id", "name", "kind").unionByName(
                 ev.select("node_id", "name", "kind")
             )
@@ -479,9 +470,8 @@ def section_curation(spark):
         _docs_chained_lang,
     )
     from calendar_event_entity_extraction_spark.functions.text import (
-        punct_count_col,
+        quality_ok_col,
         repetition_keep_udf,
-        token_count_col,
     )
     from calendar_event_entity_extraction_spark.operators.dedup import (
         capped_band_pairs,
@@ -497,15 +487,8 @@ def section_curation(spark):
         return _fresh(_docs_chained_lang(spark, SF_DIR), i)
 
     def gated(i):
-        d = docs(i)
-        n_tok = token_count_col(F.col("text"))
-        n_punct = punct_count_col(F.col("text"))
-        ok = (
-            (n_tok >= 10)
-            & (n_tok <= 100_000)
-            & (n_punct * 100 <= F.length("text") * 10)
-        )
-        return d.filter(ok & repetition_keep_udf()(F.col("text")))
+        text = F.col("text")
+        return docs(i).filter(quality_ok_col(text) & repetition_keep_udf()(text))
 
     def deduped(i):
         return dedup_first_wins(gated(i), ["text"], "doc_id")

@@ -27,7 +27,7 @@ from .operators.dedup import (
 )
 from .operators.similarity import brute_force_topk
 from .operators.splits import assign_split, drop_split_leakage
-from .sources.tables import spread_scan
+from .sources.tables import materialize, spread_scan
 
 PLANT_OFFSET = 1_000_000
 
@@ -46,18 +46,14 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # text_stats, pii_scrub, simhash) stay unspread — for them the extra
 # 0.6 MB exchange costs more than the single-core projection it would
 # parallelize.
-
-
-def _materialized(df: DataFrame) -> DataFrame:
-    """localCheckpoint a DERIVED corpus lineage that the downstream
-    operator consumes twice (round-6): ``minhash_near_duplicates`` reads
-    its input for the band/signature pass AND the shingle-verify semi-join,
-    so a computed input (the planted/chained unions + spread exchange here)
-    would be recomputed end to end per consumer — measured 2.2 → 1.7 s on
-    the near-dup row at sf0.1. For a plain parquet-backed corpus the second
-    read is a cheap re-scan and this is unnecessary; it pays exactly when
-    the input is a derived lineage, which is what these rows feed."""
-    return df.localCheckpoint()
+#
+# materialize policy (round-6): ``minhash_near_duplicates`` reads its input
+# for the band/signature pass AND the shingle-verify semi-join, so a
+# DERIVED corpus lineage (the planted/chained unions + spread exchange)
+# would be recomputed end to end per consumer; the near-dup rows
+# ``materialize`` it once (measured 2.2 → 1.7 s at sf0.1). A plain
+# parquet-backed corpus needs no materialize: its second read is a cheap
+# re-scan.
 
 
 def _emb_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -145,7 +141,6 @@ def q_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         "text",
         k=10,
         hash_grams=True,
-        materialize_grams=True,
     )
 
 
@@ -206,7 +201,7 @@ FROM t
 
 def q_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = minhash_near_duplicates(
-        _materialized(
+        materialize(
             spread_scan(
                 _docs_planted(spark, sf_dir), f"{sf_dir}/documents.parquet"
             )
@@ -249,7 +244,7 @@ def q_minhash_neardup_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     — this pins the capped window+join machinery, not just its recall
     trade-off (which `test_bucket_cap_bounds_hot_bucket` covers)."""
     pairs = minhash_near_duplicates(
-        _materialized(
+        materialize(
             spread_scan(
                 _docs_planted(spark, sf_dir), f"{sf_dir}/documents.parquet"
             )
@@ -416,7 +411,7 @@ def q_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.resolve import connected_components
 
     pairs = minhash_near_duplicates(
-        _materialized(
+        materialize(
             spread_scan(
                 _docs_chained(spark, sf_dir), f"{sf_dir}/documents.parquet"
             )
@@ -565,7 +560,7 @@ def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # derived union + split assignment consumed twice by the min-rank
     # aggregate and the join-back — materialize once (round-6: 0.77 →
     # 0.57 s at sf0.1)
-    planted = _materialized(assign_split(_docs_planted(spark, sf_dir), "doc_id"))
+    planted = materialize(assign_split(_docs_planted(spark, sf_dir), "doc_id"))
     return drop_split_leakage(planted).select("doc_id", "split")
 
 
@@ -939,7 +934,7 @@ def q_neardup_keep_longest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .functions.text import token_count_col
     from .operators.resolve import connected_components
 
-    docs = _materialized(
+    docs = materialize(
         spread_scan(_docs_chained(spark, sf_dir), f"{sf_dir}/documents.parquet")
     )
     pairs = minhash_near_duplicates(
@@ -1071,8 +1066,8 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # corpus is a derived union consumed twice by decontaminate (gram
     # explode + final anti-join) — materialize once (round-6, same
-    # rationale as _materialized: 1.43 → 1.17 s at sf0.1)
-    corpus = _materialized(_docs_planted(spark, sf_dir))
+    # rationale as the near-dup rows: 1.43 → 1.17 s at sf0.1)
+    corpus = materialize(_docs_planted(spark, sf_dir))
     benchmark = _docs(spark, sf_dir).filter(F.col("doc_id") % 20 == 3).select(
         "doc_id", "text"
     )

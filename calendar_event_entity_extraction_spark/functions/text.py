@@ -1,8 +1,9 @@
 """Text-analysis primitives for a large-scale training-data pipeline.
 
-All pure Column expressions (no UDFs): token counting, quality scoring,
-heuristic language ID, document fingerprinting. Each is portable to plain
-SQL so the driver's DuckDB oracle can mirror it exactly.
+Column expressions for token counting, the curation quality gate,
+stopword hits, repetition signals, PII scrubbing and document
+fingerprinting, each portable to plain SQL so a DuckDB oracle can mirror
+it exactly, plus Arrow kernels that compute the same values.
 """
 
 from __future__ import annotations
@@ -27,39 +28,31 @@ def token_count_col(text: Column) -> Column:
     )
 
 
-def bpe_ish_token_count_col(text: Column) -> Column:
-    """A BPE-ish token estimate: word pieces + digits + punctuation, via a
-    tokenizer-style regex (letters runs, digit runs, single non-space
-    symbols). Upper-bounds subword counts without a vocab."""
-    pieces = F.regexp_extract_all(text, F.lit(r"([A-Za-z]+|\d+|[^\sA-Za-z\d])"), 1)
-    return F.size(pieces)
-
-
 def punct_count_col(text: Column) -> Column:
     return F.length(text) - F.length(F.regexp_replace(text, PUNCT_RE, ""))
+
+
+MIN_TOKENS = 10
+MAX_TOKENS = 100_000
+MAX_PUNCT_PER_100_CHARS = 10
+
+
+def quality_ok_col(text: Column) -> Column:
+    """The curation quality gate: MIN_TOKENS ≤ tokens ≤ MAX_TOKENS and at
+    most MAX_PUNCT_PER_100_CHARS punctuation marks per 100 characters —
+    integer arithmetic only (no float ratio), so the gate is engine-exact."""
+    n_tok = token_count_col(text)
+    return (
+        (n_tok >= MIN_TOKENS)
+        & (n_tok <= MAX_TOKENS)
+        & (punct_count_col(text) * 100 <= F.length(text) * MAX_PUNCT_PER_100_CHARS)
+    )
 
 
 def stopword_hits_col(text: Column, stopwords: list[str] | None = None) -> Column:
     words = F.split(F.lower(F.trim(text)), r"\s+")
     sw = F.array(*[F.lit(w) for w in (stopwords or EN_STOPWORDS)])
     return F.size(F.filter(words, lambda w: F.array_contains(sw, w)))
-
-
-def quality_struct(text: Column) -> list[Column]:
-    """Length / punctuation / stopword quality signals (rounded so float
-    ratios hash-compare across engines)."""
-    n_tok = token_count_col(text)
-    return [
-        F.length(text).alias("n_chars_measured"),
-        n_tok.alias("n_tokens"),
-        punct_count_col(text).alias("n_punct"),
-        F.round(punct_count_col(text) / F.greatest(F.length(text), F.lit(1)), 6).alias(
-            "punct_ratio"
-        ),
-        F.round(
-            stopword_hits_col(text) / F.greatest(n_tok, F.lit(1)), 6
-        ).alias("stopword_ratio"),
-    ]
 
 
 def keep_repetition_col(text: Column) -> Column:
@@ -318,7 +311,7 @@ REPETITION_FULL_FIELDS = [
 
 
 def repetition_struct_full_udf():
-    """Arrow-batched :func:`repetition_struct_full` — the production path
+    r"""Arrow-batched :func:`repetition_struct_full` — the production path
     for the full Gopher §A1.1 signal family. The Column form plans NINE
     interpreted sorted-run folds (one :func:`run_stats_col` per gram order
     2..10) plus the token/bigram fold — CodegenFallback per element with
@@ -414,14 +407,6 @@ def repetition_struct_full_udf():
         )
 
     return rep
-
-
-def lang_id_col(text: Column, en_threshold: float = 0.1) -> Column:
-    """Heuristic language ID: English iff stopword token ratio clears the
-    threshold. (A real system uses char n-gram profiles; the Spark-side
-    plumbing — narrow, codegen'd, no shuffle — is identical.)"""
-    ratio = stopword_hits_col(text) / F.greatest(token_count_col(text), F.lit(1))
-    return F.when(ratio >= en_threshold, F.lit("en")).otherwise(F.lit("other"))
 
 
 # PII patterns: RE2-safe subset (no backrefs/lookarounds) so Java regex and

@@ -15,14 +15,14 @@ aggregate — but the partial aggregate still collapses echo duplicates
 BEFORE the exchange, and the sorts are per-partition over the slim event
 projection. Measured ~1.6× faster than the equivalent row_number window
 (one sort per side vs a global partition-ordered sort, and hot
-conversations pre-merge map-side). ``canonicalize_events_window`` is the
-window-function formulation kept for parity with the `north_rule` wording;
-both produce identical rows (see tests).
+conversations pre-merge map-side). The window-function formulation of the
+`north_rule` wording lives in ``tests/test_canonicalize.py`` as the
+equality pin: both produce identical rows.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 MERGE_KEY = ["conv_id", "action", "date", "time"]
@@ -39,15 +39,4 @@ def canonicalize_events(events: DataFrame) -> DataFrame:
             F.col(f"_first.{c}").alias(c) if c in rest else F.col(c)
             for c in events.columns
         ]
-    )
-
-
-def canonicalize_events_window(events: DataFrame) -> DataFrame:
-    """Window-function formulation (row_number over stable turn ordering);
-    same result, one sort-based shuffle."""
-    w = Window.partitionBy(*MERGE_KEY).orderBy("turn_idx")
-    return (
-        events.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
     )

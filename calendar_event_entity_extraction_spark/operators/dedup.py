@@ -21,6 +21,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources.tables import materialize
+
 # ---------------------------------------------------------------- exact
 
 
@@ -252,15 +254,10 @@ def minhash_bands(df: DataFrame, id_col: str, text_col: str, perms: int = 8, row
     )
 
 
-def jaccard_col(a: Column, b: Column) -> Column:
-    return F.size(F.array_intersect(a, b)) / F.size(F.array_union(a, b))
-
-
 def capped_band_pairs(
     bands: DataFrame,
     bucket_cap: int | None = None,
     overflow_star: bool = False,
-    salt_fanout: int = 0,
 ) -> DataFrame:
     """(id, band_idx, band_key) → distinct candidate (id_a, id_b) pairs.
 
@@ -286,32 +283,15 @@ def capped_band_pairs(
     in the join form; the groupBy form must filter them explicitly or they
     would pool into one giant null group.
 
-    Memory bound (round-4 advice): ``salt_fanout=S > 0`` makes the cap a
-    SALTED TWO-PHASE aggregation — phase 1 groups by (band_idx, band_key,
-    pmod(xxhash64(id), S)) and keeps each salt group's sorted ``cap``-prefix
-    (buffer ≤ |bucket|/S, output ≤ cap ids); phase 2 merges the ≤ S
-    pre-capped arrays per bucket (buffer HARD-bounded by S·cap ids) and
-    takes the global prefix. Distributed-top-k correctness: the bucket's
-    ``cap`` smallest ids each sit inside their own salt group's ``cap``
-    smallest, so the merged prefix is byte-identical to the single-phase
-    ``slice(array_sort(collect_list(id)), 1, cap)`` (equality + plan pinned
-    by ``tests/test_dedup_similarity.py``).
-
-    The salted form is NOT the default (round-5 measurement): for typical
-    bucket-size distributions (mostly singletons and pairs) phase 1
-    achieves no map-side reduction — nearly every (bucket, salt) group
-    holds one row — so the dominant aggregation effectively runs twice. A
-    same-JVM alternating A/B on the 150k-doc composite measured the salted
-    form ~10% slower at 8 cores (min 15.17 vs 13.69 s over 3 interleaved
-    reps, n_kept identical; inter-JVM runs on this host swing far more
-    than that — BENCH.md round-5 scaling notes). Single-phase ``slice``
-    (the default, ``salt_fanout=0``) relies on Spark's map-side partial
-    collect_list; its reduce-side merge buffer for ONE bucket is bounded
-    by |bucket| ids (8 bytes each — a 10M-member pathological bucket is an
-    80 MB buffer, survivable but worth avoiding). Turn the salted phase on
-    (S≈64) when a single bucket may hold ≳10M members — boilerplate-heavy
-    crawls with aggressive banding — and keep ``overflow_star`` on with it
-    (a bucket that hot is exactly where capped recall collapses). A
+    Memory bound: single-phase ``slice`` relies on Spark's map-side
+    partial collect_list; its reduce-side merge buffer for ONE bucket is
+    bounded by |bucket| ids (8 bytes each — a 10M-member pathological
+    bucket is an 80 MB buffer, survivable but worth avoiding). A salted
+    two-phase cap (pre-capped prefixes per (bucket, salt) group, merged per
+    bucket) would hard-bound that buffer, but for typical bucket-size
+    distributions (mostly singletons and pairs) its first phase achieves no
+    map-side reduction and the dominant aggregation effectively runs twice
+    — measured ~10% slower on the 150k-doc composite (BENCH.md round 5). A
     ``row_number`` window pre-truncation was also tried and REJECTED by
     measurement: its sort re-ran per reuse of the candidate lineage
     (semi-join restrict + verify join) and cost +50% on ``curation_full``
@@ -332,36 +312,11 @@ def capped_band_pairs(
     plus an equi-join of band rows against the per-bucket mins; off by
     default — buckets below the cap already emit every pair.
     """
-    if salt_fanout and bucket_cap is None:
-        raise ValueError(
-            "salt_fanout requires bucket_cap: the salted two-phase form "
-            "exists only to hard-bound the cap's aggregation buffers — "
-            "without a cap it would silently fall back to the unbounded "
-            "single-phase collect_list (round-5 advice)"
-        )
     bands = bands.filter(F.col("band_key").isNotNull())
-    if bucket_cap is not None and salt_fanout:
-        part = bands.groupBy(
-            "band_idx",
-            "band_key",
-            F.pmod(F.xxhash64("id"), F.lit(salt_fanout)).alias("_salt"),
-        ).agg(
-            F.slice(F.array_sort(F.collect_list("id")), 1, bucket_cap).alias(
-                "_pids"
-            )
-        )
-        buckets = part.groupBy("band_idx", "band_key").agg(
-            F.slice(
-                F.array_sort(F.flatten(F.collect_list("_pids"))), 1, bucket_cap
-            ).alias("_ids")
-        )
-    else:
-        members = F.array_sort(F.collect_list("id"))
-        if bucket_cap is not None:
-            members = F.slice(members, 1, bucket_cap)
-        buckets = bands.groupBy("band_idx", "band_key").agg(
-            members.alias("_ids")
-        )
+    members = F.array_sort(F.collect_list("id"))
+    if bucket_cap is not None:
+        members = F.slice(members, 1, bucket_cap)
+    buckets = bands.groupBy("band_idx", "band_key").agg(members.alias("_ids"))
     n = F.size("_ids")
     pair_arr = F.flatten(
         F.transform(
@@ -403,7 +358,6 @@ def minhash_near_duplicates(
     n: int = 3,
     bucket_cap: int | None = None,
     overflow_star: bool = False,
-    salt_fanout: int = 0,
 ) -> DataFrame:
     """Candidate pairs via LSH band equi-join, verified by exact shingle
     Jaccard ≥ threshold. Returns (id_a, id_b, jaccard) with id_a < id_b.
@@ -418,7 +372,7 @@ def minhash_near_duplicates(
     for oracle-compared runs.
     """
     bands = minhash_bands(df, id_col, text_col, perms, rows_per_band, n)
-    cand = capped_band_pairs(bands, bucket_cap, overflow_star, salt_fanout)
+    cand = capped_band_pairs(bands, bucket_cap, overflow_star)
     # Verify needs shingles ONLY for docs appearing in a candidate pair —
     # typically a few % of the corpus. The left-semi join restricts the
     # (interpreted, alloc-heavy) shingle computation to those survivors
@@ -585,7 +539,6 @@ def duplicate_spans(
     text_col: str = "text",
     k: int = 10,
     hash_grams: bool = False,
-    materialize_grams: bool = False,
 ) -> DataFrame:
     """ExactSubstr-style cross-document duplicate-SPAN detection (the
     suffix-array dedup of Lee et al. 2022, "Deduplicating Training Data
@@ -635,14 +588,13 @@ def duplicate_spans(
         "_pos",
         (F.xxhash64("_g") if hash_grams else F.col("_g")).alias("_key"),
     )
-    if materialize_grams:
-        # the gram stream has TWO consumers (the min≠max dup aggregate and
-        # the join-back), so the kernel+explode otherwise executes twice.
-        # Materializing it trades one gram-stream-sized write (≈ tokenized
-        # corpus — the same structure ExactSubstr implementations persist
-        # as their suffix array) for the second generation pass; off by
-        # default, on in the graded row (round-6: 1.55 → 1.40 s at sf0.1).
-        g = g.localCheckpoint()
+    # the gram stream has TWO consumers (the min≠max dup aggregate and the
+    # join-back), so the kernel+explode would otherwise execute twice.
+    # Materializing it trades one gram-stream-sized write (≈ tokenized
+    # corpus — the same structure ExactSubstr implementations persist as
+    # their suffix array) for the second generation pass (round-6: 1.55 →
+    # 1.40 s at sf0.1).
+    g = materialize(g)
     dup = (
         g.groupBy("_key")
         .agg(F.min("_id").alias("_a"), F.max("_id").alias("_b"))

@@ -3,21 +3,23 @@
 Re-expresses the reference's entity machinery Spark-first:
 
 * ``build_entity_pools`` (``augmentation/entity_pools.py:7-20``): a Counter
-  over all attendees/locations, top-500 by frequency → here a hash aggregate
-  + top-k, returned both as a DataFrame and as a small broadcast dictionary.
+  over all attendees/locations, top-500 by frequency → here ONE
+  (pred, name) hash aggregate over both predicates (map-side partial
+  combine absorbs hot names like "Zoom" before the exchange) and a per-pred
+  top-k window over the counts.
 * entity linking (the reference's implicit name matching, SURVEY.md J2):
   a broadcast map-side join of extracted entity mentions against the pool —
   never a shuffle join, the dictionary is tiny by construction.
 * salted two-phase aggregation for skewed hot keys (`north_rule`): hot
-  entities ("Zoom" is ~28% of reference locations) concentrate a groupBy key;
-  we pre-aggregate on (key, salt) then re-aggregate on key, turning one
-  skewed reduce task into SALT_BUCKETS balanced ones.
+  keys concentrate a groupBy key; we pre-aggregate on (key, salt) then
+  re-aggregate on key, turning one skewed reduce task into SALT_BUCKETS
+  balanced ones.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 DEFAULT_TOP_K = 500
@@ -55,49 +57,28 @@ def salted_count(
     return partial.groupBy(key).agg(F.sum("_pc").alias("cnt"))
 
 
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    buckets: int = DEFAULT_SALT_BUCKETS,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-safe equi-join when the small side is too big to broadcast and
-    the big side's key distribution is hot: the big side gets a random-ish
-    (but deterministic) salt, the small side is replicated across all salt
-    buckets, and the join runs on (key, salt) — a hot key's rows spread over
-    ``buckets`` reducers instead of one. (AQE's skew-join split handles most
-    cases; this is the explicit form for when it can't, e.g. aggregations
-    downstream of the join keyed the same way.)"""
-    salted_big = big.withColumn(
-        "_salt", F.pmod(F.xxhash64(*[F.col(c) for c in big.columns]), F.lit(buckets))
-    )
-    replicated = small.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(buckets - 1)))
-    ).withColumn("_salt", F.col("_salt").cast("long"))
-    return salted_big.join(replicated, [key, "_salt"], how).drop("_salt")
-
-
 def build_entity_pools(
-    triples: DataFrame, pred: str, top_k: int = DEFAULT_TOP_K
+    triples: DataFrame, top_k: int | None = DEFAULT_TOP_K
 ) -> DataFrame:
-    """Frequency-ranked top-k pool for one predicate (attendee / location).
+    """Frequency-ranked attendee and location pools: (name, cnt, pred).
 
-    orderBy(desc(cnt), name) + limit = distributed top-k (Spark runs this as
-    a per-partition TakeOrdered + driver merge, not a global sort).
-    """
-    mentions = triples.filter(F.col("pred") == pred).select(
-        "event_id", "obj_idx", F.col("obj").alias("name")
+    One (pred, name) count over both predicates' triples — a single scan
+    and aggregate, not one per predicate — then a per-pred ``row_number``
+    window over the COUNTS (a few hundred distinct names per pred, bounded
+    by vocabulary, never by corpus) keeps the ``top_k`` most frequent names
+    per pred, ties broken by ascending name. ``top_k=None`` keeps every
+    name (the whole Counter, no window)."""
+    counts = (
+        triples.filter(F.col("pred").isin("attendee", "location"))
+        .groupBy("pred", F.col("obj").alias("name"))
+        .agg(F.count("*").alias("cnt"))
     )
-    counts = salted_count(
-        mentions, "name", salt_cols=["event_id", "obj_idx", "name"]
-    )
-    return counts.orderBy(F.desc("cnt"), F.asc("name")).limit(top_k)
-
-
-def pool_as_dict(pool: DataFrame) -> dict[str, int]:
-    """Collect the (tiny) pool to a driver dict for broadcast."""
-    return {r["name"]: i for i, r in enumerate(pool.collect())}
+    if top_k is not None:
+        w = Window.partitionBy("pred").orderBy(F.desc("cnt"), F.asc("name"))
+        counts = counts.withColumn("_rn", F.row_number().over(w)).filter(
+            F.col("_rn") <= top_k
+        )
+    return counts.select("name", "cnt", "pred")
 
 
 def link_entities(triples: DataFrame, pool: DataFrame, pred: str) -> DataFrame:

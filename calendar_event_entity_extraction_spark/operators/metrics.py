@@ -97,11 +97,11 @@ def canonical_eq(field: str) -> F.Column:
     )
 
 
-def field_metrics_canonical_counts(pred: DataFrame, gold: DataFrame) -> DataFrame:
+def field_metrics_canonical_counts_paired(j: DataFrame) -> DataFrame:
     """The reference's ``src/metrics.py:9-40`` metric family (canonicalized
     micro-F1, ``json_valid``, ``exact_match``) as exact BIGINT counts —
     the SECOND metric semantics the reference ships, alongside the raw-``==``
-    ``compute_metrics`` of ``field_metrics_counts``:
+    ``compute_metrics`` of :func:`field_metrics_counts_paired`:
 
     * ``json_valid_num``: rows with all 8 keys present (``json_valid``,
       src/metrics.py:20-22) — structural under schema enforcement, counted
@@ -109,13 +109,9 @@ def field_metrics_canonical_counts(pred: DataFrame, gold: DataFrame) -> DataFram
     * ``field_match_canon_num / field_total``: the micro-F1 as an exact
       fraction (``per_field_f1`` sums per-field 0/1 scores over 8 fields);
     * ``exact_match_canon_num``: all-8-canonical-fields-equal rows.
-    """
-    return field_metrics_canonical_counts_paired(join_pred_gold(pred, gold))
 
-
-def field_metrics_canonical_counts_paired(j: DataFrame) -> DataFrame:
-    """Aggregation body of :func:`field_metrics_canonical_counts` over an
-    already-paired DataFrame carrying ``p_<field>`` / ``g_<field>`` columns.
+    Input is a paired DataFrame carrying ``p_<field>`` / ``g_<field>``
+    columns — :func:`join_pred_gold` of a prediction and a gold table.
     When pred is a deterministic perturbation of gold (same rows, unique
     ``(conv_id, turn_idx)`` key — one event per transcript turn by
     construction, ``extract.py:444``), the full-outer self-join is identity
@@ -142,19 +138,14 @@ def field_metrics_canonical_counts_paired(j: DataFrame) -> DataFrame:
     )
 
 
-def field_metrics_counts(pred: DataFrame, gold: DataFrame) -> DataFrame:
-    """Exact-integer variant for engine-comparable outputs: numerators and
-    denominators as BIGINT, never float ratios (a last-ulp divergence in a
-    rounded average would flip a cross-engine hash compare). Consumers derive
-    exact_match = exact_match_num / n_events etc. themselves."""
-    return field_metrics_counts_paired(join_pred_gold(pred, gold))
-
-
 def field_metrics_counts_paired(j: DataFrame) -> DataFrame:
-    """Aggregation body of :func:`field_metrics_counts` over an
-    already-paired ``p_<field>`` / ``g_<field>`` DataFrame (see
-    :func:`field_metrics_canonical_counts_paired` for when identity pairing
-    replaces the join)."""
+    """Exact-integer variant of :func:`field_metrics` for engine-comparable
+    outputs: numerators and denominators as BIGINT, never float ratios (a
+    last-ulp divergence in a rounded average would flip a cross-engine hash
+    compare). Consumers derive exact_match = exact_match_num / n_events
+    etc. themselves. Input is a paired ``p_<field>`` / ``g_<field>``
+    DataFrame (see :func:`field_metrics_canonical_counts_paired` for when
+    identity pairing replaces :func:`join_pred_gold`)."""
     eqs = {f: F.col(f"p_{f}").eqNullSafe(F.col(f"g_{f}")) for f in FIELDS}
     all_eq = None
     for eq in eqs.values():

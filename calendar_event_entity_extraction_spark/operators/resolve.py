@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.tables import materialize
+
 
 def _canonical(edges: DataFrame) -> DataFrame:
     """Undirected edge set as distinct (u=min, v=max), self-loops dropped."""
@@ -117,12 +119,11 @@ def connected_components(
       edge-list-only shuffles, no driver materialization). Set
       ``driver_threshold=0`` to force it (tests do).
 
-    ``checkpoint_dir``: when set, per-round lineage truncation uses DURABLE
-    ``checkpoint`` into that directory (registered via
-    ``setCheckpointDir``) instead of ``localCheckpoint`` — on a real
-    cluster localCheckpoint pins blocks to executors and dies with them;
-    durable checkpoints survive executor loss and task retries. Leave None
-    for single-JVM runs where localCheckpoint is cheaper.
+    ``checkpoint_dir``: when set, per-round lineage truncation is DURABLE
+    (``sources.tables.materialize``) — on a real cluster localCheckpoint
+    pins blocks to executors and dies with them; durable checkpoints
+    survive executor loss and task retries. Leave None for single-JVM runs
+    where localCheckpoint is cheaper.
 
     Raises if ``max_rounds`` exhausts before the star fixpoint — returning
     non-converged labels would be a SILENTLY wrong clustering. Unreachable
@@ -130,18 +131,13 @@ def connected_components(
     graph), but the failure must be loud. ``return_rounds`` additionally
     returns the number of star rounds executed (0 on the driver path).
     """
-    if checkpoint_dir is not None:
-        edges.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-
-    def _ckpt(df: DataFrame) -> DataFrame:
-        return df.checkpoint() if checkpoint_dir is not None else df.localCheckpoint()
-
     # materialize the canonical edge set ONCE up front: the count probe,
     # the driver collect, and round 1 of the star path all read the
     # checkpoint instead of re-executing the (possibly expensive — e.g. a
     # full MinHash near-dup join) upstream lineage
-    canon = _ckpt(
-        _canonical(edges.select(F.col(src).alias("u"), F.col(dst).alias("v")))
+    canon = materialize(
+        _canonical(edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))),
+        checkpoint_dir,
     )
     if driver_threshold and canon.count() <= driver_threshold:
         pdf = canon.toPandas()
@@ -158,7 +154,7 @@ def connected_components(
     converged = False
     rounds = 0
     for _ in range(max_rounds):
-        nxt = _ckpt(_small_star(_large_star(cur)))
+        nxt = materialize(_small_star(_large_star(cur)), checkpoint_dir)
         rounds += 1
         # both sides are distinct canonical sets, so set equality <=> empty
         # symmetric difference — ONE action per round, not count + except

@@ -71,10 +71,6 @@ def _hyperplane_sign(vec, plane_idx: int, dims: int):
     return F.when(dot >= 0, F.lit("1")).otherwise(F.lit("0"))
 
 
-def lsh_bucket_col(vec, planes: int, dims: int):
-    return F.concat(*[_hyperplane_sign(vec, p, dims) for p in range(planes)])
-
-
 def hyperplane_bucket_udf(planes: int, dims: int, base: int = 0):
     """Arrow-batched hyperplane bucketing — the production path for
     :func:`lsh_topk` / :func:`cosine_near_duplicates`. Same derivation as

@@ -75,9 +75,10 @@ def drop_split_leakage(
     ``min(rank) GROUP BY sig`` aggregate (skew-safe — a boilerplate
     signature pre-combines per map task) + one equi-join back, which AQE
     can skew-split because the build side is one row per signature. The
-    reference-shaped 3-anti-join form (:func:`drop_split_leakage_antijoin`,
-    ``augmentation/augmentors.py:64-78``) scans the corpus FIVE times and
-    recomputes the signature regex per branch; this one scans it twice.
+    reference-shaped 3-anti-join form (``augmentation/augmentors.py:64-78``,
+    kept as the equality pin in ``tests/test_splits_entity_link.py``)
+    scans the corpus FIVE times and recomputes the signature regex per
+    branch; this one scans it twice.
     Signatures whose group-min is ``test`` are dropped from the build side
     before the join (test rows with no train/eval dup are kept anyway, via
     the null-coalesce), shrinking it to train∪eval signatures.
@@ -94,28 +95,6 @@ def drop_split_leakage(
     joined = df.withColumn("_rk", rank).join(flags, "_sig", "left")
     keep = F.col("_rk") == F.coalesce(F.col("_min_rk"), F.lit(2))
     return joined.filter(keep).drop("_sig", "_rk", "_min_rk")
-
-
-def drop_split_leakage_antijoin(
-    splits: DataFrame, text_col: str = "text", split_col: str = "split"
-) -> DataFrame:
-    """Reference-shaped formulation (kept as the equality pin for
-    :func:`drop_split_leakage`): two distinct-signature sets + three left
-    anti-joins. Same rows, but five corpus scans — the single-aggregate
-    form above is the production path."""
-    sig = text_signature(F.col(text_col))
-    df = splits.withColumn("_sig", sig)
-    train_sigs = df.filter(F.col(split_col) == "train").select("_sig").distinct()
-    eval_sigs = df.filter(F.col(split_col) == "eval").select("_sig").distinct()
-
-    train = df.filter(F.col(split_col) == "train")
-    ev = df.filter(F.col(split_col) == "eval").join(train_sigs, "_sig", "left_anti")
-    te = (
-        df.filter(F.col(split_col) == "test")
-        .join(train_sigs, "_sig", "left_anti")
-        .join(eval_sigs, "_sig", "left_anti")
-    )
-    return train.unionByName(ev).unionByName(te).drop("_sig")
 
 
 def _bloom_build(hashes, m_bits: int, k: int):

@@ -23,13 +23,12 @@ from ..operators.augment import (
     swap_entities_with_pools,
 )
 from ..operators.dedup import canonical_json_signature, dedup_first_wins
+from ..operators.entity_link import build_entity_pools
 from ..operators.schema_enforce import enforce_event_schema, event_struct_col
 from ..operators.splits import assign_split, drop_split_leakage
 
 
-def augment_pipeline(
-    events: DataFrame, pool_top_k: int = 500, seed: int = 42
-) -> DataFrame:
+def augment_pipeline(events: DataFrame, seed: int = 42) -> DataFrame:
     """events (text + 8 gold fields + conv_id/turn_idx) → augmented rows
     with split labels. Returns the post-leakage-drop dataset."""
     ev = enforce_event_schema(events)
@@ -42,24 +41,16 @@ def augment_pipeline(
 
     # A1: entity pools (top-k by frequency), collected + broadcast — both
     # halves of the reference's swap_entities_with_pools (augmentors.py:16-39)
-    pool_rows = (
-        ev.filter(F.col("location").isNotNull())
-        .groupBy("location")
-        .count()
-        .orderBy(F.desc("count"), F.asc("location"))
-        .limit(pool_top_k)
-        .collect()
+    mentions = ev.filter(F.col("location").isNotNull()).select(
+        F.lit("location").alias("pred"), F.col("location").alias("obj")
+    ).unionByName(
+        ev.select(F.lit("attendee").alias("pred"), F.explode("attendees").alias("obj"))
     )
-    loc_pool = [r["location"] for r in pool_rows] or ["Zoom"]
-    att_rows = (
-        ev.select(F.explode("attendees").alias("name"))
-        .groupBy("name")
-        .count()
-        .orderBy(F.desc("count"), F.asc("name"))
-        .limit(pool_top_k)
-        .collect()
+    ranked = sorted(
+        build_entity_pools(mentions).collect(), key=lambda r: (-r["cnt"], r["name"])
     )
-    att_pool = [r["name"] for r in att_rows] or ["Alex"]
+    loc_pool = [r["name"] for r in ranked if r["pred"] == "location"] or ["Zoom"]
+    att_pool = [r["name"] for r in ranked if r["pred"] == "attendee"] or ["Alex"]
 
     # per-row augment: candidate A (entity swap) vs B (template re-render),
     # chosen by seeded hash of the row key (reference: random.choice)

@@ -26,37 +26,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import (
-    punct_count_col,
-    repetition_keep_udf,
-    token_count_col,
-)
+from ..functions.text import quality_ok_col, repetition_keep_udf
 from ..operators.dedup import dedup_first_wins, minhash_near_duplicates
 from ..operators.packing import pack_sequences
 from ..operators.resolve import connected_components
 from ..operators.sampling import mixture_sample
 from ..operators.splits import assign_split
+from ..sources.tables import materialize
 
 
-def curate_documents(
-    docs: DataFrame,
-    min_tokens: int = 10,
-    max_tokens: int = 100_000,
-    max_punct_per_100_chars: int = 10,
-) -> DataFrame:
-    """documents(doc_id, text) → curated rows + split label.
-
-    Quality thresholds use integer arithmetic only (punct per 100 chars
-    instead of a float ratio) so the result is engine-exact.
-    """
-    n_tok = token_count_col(F.col("text"))
-    n_punct = punct_count_col(F.col("text"))
-    ok = (
-        (n_tok >= min_tokens)
-        & (n_tok <= max_tokens)
-        & (n_punct * 100 <= F.length("text") * max_punct_per_100_chars)
-    )
-    kept = docs.filter(ok)
+def curate_documents(docs: DataFrame) -> DataFrame:
+    """documents(doc_id, text) → curated rows + split label: the quality
+    gate (``quality_ok_col``), first-wins exact dedup, hash split."""
+    kept = docs.filter(quality_ok_col(F.col("text")))
     deduped = dedup_first_wins(kept, ["text"], "doc_id")
     return assign_split(deduped, "doc_id").select("doc_id", "split")
 
@@ -65,17 +47,8 @@ def curate_full(
     docs: DataFrame,
     weights: dict[str, float],
     seed: int = 11,
-    min_tokens: int = 10,
-    max_tokens: int = 100_000,
-    max_punct_per_100_chars: int = 10,
-    neardup_threshold: float = 0.6,
-    perms: int = 8,
-    rows_per_band: int = 2,
-    budget: int = 256,
-    shards: int = 8,
     bucket_cap: int | None = None,
     overflow_star: bool = False,
-    salt_fanout: int = 0,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """documents(doc_id, text, lang) → (doc_id, lang, split, shard,
@@ -83,56 +56,44 @@ def curate_full(
     docstring. Deterministic end to end (no RNG anywhere), every stage
     integer-exact or hash-derived, so the whole composite is replicable in
     plain SQL (the ``curation_full`` oracle chains the per-stage oracles).
+    Near-dup pairs need exact shingle Jaccard ≥ 0.6 over 8 MinHash
+    permutations in bands of 2; packing fills 256-token sequences over 8
+    shards.
 
     At 100 TB pass a ``bucket_cap`` so a hot LSH bucket can't go quadratic
     (recall trade-off documented at ``dedup.capped_band_pairs``), and add
     ``overflow_star=True`` when boilerplate masses must still dedup fully
     (linear hub pairs restore CC connectivity for members past the cap —
-    measured in ``scripts/bench_skew.py``); ``salt_fanout=64`` additionally
-    hard-bounds the cap's aggregation buffers when a single bucket may
-    hold ≳10M members (opt-in — costs one extra aggregation pass, trade
-    measured in BENCH.md round 5). The default None keeps exact all-pairs
-    semantics for oracle-compared runs.
-    On a real cluster also pass ``checkpoint_dir`` so the connected-
-    components rounds truncate lineage into durable storage instead of
-    executor-pinned localCheckpoint blocks.
+    measured in ``scripts/bench_skew.py``). The default None keeps exact
+    all-pairs semantics for oracle-compared runs.
+    On a real cluster also pass ``checkpoint_dir`` so the deduped corpus
+    and the connected-components rounds truncate lineage into durable
+    storage instead of executor-pinned localCheckpoint blocks.
     """
-    n_tok = token_count_col(F.col("text"))
-    n_punct = punct_count_col(F.col("text"))
-    quality_ok = (
-        (n_tok >= min_tokens)
-        & (n_tok <= max_tokens)
-        & (n_punct * 100 <= F.length("text") * max_punct_per_100_chars)
-    )
     # repetition gate via the Arrow kernel (repetition_keep_udf docstring:
     # the Column form's interpreted fold caps the whole stage at ~0.44
     # core-scaling); Catalyst splits the conjunction so the cheap codegen
     # gates run BELOW the Python eval and cut its input first
-    gated = docs.filter(quality_ok & repetition_keep_udf()(F.col("text")))
-    deduped = dedup_first_wins(gated, ["text"], "doc_id")
+    text = F.col("text")
+    gated = docs.filter(quality_ok_col(text) & repetition_keep_udf()(text))
     # materialize the deduped corpus ONCE (round-6): it has TWO consumers —
     # the near-dup pair lineage and the final kept anti-join — so without a
     # checkpoint the quality gates + dedup window execute twice end to end
     # (measured 5.0 -> 3.7 s at sf0.1, n_kept identical). Real curation
     # pipelines materialize the post-dedup corpus for exactly this reason;
-    # the trade is one corpus-sized write. Durable when ``checkpoint_dir``
-    # is given (cluster mode — survives executor loss, same policy as the
-    # CC rounds), executor-local otherwise.
-    if checkpoint_dir is not None:
-        docs.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-        deduped = deduped.checkpoint()
-    else:
-        deduped = deduped.localCheckpoint()
+    # the trade is one corpus-sized write.
+    deduped = materialize(
+        dedup_first_wins(gated, ["text"], "doc_id"), checkpoint_dir
+    )
     pairs = minhash_near_duplicates(
         deduped,
         "doc_id",
         "text",
-        threshold=neardup_threshold,
-        perms=perms,
-        rows_per_band=rows_per_band,
+        threshold=0.6,
+        perms=8,
+        rows_per_band=2,
         bucket_cap=bucket_cap,
         overflow_star=overflow_star,
-        salt_fanout=salt_fanout,
     )
     labels = connected_components(
         pairs, "id_a", "id_b", checkpoint_dir=checkpoint_dir
@@ -146,7 +107,7 @@ def curate_full(
         assign_split(mixed, "doc_id"),
         "doc_id",
         "text",
-        budget=budget,
-        shards=shards,
+        budget=256,
+        shards=8,
         carry_cols=("lang", "split"),
     ).select("doc_id", "lang", "split", "shard", "n_tokens", "pack_id")

@@ -11,7 +11,8 @@ event_ids and overwrite-by-stage semantics.
 Physical design for 10^12 turns (SURVEY.md §4):
 * extract is narrow (map-only) — scales linearly, no shuffle;
 * canonicalize shuffles once on (conv_id, action, date, time);
-* entity pools are two-phase salted aggregates → tiny top-k → broadcast;
+* entity pools are one (pred, name) aggregate → tiny per-pred top-k →
+  broadcast;
 * the edge table is written partitioned by ``pred`` (8 partitions, each
   internally bucketed by event_id hash via repartition) so per-predicate
   scans prune; the node table is the distinct entity set.
@@ -23,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.canonicalize import canonicalize_events
-from ..operators.entity_link import link_entities
+from ..operators.entity_link import build_entity_pools, link_entities
 from ..operators.extract import extract_events
 from ..operators.triples import SLIM_EVENT_COLS, events_to_triples
 from ..sources import manifest as mf
@@ -80,30 +81,7 @@ def run_pipeline(
     )
     triples = stage("triples", fp, lambda: events_to_triples(events))
 
-    def build_pools():
-        # ONE scan for both pools (round-6): the former per-pred
-        # build_entity_pools union ran two full aggregate jobs over the
-        # triples stage. One (pred, name) count aggregate (map-side partial
-        # combine absorbs hot names like "Zoom" before the exchange) + a
-        # per-pred top-k window over the COUNTS (two partitions of a few
-        # hundred distinct names each — bounded by vocabulary, never by
-        # corpus) yields the identical rows: same counts, same
-        # (desc cnt, asc name) tie-break, same top_k cut.
-        from pyspark.sql import Window
-
-        counts = (
-            triples.filter(F.col("pred").isin("attendee", "location"))
-            .groupBy("pred", F.col("obj").alias("name"))
-            .agg(F.count("*").alias("cnt"))
-        )
-        w = Window.partitionBy("pred").orderBy(F.desc("cnt"), F.asc("name"))
-        return (
-            counts.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= top_k)
-            .select("name", "cnt", "pred")
-        )
-
-    pools = stage("entity_pools", fp_k, build_pools)
+    pools = stage("entity_pools", fp_k, lambda: build_entity_pools(triples, top_k))
 
     def build_edges():
         att_pool = pools.filter(F.col("pred") == "attendee").select("name", "cnt")

@@ -66,38 +66,26 @@ def q_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tr.select("conv_id", "turn_idx", "pred", "obj", "obj_idx")
 
 
-def q_entity_pool_attendees(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Attendee pool count over pred-pruned triples: ``preds=["attendee"]``
-    drops the location/duration/recurrence/notes extractors from the plan
-    entirely (only the canonicalize merge key action/date/time is still
-    normalized) — the pool never pays for fields it doesn't count."""
+def _entity_pool(spark: SparkSession, sf_dir: str, pred: str) -> DataFrame:
+    """The full (uncut) pool of one predicate from ``build_entity_pools``,
+    over pred-pruned triples: ``preds=[pred]`` drops the other field
+    extractors from the plan entirely (only the canonicalize merge key
+    action/date/time is still normalized) — the pool never pays for fields
+    it doesn't count."""
+    from .operators.entity_link import build_entity_pools
     from .operators.triples import extract_triples
 
-    tr = extract_triples(
-        materialized_transcripts(spark, sf_dir), preds=["attendee"]
-    )
-    return (
-        tr.filter(F.col("pred") == "attendee")
-        .groupBy(F.col("obj").alias("name"))
-        .agg(F.count("*").alias("cnt"))
-    )
+    tr = extract_triples(materialized_transcripts(spark, sf_dir), preds=[pred])
+    pools = build_entity_pools(tr, top_k=None)
+    return pools.filter(F.col("pred") == pred).select("name", "cnt")
+
+
+def q_entity_pool_attendees(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _entity_pool(spark, sf_dir, "attendee")
 
 
 def q_entity_pool_locations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Location entity pool via the skew-safe salted two-phase aggregate
-    (hot mediums like "Zoom" are ~28% of reference locations)."""
-    from .operators.entity_link import salted_count
-    from .operators.triples import extract_triples
-
-    tr = extract_triples(
-        materialized_transcripts(spark, sf_dir), preds=["location"]
-    )
-    loc = tr.filter(F.col("pred") == "location").select(
-        "conv_id", "turn_idx", F.col("obj").alias("name")
-    )
-    return salted_count(
-        loc, "name", salt_cols=["conv_id", "turn_idx", "name"]
-    ).select("name", "cnt")
+    return _entity_pool(spark, sf_dir, "location")
 
 
 def q_eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -2,9 +2,9 @@
 
 The `north_rule` requires batch-with-resume: each pipeline stage writes its
 output table plus a ``_lineage.json`` manifest recording the input
-fingerprint, row count, per-partition row counts, and config. On restart a
-stage whose manifest exists and whose input fingerprint still matches is
-skipped and its output re-read — the analog of the reference's HF
+fingerprint, row count, per-partition row counts, and read schema. On
+restart a stage whose manifest exists and whose input fingerprint still
+matches is skipped and its output re-read — the analog of the reference's HF
 ``checkpoint-*`` dirs (``simple_output/checkpoint-277``), but content-
 addressed instead of step-numbered.
 
@@ -91,7 +91,6 @@ def write_stage(
     stage: str,
     input_fingerprint: str,
     partition_by: list[str] | None = None,
-    config: dict | None = None,
 ) -> dict:
     """Write a stage output (Parquet, optionally partitioned) + manifest.
 
@@ -123,12 +122,10 @@ def write_stage(
         "rows": sum(p["rows"] for p in parts),
         "partitions": parts,
         "partition_by": partition_by or [],
-        "config": config or {},
         "written_at": datetime.now(timezone.utc).isoformat(),
         "schema": _written_schema(df, partition_by or []),
     }
-    with open(os.path.join(path, MANIFEST_NAME), "w") as f:
-        json.dump(manifest, f, indent=2)
+    write_manifest(out_dir, stage, manifest)
     return manifest
 
 
@@ -237,6 +234,14 @@ def write_stage_partitioned_resumable(
 
 
 def write_manifest(out_dir: str, stage: str, manifest: dict) -> None:
-    os.makedirs(os.path.join(out_dir, stage), exist_ok=True)
-    with open(os.path.join(out_dir, stage, MANIFEST_NAME), "w") as f:
+    """Write the manifest atomically: dump to a temporary sibling, then
+    ``os.replace`` it into place. A kill mid-dump leaves only the
+    temporary file (its ``_`` prefix keeps Spark from reading it), so a
+    stage never carries a truncated manifest that a resume cannot parse;
+    with no manifest the stage is rebuilt."""
+    path = os.path.join(out_dir, stage, MANIFEST_NAME)
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
         json.dump(manifest, f, indent=2)
+    os.replace(tmp, path)

@@ -42,9 +42,12 @@ def read_transcripts(spark: SparkSession, path: str) -> DataFrame:
     return read_table(spark, path, TRANSCRIPT_SCHEMA)
 
 
-def spread_scan(
-    df: DataFrame, source_path: str | None = None, max_bytes: int = 64 << 20
-) -> DataFrame:
+# a source above this size is either multi-row-group (splits fine on its
+# own) or too big for a casual extra exchange
+SPREAD_MAX_BYTES = 64 << 20
+
+
+def spread_scan(df: DataFrame, source_path: str) -> DataFrame:
     """Input-skew fix (spark_optimization_guide §2.5 "one huge unsplittable
     file"): a single-row-group parquet file is unsplittable no matter what
     ``maxPartitionBytes`` says, so a scan of it yields ONE task and every
@@ -60,65 +63,48 @@ def spread_scan(
     pay a full physical-planning pass inside the timed query build. Spread
     only when BOTH (a) the source has fewer files than cores (fewer files
     than cores can still split byte-wise, but a small single file is the
-    single-row-group case) and (b) total bytes ≤ ``max_bytes`` — a bigger
-    source is either multi-row-group (splits fine on its own) or too big
-    for a casual extra exchange. Production-sized multi-file tables are
-    therefore always a no-op. Round-robin keeps retry-determinism via
-    Spark's sort-before-repartition (SPARK-23207, on by default); row set
-    and values are unchanged, so every oracle comparison is unaffected.
-    Without ``source_path`` the planned partition count decides (pays one
-    planning pass — fine outside hot query builds)."""
+    single-row-group case) and (b) total bytes ≤ ``SPREAD_MAX_BYTES``.
+    Production-sized multi-file tables are therefore always a no-op.
+    Round-robin keeps retry-determinism via Spark's sort-before-repartition
+    (SPARK-23207, on by default); row set and values are unchanged, so
+    every oracle comparison is unaffected."""
     import glob
     import os
 
-    if os.environ.get("CEES_SPREAD_DISABLE"):
+    dp = df.sparkSession.sparkContext.defaultParallelism
+    if os.path.isdir(source_path):
+        files = glob.glob(os.path.join(source_path, "*.parquet"))
+    else:
+        files = [source_path]
+    try:
+        total = sum(os.path.getsize(f) for f in files)
+    except OSError:
         return df
-    sc = df.sparkSession.sparkContext
-    dp = sc.defaultParallelism
-    if source_path is not None:
-        if os.path.isdir(source_path):
-            files = glob.glob(os.path.join(source_path, "*.parquet"))
-        else:
-            files = [source_path]
-        try:
-            total = sum(os.path.getsize(f) for f in files)
-        except OSError:
-            return df
-        # spread only SEVERELY under-parallel sources: at least 4 cores
-        # per existing scan split. An sf1-shaped 16-file/32-core docs scan
-        # measured WORSE with the extra exchange (dup_spans 8.1 -> 17.5 s,
-        # minhash 4.5 -> 7.0 s), while the 4-file embeddings scan kept its
-        # order-of-magnitude win (brute ANN 83.7 -> 12.0 s at sf1) — the
-        # crossover is parallelism deficit, not bytes alone.
-        if len(files) * 4 > dp or total > max_bytes:
-            return df
-        return df.repartition(dp)
-    if df.rdd.getNumPartitions() < dp:
-        return df.repartition(dp)
-    return df
+    # spread only SEVERELY under-parallel sources: at least 4 cores
+    # per existing scan split. An sf1-shaped 16-file/32-core docs scan
+    # measured WORSE with the extra exchange (dup_spans 8.1 -> 17.5 s,
+    # minhash 4.5 -> 7.0 s), while the 4-file embeddings scan kept its
+    # order-of-magnitude win (brute ANN 83.7 -> 12.0 s at sf1) — the
+    # crossover is parallelism deficit, not bytes alone.
+    if len(files) * 4 > dp or total > SPREAD_MAX_BYTES:
+        return df
+    return df.repartition(dp)
 
 
-def read_csv(
-    spark: SparkSession, path: str, schema: T.StructType, header: bool = True
-) -> DataFrame:
-    """Schema-pinned CSV scan (never inferSchema in a pipeline — one extra
-    full pass and non-deterministic typing)."""
-    return spark.read.schema(schema).option("header", header).csv(path)
+def materialize(df: DataFrame, checkpoint_dir: str | None = None) -> DataFrame:
+    """Compute ``df`` once and truncate its lineage — the one policy for a
+    lineage that is read more than once downstream, so its upstream work
+    does not re-execute per consumer.
 
-
-def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).option("header", True).csv(path)
-
-
-def read_orc(spark: SparkSession, path: str, schema: T.StructType | None = None) -> DataFrame:
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.orc(path)
-
-
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).orc(path)
+    With ``checkpoint_dir`` the checkpoint is DURABLE (written under that
+    directory via ``setCheckpointDir``): it survives executor loss and task
+    retries on a real cluster. Without it, ``localCheckpoint`` keeps the
+    blocks on the executors — cheaper in a single JVM, but lost with the
+    executor that holds them."""
+    if checkpoint_dir is None:
+        return df.localCheckpoint()
+    df.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
+    return df.checkpoint()
 
 
 def read_jsonl(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
@@ -131,23 +117,3 @@ def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """Reference S2 (write_jsonl) — for edge-compatibility only; internal
     tables are always columnar."""
     df.write.mode(mode).json(path)
-
-
-def write_bucketed_table(
-    df: DataFrame,
-    name: str,
-    bucket_col: str,
-    n_buckets: int = 16,
-    sort_col: str | None = None,
-) -> None:
-    """Bucketed managed table — the Parquet analog of Iceberg's
-    ``bucket(N, col)`` partition transform (SCALE.md input layout): rows are
-    hash-co-located by ``bucket_col`` at WRITE time, so an equi-join (or
-    aggregation) of two tables bucketed the same way plans with NO Exchange
-    on either side — the shuffle is paid once at ingest instead of per
-    query. At 100 TB this is the difference between re-shuffling the fact
-    table for every keyed join and never shuffling it at all."""
-    w = df.write.mode("overwrite").bucketBy(n_buckets, bucket_col)
-    if sort_col:
-        w = w.sortBy(sort_col)
-    w.format("parquet").saveAsTable(name)

@@ -77,13 +77,10 @@ def run_stream_to_memory(
 def streaming_curate(
     docs: DataFrame,
     ts_col: str = "ts",
-    min_tokens: int = 10,
-    max_tokens: int = 100_000,
-    max_punct_per_100_chars: int = 10,
     watermark: str = "2 hours",
 ) -> DataFrame:
     """Continuous-ingest curation: the SAME narrow gates as
-    ``plans/curate.curate_documents`` (quality + Gopher repetition — pure
+    ``plans/curate.curate_full`` (``quality_ok_col`` + Gopher repetition — pure
     stateless streaming maps, one definition for both modes), then
     bounded-state exact dedup on the normalized text fingerprint via
     ``dropDuplicatesWithinWatermark`` — state for a fingerprint is dropped
@@ -96,23 +93,16 @@ def streaming_curate(
     execution mode."""
     from ..functions.text import (
         fingerprint_col,
-        punct_count_col,
+        quality_ok_col,
         repetition_keep_udf,
-        token_count_col,
     )
 
-    n_tok = token_count_col(F.col("text"))
-    n_punct = punct_count_col(F.col("text"))
-    ok = (
-        (n_tok >= min_tokens)
-        & (n_tok <= max_tokens)
-        & (n_punct * 100 <= F.length("text") * max_punct_per_100_chars)
-    )
+    text = F.col("text")
     return (
         # same Arrow-kernel gate as the batch composite (repetition_keep_udf
         # docstring) — pandas UDFs run unchanged under readStream
-        docs.filter(ok & repetition_keep_udf()(F.col("text")))
-        .withColumn("_fp", fingerprint_col(F.col("text")))
+        docs.filter(quality_ok_col(text) & repetition_keep_udf()(text))
+        .withColumn("_fp", fingerprint_col(text))
         .withWatermark(ts_col, watermark)
         .dropDuplicatesWithinWatermark(["_fp"])
         .drop("_fp")

@@ -1,12 +1,13 @@
 """The two canonicalization formulations (hash-agg min_by vs window
 row_number) must be row-identical; echo events must merge."""
 
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from calendar_event_entity_extraction_spark.operators import extract_events
 from calendar_event_entity_extraction_spark.operators.canonicalize import (
+    MERGE_KEY,
     canonicalize_events,
-    canonicalize_events_window,
 )
 from calendar_event_entity_extraction_spark.synth import (
     event_spec,
@@ -15,6 +16,17 @@ from calendar_event_entity_extraction_spark.synth import (
 )
 
 N = 2500
+
+
+def canonicalize_events_window(events):
+    """Window-function formulation (row_number over stable turn ordering)
+    of ``canonicalize_events``; same result, one sort-based shuffle."""
+    w = Window.partitionBy(*MERGE_KEY).orderBy("turn_idx")
+    return (
+        events.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
 
 
 def test_agg_and_window_formulations_identical(spark):

@@ -356,17 +356,11 @@ def test_shingles_kernel_matches_spec(spark):
 
 
 def test_capped_band_pairs_one_exchange_and_prefix_equivalence(spark):
-    """The default capped path is the single-phase post-agg slice (ONE agg
-    exchange + trailing distinct, no window); ``salt_fanout`` opts into the
-    salted two-phase form whose aggregation buffers are HARD-bounded
-    (phase 1 ≤ |bucket|/S per group, phase 2 ≤ S·cap — round-4 advice) for
-    corpora where one bucket may hold ≳10M members. Salted stays opt-in
-    because for typical bucket-size distributions phase 1 achieves no
-    map-side reduction — a same-JVM A/B measured it ~10% slower on the
-    150k-doc composite (round-5, BENCH.md) for a bound rarely needed. Both
-    forms must emit exactly the pairs of the sorted-prefix semantics, and
-    neither may plan a WindowExec (a row_number pre-truncation measured
-    +50% on curation_full — sort re-ran per candidate-lineage reuse)."""
+    """The capped path is the single-phase post-agg slice (ONE agg
+    exchange + trailing distinct, no window) and must emit exactly the
+    pairs of the sorted-prefix semantics. No WindowExec: a row_number
+    pre-truncation measured +50% on curation_full (sort re-ran per
+    candidate-lineage reuse)."""
     from calendar_event_entity_extraction_spark.operators.dedup import (
         capped_band_pairs,
         minhash_bands,
@@ -383,15 +377,6 @@ def test_capped_band_pairs_one_exchange_and_prefix_equivalence(spark):
     # Exchanges: ONE capped agg + trailing distinct — no WindowExec
     assert plan.count("Exchange") == 2, plan
     assert "Window" not in plan, plan
-
-    capped = capped_band_pairs(bands, bucket_cap=6, salt_fanout=64)
-    plan = capped._jdf.queryExecution().executedPlan().toString()
-    # Exchanges: phase-1 salted agg, phase-2 pre-capped merge, trailing
-    # distinct — and no WindowExec anywhere
-    assert plan.count("Exchange") == 3, plan
-    assert "Window" not in plan, plan
-    got_default = sorted(map(tuple, default.collect()))
-    assert got_default == sorted(map(tuple, capped.collect()))
 
     # prefix equivalence vs the post-agg slice formulation
     buckets = (
@@ -421,7 +406,7 @@ def test_capped_band_pairs_one_exchange_and_prefix_equivalence(spark):
         .select("p.id_a", "p.id_b")
         .distinct()
     )
-    got = sorted(map(tuple, capped.collect()))
+    got = sorted(map(tuple, default.collect()))
     want = sorted(map(tuple, old.collect()))
     assert got == want and len(got) > 0
 

@@ -226,6 +226,35 @@ def test_resume_with_changed_top_k_rebuilds_pool_stages(spark, fresh_copy):
     assert all(man.get("resumed") for man in again.values())
 
 
+def test_interrupted_manifest_write_rebuilds_on_resume(
+    spark, fresh_build, tmp_path, monkeypatch
+):
+    """A kill while a stage's manifest is being written must not leave a
+    truncated manifest behind: the resume rebuilds that stage (instead of
+    failing to parse it) and the output matches a clean build."""
+    out = str(tmp_path / "kg")
+    tr = transcripts_from_keys(keys_df(spark, N))
+    real_dump = mf.json.dump
+
+    def dump_killed_mid_triples(obj, f, **kw):
+        if obj.get("stage") == "triples":
+            f.write('{"stage": "tri')
+            raise RuntimeError("killed mid-dump")
+        return real_dump(obj, f, **kw)
+
+    monkeypatch.setattr(mf.json, "dump", dump_killed_mid_triples)
+    with pytest.raises(RuntimeError, match="killed mid-dump"):
+        run_pipeline(spark, tr, out, resume=False)
+    monkeypatch.undo()
+
+    m = run_pipeline(spark, tr, out)
+    assert m["events"].get("resumed") and not m["triples"].get("resumed")
+    clean = fresh_build[0]
+    assert {s: _digest(mf.read_stage(spark, out, s)) for s in STAGES} == {
+        s: _digest(mf.read_stage(spark, clean, s)) for s in STAGES
+    }
+
+
 def _digest(df):
     row = df.agg(
         F.count("*").alias("n"),

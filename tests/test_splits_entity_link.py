@@ -10,13 +10,13 @@ from calendar_event_entity_extraction_spark.operators import (
 from calendar_event_entity_extraction_spark.operators.entity_link import (
     build_entity_pools,
     link_entities,
-    pool_as_dict,
     salted_count,
 )
 from calendar_event_entity_extraction_spark.operators.splits import (
     assign_split,
     deterministic_sample,
     drop_split_leakage,
+    text_signature,
 )
 from calendar_event_entity_extraction_spark.synth import keys_df, transcripts_from_keys
 
@@ -37,20 +37,56 @@ def test_salted_count_equals_plain_count(spark):
 
 def test_entity_pool_topk_and_linking(spark):
     tr = _triples(spark).cache()
-    pool = build_entity_pools(tr, "attendee", top_k=10).cache()
-    assert pool.count() == 10
-    cnts = [r["cnt"] for r in pool.collect()]
-    assert cnts == sorted(cnts, reverse=True)
-    d = pool_as_dict(pool)
-    assert len(d) == 10
+    full = build_entity_pools(tr, top_k=None).cache()
+    # top_k=None is the plain Counter: every (pred, name) count, uncut
+    plain = (
+        tr.filter(F.col("pred").isin("attendee", "location"))
+        .groupBy("pred", "obj")
+        .count()
+    )
+    assert sorted(map(tuple, full.select("pred", "name", "cnt").collect())) == sorted(
+        map(tuple, plain.collect())
+    )
 
-    linked = link_entities(tr, pool, "attendee")
+    pool = build_entity_pools(tr, top_k=10).cache()
+    assert pool.columns == ["name", "cnt", "pred"]
+    for pred in ("attendee", "location"):
+        everything = [
+            (r["cnt"], r["name"]) for r in full.filter(F.col("pred") == pred).collect()
+        ]
+        assert len(everything) > 10, pred
+        # both preds cut at top_k; ties break by (desc cnt, asc name)
+        want = sorted(everything, key=lambda t: (-t[0], t[1]))[:10]
+        got = sorted(
+            ((r["cnt"], r["name"]) for r in pool.filter(F.col("pred") == pred).collect()),
+            key=lambda t: (-t[0], t[1]),
+        )
+        assert got == want, pred
+
+    # a tie straddling the cut keeps the lexicographically smaller names
+    tied = spark.createDataFrame(
+        [("attendee", n) for n in "bbaaccd"] + [("location", n) for n in "zzzyx"]
+        + [("action", "a")],
+        "pred string, obj string",
+    )
+    got = {
+        (r["pred"], r["name"], r["cnt"])
+        for r in build_entity_pools(tied, top_k=2).collect()
+    }
+    assert got == {
+        ("attendee", "a", 2), ("attendee", "b", 2),
+        ("location", "z", 3), ("location", "x", 1),
+    }
+
+    att_pool = pool.filter(F.col("pred") == "attendee").select("name", "cnt")
+    names = [r["name"] for r in att_pool.collect()]
+    linked = link_entities(tr, att_pool, "attendee")
     att = linked.filter(F.col("pred") == "attendee")
-    in_pool = att.filter(F.col("obj").isin(*d.keys()))
+    in_pool = att.filter(F.col("obj").isin(*names))
     assert (
         in_pool.filter(F.col("entity_rank").isNull()).count() == 0
     )
-    out_pool = att.filter(~F.col("obj").isin(*d.keys()))
+    out_pool = att.filter(~F.col("obj").isin(*names))
     assert out_pool.filter(F.col("entity_rank").isNotNull()).count() == 0
     # non-attendee triples never link
     assert (
@@ -85,15 +121,29 @@ def test_leakage_anti_join_drops_shared_signatures(spark):
     assert kept == {0, 2, 5}
 
 
+def drop_split_leakage_antijoin(splits):
+    """Reference-shaped formulation of ``drop_split_leakage``
+    (``augmentation/augmentors.py:64-78``): two distinct-signature sets +
+    three left anti-joins."""
+    df = splits.withColumn("_sig", text_signature(F.col("text")))
+    train_sigs = df.filter(F.col("split") == "train").select("_sig").distinct()
+    eval_sigs = df.filter(F.col("split") == "eval").select("_sig").distinct()
+
+    train = df.filter(F.col("split") == "train")
+    ev = df.filter(F.col("split") == "eval").join(train_sigs, "_sig", "left_anti")
+    te = (
+        df.filter(F.col("split") == "test")
+        .join(train_sigs, "_sig", "left_anti")
+        .join(eval_sigs, "_sig", "left_anti")
+    )
+    return train.unionByName(ev).unionByName(te).drop("_sig")
+
+
 def test_leakage_min_rank_equals_antijoin_form(spark):
     """The single-aggregate min-rank formulation must return EXACTLY the
     rows of the reference-shaped 3-anti-join form — including duplicate
     train rows (all kept) and eval+test signature collisions with no
     train member (eval kept, test dropped)."""
-    from calendar_event_entity_extraction_spark.operators.splits import (
-        drop_split_leakage_antijoin,
-    )
-
     rows = [
         (0, "shared text", "train"),
         (1, "shared text", "train"),        # duplicate train rows: BOTH kept
