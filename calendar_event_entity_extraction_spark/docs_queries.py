@@ -20,6 +20,7 @@ from .functions.text import (
     punct_count_col,
     stopword_hits_col,
     token_count_col,
+    tokens_col,
 )
 from .operators.dedup import (
     dedup_first_wins,
@@ -63,18 +64,48 @@ def _emb_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _docs_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents ∪ identical copies (doc_id%20==7) ∪ mutated copies
+def _copies(d: DataFrame, residue: int, offset: int, tail: str) -> DataFrame:
+    """Copies of the ``doc_id % 20 == residue`` rows of ``d`` with ``doc_id``
+    shifted by ``offset`` and ``tail`` appended to ``text``; every other
+    column rides along."""
+    text = F.concat(F.col("text"), F.lit(tail)) if tail else F.col("text")
+    return d.filter(F.col("doc_id") % 20 == residue).withColumns(
+        {"doc_id": F.col("doc_id") + offset, "text": text}
+    )
+
+
+def _planted(d: DataFrame) -> DataFrame:
+    """``d`` ∪ identical copies (doc_id%20==7) ∪ mutated copies
     (doc_id%20==3, two extra tail tokens)."""
-    d = _docs(spark, sf_dir).select("doc_id", "text")
-    ident = d.filter(F.col("doc_id") % 20 == 7).select(
-        (F.col("doc_id") + PLANT_OFFSET).alias("doc_id"), "text"
+    return (
+        d.unionByName(_copies(d, 7, PLANT_OFFSET, ""))
+        .unionByName(_copies(d, 3, 2 * PLANT_OFFSET, " extra tail tokens"))
     )
-    mut = d.filter(F.col("doc_id") % 20 == 3).select(
-        (F.col("doc_id") + 2 * PLANT_OFFSET).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" extra tail tokens")).alias("text"),
+
+
+def _chained(d: DataFrame) -> DataFrame:
+    """:func:`_planted` plus a SECOND mutation generation for doc_id%20==3
+    (two more tail tokens on top of the first mutation): x ~ x+2M ~ x+3M
+    where the x ~ x+3M hop may fall below the Jaccard threshold for short
+    docs — exactly the transitive case pair-level near-dup cannot close."""
+    return _planted(d).unionByName(
+        _copies(d, 3, 3 * PLANT_OFFSET, " extra tail tokens and more")
     )
-    return d.unionByName(ident).unionByName(mut)
+
+
+def _docs_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _planted(_docs(spark, sf_dir).select("doc_id", "text"))
+
+
+def _docs_chained(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _chained(_docs(spark, sf_dir).select("doc_id", "text"))
+
+
+def _docs_chained_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """:func:`_docs_chained` carrying the lang column (copies keep their
+    source doc's lang) — the full curation composite's input, whose
+    mixture-sampling stage needs a stratum column."""
+    return _chained(_docs(spark, sf_dir).select("doc_id", "text", "lang"))
 
 
 _PLANTED_SQL = f"""
@@ -99,6 +130,12 @@ list_distinct(list_transform(
 
 def _mh_sql(j: int) -> str:
     return f"list_aggregate(list_transform(sh, s -> md5('{j}|' || s)), 'min')"
+
+
+def _gram_cat_sql(n: int) -> str:
+    """DuckDB word n-gram at 1-based token index ``i`` of list ``tk``:
+    ``tk[i] || ' ' || … || tk[i+n-1]``."""
+    return " || ' ' || ".join("tk[i]" if j == 0 else f"tk[i+{j}]" for j in range(n))
 
 
 _NTOK_SQL = (
@@ -144,15 +181,11 @@ def q_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DUPSPAN_CAT = " || ' ' || ".join(
-    "tk[i]" if j == 0 else f"tk[i+{j}]" for j in range(10)
-)
-
 O_DUP_SPANS = f"""
 WITH {_PLANTED_SQL},
 tk AS (SELECT doc_id, {_TOKENS_SQL} AS tk FROM planted),
 gr AS (
-  SELECT doc_id, i - 1 AS pos, {_DUPSPAN_CAT} AS g
+  SELECT doc_id, i - 1 AS pos, {_gram_cat_sql(10)} AS g
   FROM (SELECT doc_id, tk,
                unnest(range(1, greatest(len(tk) - 10 + 1, 0) + 1)) AS i
         FROM tk)
@@ -218,9 +251,11 @@ _BANDS_SQL = " UNION ALL ".join(
     for b in range(4)
 )
 
-O_MINHASH_NEARDUP = f"""
-WITH {_PLANTED_SQL},
-t AS (SELECT doc_id, {_SHINGLES_SQL} AS sh FROM planted),
+
+def _lsh_cand_sql(src: str) -> str:
+    """CTEs ``t`` (3-gram shingle sets of ``src``), ``sigs`` (8 MinHash
+    perms), ``bands`` and ``cand`` (LSH candidate pairs, id_a < id_b)."""
+    return f"""t AS (SELECT doc_id, {_SHINGLES_SQL} AS sh FROM {src}),
 sigs AS (SELECT doc_id, {", ".join(f"{_mh_sql(j)} AS mh{j}" for j in range(8))} FROM t),
 bands AS ({_BANDS_SQL}),
 cand AS (
@@ -228,7 +263,31 @@ cand AS (
   FROM bands x JOIN bands y
     ON x.band_idx = y.band_idx AND x.band_key = y.band_key AND x.doc_id < y.doc_id
   GROUP BY 1, 2
-)
+)"""
+
+
+# candidate pairs verified at Jaccard >= 0.6, and their transitive closure
+# (``walk``: every node paired with every node it reaches)
+_CLOSURE_SQL = """pairs AS (
+  SELECT c.id_a, c.id_b
+  FROM cand c JOIN t a ON c.id_a = a.doc_id JOIN t b ON c.id_b = b.doc_id
+  WHERE len(list_intersect(a.sh, b.sh)) >= 0.6 * len(list_distinct(list_concat(a.sh, b.sh)))
+),
+bi AS (
+  SELECT id_a AS u, id_b AS v FROM pairs
+  UNION
+  SELECT id_b AS u, id_a AS v FROM pairs
+),
+walk(node, r) AS (
+  SELECT u, v FROM bi
+  UNION
+  SELECT walk.node, bi.v FROM walk JOIN bi ON bi.u = walk.r
+)"""
+
+
+O_MINHASH_NEARDUP = f"""
+WITH {_PLANTED_SQL},
+{_lsh_cand_sql("planted")}
 SELECT c.id_a, c.id_b,
        CAST(len(list_intersect(a.sh, b.sh)) AS BIGINT) AS n_inter,
        CAST(len(list_distinct(list_concat(a.sh, b.sh))) AS BIGINT) AS n_union
@@ -308,10 +367,9 @@ def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _gram_sql(n: int) -> str:
-    cat = " || ' ' || ".join("tk[i]" if j == 0 else f"tk[i+{j}]" for j in range(n))
     return (
         f"list_transform(range(1, greatest(len(tk) - {n} + 1, 0) + 1), "
-        f"i -> {cat})"
+        f"i -> {_gram_cat_sql(n)})"
     )
 
 
@@ -373,25 +431,6 @@ FROM u
 """
 
 
-def _docs_chained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`_docs_planted` plus a SECOND mutation generation for doc_id%20==3
-    (two more tail tokens on top of the first mutation): x ~ x+2M ~ x+3M
-    where the x ~ x+3M hop may fall below the Jaccard threshold for short
-    docs — exactly the transitive case pair-level near-dup cannot close."""
-    base = _docs_planted(spark, sf_dir)
-    mut2 = (
-        _docs(spark, sf_dir)
-        .filter(F.col("doc_id") % 20 == 3)
-        .select(
-            (F.col("doc_id") + 3 * PLANT_OFFSET).alias("doc_id"),
-            F.concat(F.col("text"), F.lit(" extra tail tokens and more")).alias(
-                "text"
-            ),
-        )
-    )
-    return base.unionByName(mut2)
-
-
 _CHAINED_SQL = f"""
 chained AS (
   SELECT doc_id, text FROM planted
@@ -428,30 +467,8 @@ def q_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 O_NEARDUP_CLUSTERS = f"""
 WITH RECURSIVE {_PLANTED_SQL}, {_CHAINED_SQL},
-t AS (SELECT doc_id, {_SHINGLES_SQL} AS sh FROM chained),
-sigs AS (SELECT doc_id, {", ".join(f"{_mh_sql(j)} AS mh{j}" for j in range(8))} FROM t),
-bands AS ({_BANDS_SQL}),
-cand AS (
-  SELECT x.doc_id AS id_a, y.doc_id AS id_b
-  FROM bands x JOIN bands y
-    ON x.band_idx = y.band_idx AND x.band_key = y.band_key AND x.doc_id < y.doc_id
-  GROUP BY 1, 2
-),
-pairs AS (
-  SELECT c.id_a, c.id_b
-  FROM cand c JOIN t a ON c.id_a = a.doc_id JOIN t b ON c.id_b = b.doc_id
-  WHERE len(list_intersect(a.sh, b.sh)) >= 0.6 * len(list_distinct(list_concat(a.sh, b.sh)))
-),
-bi AS (
-  SELECT id_a AS u, id_b AS v FROM pairs
-  UNION
-  SELECT id_b AS u, id_a AS v FROM pairs
-),
-walk(node, r) AS (
-  SELECT u, v FROM bi
-  UNION
-  SELECT walk.node, bi.v FROM walk JOIN bi ON bi.u = walk.r
-)
+{_lsh_cand_sql("chained")},
+{_CLOSURE_SQL}
 SELECT CAST(node AS BIGINT) AS doc_id,
        CAST(least(node, min(r)) AS BIGINT) AS cluster_id
 FROM walk GROUP BY node
@@ -621,27 +638,6 @@ FROM t
 """
 
 
-def _docs_chained_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`_docs_chained` carrying the lang column (copies keep their source
-    doc's lang) — input fixture for the full curation composite, where the
-    mixture-sampling stage needs a stratum column."""
-    d = _docs(spark, sf_dir).select("doc_id", "text", "lang")
-    ident = d.filter(F.col("doc_id") % 20 == 7).select(
-        (F.col("doc_id") + PLANT_OFFSET).alias("doc_id"), "text", "lang"
-    )
-    mut = d.filter(F.col("doc_id") % 20 == 3).select(
-        (F.col("doc_id") + 2 * PLANT_OFFSET).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" extra tail tokens")).alias("text"),
-        "lang",
-    )
-    mut2 = d.filter(F.col("doc_id") % 20 == 3).select(
-        (F.col("doc_id") + 3 * PLANT_OFFSET).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" extra tail tokens and more")).alias("text"),
-        "lang",
-    )
-    return d.unionByName(ident).unionByName(mut).unionByName(mut2)
-
-
 _CHAINED_LANG_SQL = f"""
 chained_l AS (
   SELECT doc_id, text, lang FROM documents
@@ -704,30 +700,8 @@ kept0 AS (
   SELECT g.doc_id, g.text, g.lang
   FROM gated g JOIN firstwins f ON g.doc_id = f.doc_id
 ),
-t AS (SELECT doc_id, {_SHINGLES_SQL} AS sh FROM kept0),
-sigs AS (SELECT doc_id, {", ".join(f"{_mh_sql(j)} AS mh{j}" for j in range(8))} FROM t),
-bands AS ({_BANDS_SQL}),
-cand AS (
-  SELECT x.doc_id AS id_a, y.doc_id AS id_b
-  FROM bands x JOIN bands y
-    ON x.band_idx = y.band_idx AND x.band_key = y.band_key AND x.doc_id < y.doc_id
-  GROUP BY 1, 2
-),
-pairs AS (
-  SELECT c.id_a, c.id_b
-  FROM cand c JOIN t a ON c.id_a = a.doc_id JOIN t b ON c.id_b = b.doc_id
-  WHERE len(list_intersect(a.sh, b.sh)) >= 0.6 * len(list_distinct(list_concat(a.sh, b.sh)))
-),
-bi AS (
-  SELECT id_a AS u, id_b AS v FROM pairs
-  UNION
-  SELECT id_b AS u, id_a AS v FROM pairs
-),
-walk(node, r) AS (
-  SELECT u, v FROM bi
-  UNION
-  SELECT walk.node, bi.v FROM walk JOIN bi ON bi.u = walk.r
-),
+{_lsh_cand_sql("kept0")},
+{_CLOSURE_SQL},
 drops AS (SELECT node FROM walk GROUP BY node HAVING min(r) < node),
 kept AS (
   SELECT doc_id, text, lang FROM kept0
@@ -905,9 +879,7 @@ def q_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     toks = _docs(spark, sf_dir).select(
         "doc_id",
-        F.posexplode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias(
-            "pos", "token"
-        ),
+        F.posexplode(tokens_col(F.col("text"))).alias("pos", "token"),
     )
     counts = salted_count(toks, "token", salt_cols=["doc_id", "pos", "token"])
     return (
@@ -960,30 +932,8 @@ def q_neardup_keep_longest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 O_NEARDUP_KEEP_LONGEST = f"""
 WITH RECURSIVE {_PLANTED_SQL}, {_CHAINED_SQL},
-t AS (SELECT doc_id, {_SHINGLES_SQL} AS sh FROM chained),
-sigs AS (SELECT doc_id, {", ".join(f"{_mh_sql(j)} AS mh{j}" for j in range(8))} FROM t),
-bands AS ({_BANDS_SQL}),
-cand AS (
-  SELECT x.doc_id AS id_a, y.doc_id AS id_b
-  FROM bands x JOIN bands y
-    ON x.band_idx = y.band_idx AND x.band_key = y.band_key AND x.doc_id < y.doc_id
-  GROUP BY 1, 2
-),
-pairs AS (
-  SELECT c.id_a, c.id_b
-  FROM cand c JOIN t a ON c.id_a = a.doc_id JOIN t b ON c.id_b = b.doc_id
-  WHERE len(list_intersect(a.sh, b.sh)) >= 0.6 * len(list_distinct(list_concat(a.sh, b.sh)))
-),
-bi AS (
-  SELECT id_a AS u, id_b AS v FROM pairs
-  UNION
-  SELECT id_b AS u, id_a AS v FROM pairs
-),
-walk(node, r) AS (
-  SELECT u, v FROM bi
-  UNION
-  SELECT walk.node, bi.v FROM walk JOIN bi ON bi.u = walk.r
-),
+{_lsh_cand_sql("chained")},
+{_CLOSURE_SQL},
 lab AS (SELECT node AS doc_id, least(node, min(r)) AS comp FROM walk GROUP BY node),
 j AS (
   SELECT lab.comp, lab.doc_id, CAST({_NTOK_SQL} AS BIGINT) AS n_tok
@@ -1075,10 +1025,9 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _gram8_sql(src: str) -> str:
-    cat = " || ' ' || ".join("tk[i]" if j == 0 else f"tk[i+{j}]" for j in range(8))
     return f"""
   SELECT doc_id, unnest(list_distinct(list_transform(
-    range(1, greatest(len(tk) - 8 + 1, 0) + 1), i -> {cat}))) AS g
+    range(1, greatest(len(tk) - 8 + 1, 0) + 1), i -> {_gram_cat_sql(8)}))) AS g
   FROM (SELECT doc_id, {_TOKENS_SQL} AS tk FROM {src})
 """
 
@@ -1313,7 +1262,7 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _plane_sign_sql(p: int, dims: int = 64) -> str:
-    """Mirror of similarity._hyperplane_sign in DuckDB SQL: same md5-derived
+    """Mirror of similarity.hyperplane_bucket_udf in DuckDB SQL: same md5-derived
     weights, same left-to-right double accumulation ⇒ bit-identical sign."""
     terms = " + ".join(
         f"(CASE WHEN substr(md5('{p}|{d}'),1,1) >= '8' THEN 1.0 ELSE -1.0 END)"

@@ -1,9 +1,11 @@
 """Text-analysis primitives for a large-scale training-data pipeline.
 
-Column expressions for token counting, the curation quality gate,
-stopword hits, repetition signals, PII scrubbing and document
-fingerprinting, each portable to plain SQL so a DuckDB oracle can mirror
-it exactly, plus Arrow kernels that compute the same values.
+The one home of tokenization: the Column tokenizer :func:`tokens_col`, its
+Python twin :func:`jvm_tokenizer` for the Arrow kernels, and the
+normalized-text :func:`text_signature`. On top of them: token counting,
+the curation quality gate, stopword hits, the repetition-signal kernels,
+PII scrubbing and document fingerprinting — each portable to plain SQL so
+a DuckDB oracle can mirror it exactly.
 """
 
 from __future__ import annotations
@@ -18,6 +20,58 @@ EN_STOPWORDS = [
 ]
 
 PUNCT_RE = r"[.,!?;:]"
+
+# ---------------------------------------------------------------- tokenize
+
+# Java regex's ``\s``: the ASCII whitespace class, spelled out
+JAVA_WS_CLASS = r"[ \t\n\x0B\f\r]"
+TOKEN_SPLIT_RE = r"\s+"
+
+
+def tokens_col(text: Column) -> Column:
+    r"""Word tokens: ``split(lower(trim(text)), '\s+')``. Null text → null.
+
+    The tokenization contract every text signal shares. The Arrow kernels
+    use :func:`jvm_tokenizer`, which reproduces it byte for byte:
+
+    * ``F.trim`` strips the ASCII space only → ``str.strip(" ")``;
+    * Java's ``\s`` is :data:`JAVA_WS_CLASS` — NOT Python's unicode-aware
+      ``\s``, which would also split on NBSP or U+202F; a leading tab still
+      yields a leading empty token on both sides;
+    * Spark's ``lower`` → ``str.lower``.
+
+    Locale caveat: for non-ASCII text Spark's ``lower`` falls back to Java
+    ``toLowerCase``, which is locale-sensitive (a Turkish/Azeri JVM maps
+    ``I`` → ``ı``; ``str.lower`` gives ``i``). ``session.get_spark`` pins
+    ``-Duser.language=en``, so engine-managed sessions agree by
+    construction (pinned on a hostile-text battery in
+    ``tests/test_tokenizer.py``); a plain session with a foreign JVM locale
+    can make the kernels and the Column forms diverge."""
+    return F.split(F.lower(F.trim(text)), TOKEN_SPLIT_RE)
+
+
+def jvm_tokenizer():
+    """The Python twin of :func:`tokens_col` (contract there): returns
+    ``tokenize(text: str) -> list[str]``. A factory, not a module-level
+    function, so a kernel holding the result in its closure pickles it BY
+    VALUE — cloudpickle ships a module-level function by reference, which
+    fails with ``ModuleNotFoundError`` on a worker that cannot import this
+    package."""
+    import re
+
+    java_ws = re.compile(JAVA_WS_CLASS + "+")
+
+    def tokenize(t: str) -> list[str]:
+        return java_ws.split(t.strip(" ").lower())
+
+    return tokenize
+
+
+def text_signature(text: Column) -> Column:
+    """Normalized text: lowercased, trimmed, each whitespace run collapsed
+    to one space — the split-leakage signature
+    (``augmentation/augmentors.py:44-48``) and the fingerprint input."""
+    return F.regexp_replace(F.lower(F.trim(text)), TOKEN_SPLIT_RE, " ")
 
 
 def token_count_col(text: Column) -> Column:
@@ -49,139 +103,61 @@ def quality_ok_col(text: Column) -> Column:
     )
 
 
-def stopword_hits_col(text: Column, stopwords: list[str] | None = None) -> Column:
-    words = F.split(F.lower(F.trim(text)), r"\s+")
-    sw = F.array(*[F.lit(w) for w in (stopwords or EN_STOPWORDS)])
-    return F.size(F.filter(words, lambda w: F.array_contains(sw, w)))
+def stopword_hits_col(text: Column) -> Column:
+    sw = F.array(*[F.lit(w) for w in EN_STOPWORDS])
+    return F.size(F.filter(tokens_col(text), lambda w: F.array_contains(sw, w)))
 
 
-def keep_repetition_col(text: Column) -> Column:
-    """The Gopher-style repetition KEEP flag alone (see
-    :func:`repetition_struct` for the full signal set): distinct/total ≥ 0.3
-    AND top-token mass ≤ 0.2 AND duplicate-bigram mass ≤ 0.5 — integer
-    cross-multiplication, no floats. Used as a narrow curation gate."""
-    toks = F.split(F.lower(F.trim(text)), r"\s+")
-    dist = F.array_distinct(toks)
-    n = F.size(toks)
-    nd = F.size(dist)
-    top = run_stats_col(toks)["best_cnt"]  # max token count via sorted-run fold
-    bg = F.filter(
-        F.zip_with(
-            toks,
-            F.slice(toks, 2, F.greatest(n - 1, F.lit(1))),
-            lambda a, b: F.when(b.isNotNull(), F.concat(a, F.lit(" "), b)),
-        ),
-        lambda x: x.isNotNull(),
-    )
-    n_bg = F.size(bg)
-    nd_bg = F.size(F.array_distinct(bg))
-    return (nd * 10 >= n * 3) & (top * 5 <= n) & ((n_bg - nd_bg) * 2 <= n_bg)
+# ---------------------------------------------------------------- repetition
+
+
+def _repetition_basics():
+    """Factory (closure-shipped, like :func:`jvm_tokenizer`) for the
+    Gopher-style token/bigram signals of one document's tokens:
+    ``(n, nd, top, n_bg, nd_bg, keep)`` — token count, distinct tokens,
+    top token count, bigrams, distinct bigrams, and the KEEP flag
+    distinct/total ≥ 0.3 AND top-token mass ≤ 0.2 AND duplicate-bigram
+    mass ≤ 0.5 by integer cross-multiplication. Distinct bigrams count
+    token PAIRS, injective onto the ``"a b"`` strings the SQL oracle
+    counts because tokens contain no space."""
+    from collections import Counter
+
+    def basics(toks: list[str]):
+        n = len(toks)
+        nd = len(set(toks))
+        top = max(Counter(toks).values())
+        if n > 1:
+            n_bg, nd_bg = n - 1, len(set(zip(toks, toks[1:])))
+        else:
+            n_bg, nd_bg = 0, 0
+        keep = nd * 10 >= n * 3 and top * 5 <= n and (n_bg - nd_bg) * 2 <= n_bg
+        return n, nd, top, n_bg, nd_bg, keep
+
+    return basics
 
 
 def repetition_keep_udf():
-    """Arrow-batched :func:`keep_repetition_col` — the production gate for
-    the hot curation paths (``plans.curate.curate_full``, the streaming
-    gates). Same kernel discipline as ``dedup.minhash_sigs_udf``:
+    """Arrow-batched repetition KEEP flag (:func:`_repetition_basics`) over
+    :func:`tokens_col` tokens — the production gate of
+    ``plans.curate.curate_full`` and the streaming gates. Null text → null,
+    which the downstream filter drops.
 
-    The Column form is a CodegenFallback higher-order tree (array_sort +
-    interpreted fold + zip_with) that allocates a struct per fold step —
-    measured on this box it saturates memory bandwidth/GC and scales at
-    only ~0.44 efficiency from 2 to 8 cores (30.2 s → 17.2 s over 500 k
-    docs) while every codegen'd stage around it scales at ≥ 0.83. This
-    kernel does the same counts with C-level ``Counter``/``set`` calls
-    (~10 µs/doc single-thread) and rides the per-core Python workers, so
-    the gate scales WITH the executor count — the difference between a
-    0.77 and a ≥ 0.85 composite scaling row.
-
-    Byte-exact with the Column spec (equality pytest in
-    ``tests/test_sampling.py``): ``.strip(" ")`` = ``F.trim`` (ASCII space
-    only); the split pattern is Java's ``\\s`` class ``[ \\t\\n\\x0B\\f\\r]``
-    spelled out (NOT Python's unicode-aware ``\\s``, which would also eat
-    NBSP); distinct-bigram counting uses token PAIRS, which is injective
-    onto the spec's ``"a b"`` concat strings because tokens cannot contain
-    spaces. Null text → null, which the downstream filter drops, exactly
-    like the null-propagating Column form.
-
-    Locale caveat (round-4 advice, applies equally to
-    ``dedup.minhash_sigs_udf``/``shingles_udf``): ``str.lower()`` matches
-    Spark's ``lower()`` only when the JVM is not in a locale with special
-    casing (Turkish/Azeri map I→ı via Java ``toLowerCase``). The session
-    factory pins ``-Duser.language=en`` (``session.DEFAULT_DRIVER_JAVA_OPTS``)
-    so engine-managed sessions are safe by construction; under a foreign
-    plain session, exotic code points outside the tested corpora could
-    diverge between the kernel and the Column spec.
-    """
-    import re
-    from collections import Counter
-
-    java_ws = re.compile(r"[ \t\n\x0B\f\r]+")
+    The Column form (``tests/specs.py``) is a CodegenFallback higher-order
+    tree (array_sort + interpreted fold + zip_with) that measured only
+    ~0.44 scaling efficiency from 2 to 8 cores (30.2 s → 17.2 s over 500 k
+    docs); this kernel does the same counts with C-level ``Counter``/``set``
+    calls (~10 µs/doc) on the per-core Python workers."""
+    tokenize = jvm_tokenizer()
+    basics = _repetition_basics()
 
     @F.pandas_udf("boolean")
     def keep(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            if t is None:
-                out.append(None)
-                continue
-            toks = java_ws.split(t.strip(" ").lower())
-            n = len(toks)
-            nd = len(set(toks))
-            top = max(Counter(toks).values())
-            n_bg = n - 1
-            if n_bg > 0:
-                nd_bg = len(set(zip(toks, toks[1:])))
-            else:
-                n_bg, nd_bg = 0, 0
-            out.append(
-                nd * 10 >= n * 3
-                and top * 5 <= n
-                and (n_bg - nd_bg) * 2 <= n_bg
-            )
-        return pd.Series(out, dtype=object)
+        return pd.Series(
+            [None if t is None else basics(tokenize(t))[5] for t in texts],
+            dtype=object,
+        )
 
     return keep
-
-
-def repetition_struct(text: Column) -> list[Column]:
-    """Gopher-style within-document repetition signals, exact integers only
-    (Rae et al. 2021 §A1.1 filter degenerate/boilerplate docs by repeated
-    n-gram mass). All higher-order array functions — narrow, no Python.
-    top_token_count is an O(n log n) sorted-run fold (`run_stats_col`) per
-    document — a per-row constant; a skewed giant doc degrades one task,
-    never a shuffle.
-
-    keep_repetition: distinct/total ≥ 0.3 AND top-token mass ≤ 0.2 AND
-    duplicate-bigram mass ≤ 0.5 — integer cross-multiplication, no floats.
-    """
-    toks = F.split(F.lower(F.trim(text)), r"\s+")
-    dist = F.array_distinct(toks)
-    n = F.size(toks)
-    nd = F.size(dist)
-    top = run_stats_col(toks)["best_cnt"]  # max token count via sorted-run fold
-    # bigrams: zip each token with its successor; zip_with pads the shorter
-    # side with null, so the trailing (last, null) pair filters out
-    bg = F.filter(
-        F.zip_with(
-            toks,
-            F.slice(toks, 2, F.greatest(n - 1, F.lit(1))),
-            lambda a, b: F.when(b.isNotNull(), F.concat(a, F.lit(" "), b)),
-        ),
-        lambda x: x.isNotNull(),
-    )
-    n_bg = F.size(bg)
-    nd_bg = F.size(F.array_distinct(bg))
-    return [
-        n.cast("long").alias("n_tokens"),
-        nd.cast("long").alias("n_distinct"),
-        top.cast("long").alias("top_token_count"),
-        n_bg.cast("long").alias("n_bigrams"),
-        nd_bg.cast("long").alias("n_distinct_bigrams"),
-        (
-            (nd * 10 >= n * 3)
-            & (top * 5 <= n)
-            & ((n_bg - nd_bg) * 2 <= n_bg)
-        ).alias("keep_repetition"),
-    ]
 
 
 # Gopher §A1.1 (Rae et al. 2021) repetition thresholds, as integer percents:
@@ -189,112 +165,6 @@ def repetition_struct(text: Column) -> list[Column]:
 # of duplicated {5..10}-grams, exceeds these fractions of the normalized text
 GOPHER_TOP_NGRAM_PCT = {2: 20, 3: 18, 4: 16}
 GOPHER_DUP_NGRAM_PCT = {5: 15, 6: 14, 7: 13, 8: 12, 9: 11, 10: 10}
-
-
-def _ngram_arr(toks: Column, n: int) -> Column:
-    """All word n-grams (space-joined, WITH multiplicity); empty array when
-    the doc has fewer than n tokens."""
-    grams = F.transform(
-        F.sequence(F.lit(0), F.size(toks) - n),
-        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-    )
-    return F.when(F.size(toks) >= n, grams).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
-def run_stats_col(arr: Column) -> Column:
-    """(best_cnt, best_mass, dup_mass) over a string array in ONE sorted
-    fold: sort, then scan runs of equal values —
-
-    * ``best_cnt``  = max run length            (= max element count)
-    * ``best_mass`` = max run_length × chars    (= heaviest count×len)
-    * ``dup_mass``  = Σ over runs of length ≥ 2 of run_length × chars
-      (incremental: +2·len at an element's second occurrence, +len per
-      further occurrence)
-
-    O(n log n) sort + O(n) fold per document, replacing the naive
-    count-each-distinct-element formulation that is O(n × n_distinct) WITH
-    the array expression re-evaluated per distinct element (interpreted
-    higher-order lambdas have no cross-call caching) — 20× on repetitive
-    docs. Values are provably identical, so the naive per-distinct formula
-    stays in the DuckDB oracles as the independent spec."""
-    init = F.struct(
-        F.lit(None).cast("string").alias("prev"),
-        F.lit(0).cast("long").alias("run"),
-        F.lit(0).cast("long").alias("best_cnt"),
-        F.lit(0).cast("long").alias("best_mass"),
-        F.lit(0).cast("long").alias("dup_mass"),
-    )
-
-    def merge(acc, x):
-        same = acc["prev"].isNotNull() & (x == acc["prev"])
-        run = F.when(same, acc["run"] + 1).otherwise(F.lit(1).cast("long"))
-        ln = F.length(x).cast("long")
-        return F.struct(
-            x.alias("prev"),
-            run.alias("run"),
-            F.greatest(acc["best_cnt"], run).alias("best_cnt"),
-            F.greatest(acc["best_mass"], run * ln).alias("best_mass"),
-            (
-                acc["dup_mass"]
-                + F.when(run == 2, 2 * ln).when(run > 2, ln).otherwise(F.lit(0))
-            ).alias("dup_mass"),
-        )
-
-    return F.aggregate(F.array_sort(arr), init, merge)
-
-
-def top_ngram_chars_col(toks: Column, n: int) -> Column:
-    """Character mass (occurrences × chars of the space-joined gram) of the
-    HEAVIEST n-gram — deterministic under most-frequent ties (it maximizes
-    count × length directly, a monotone bound of Gopher's most-frequent-
-    n-gram character fraction). Integer, 0 for docs shorter than n."""
-    return run_stats_col(_ngram_arr(toks, n))["best_mass"]
-
-
-def dup_ngram_chars_col(toks: Column, n: int) -> Column:
-    """Character mass of DUPLICATED n-grams: sum over distinct grams with
-    count ≥ 2 of count × chars (each occurrence's span counted
-    independently — a documented over-count of Gopher's overlap-aware
-    character fraction, in the conservative direction). Integer."""
-    return run_stats_col(_ngram_arr(toks, n))["dup_mass"]
-
-
-def repetition_struct_full(text: Column) -> list[Column]:
-    """:func:`repetition_struct` plus the FULL Gopher §A1.1 family: heaviest
-    {2,3,4}-gram character mass, duplicate {5..10}-gram character mass, the
-    normalized-character denominator, and an all-gates keep flag — every
-    signal an exact integer, every threshold an integer cross-multiplication
-    (never floats), so the whole filter replays bit-identically in SQL.
-
-    Cost note: each signal is one O(n log n) sorted-run fold per gram order
-    (:func:`run_stats_col`); post-length-gate documents keep this a bounded
-    per-row constant, and a skewed giant doc degrades one task, never a
-    shuffle."""
-    toks = F.split(F.lower(F.trim(text)), r"\s+")
-    chars = F.length(F.array_join(toks, " "))
-    tops = {n: top_ngram_chars_col(toks, n) for n in GOPHER_TOP_NGRAM_PCT}
-    dups = {n: dup_ngram_chars_col(toks, n) for n in GOPHER_DUP_NGRAM_PCT}
-    keep_full = keep_repetition_col(text)
-    for n, pct in GOPHER_TOP_NGRAM_PCT.items():
-        keep_full = keep_full & (tops[n] * 100 <= chars * pct)
-    for n, pct in GOPHER_DUP_NGRAM_PCT.items():
-        keep_full = keep_full & (dups[n] * 100 <= chars * pct)
-    return [
-        *repetition_struct(text),
-        chars.cast("long").alias("n_chars_norm"),
-        *[
-            tops[n].cast("long").alias(f"top{n}gram_chars")
-            for n in GOPHER_TOP_NGRAM_PCT
-        ],
-        *[
-            dups[n].cast("long").alias(f"dup{n}gram_chars")
-            for n in GOPHER_DUP_NGRAM_PCT
-        ],
-        keep_full.alias("keep_repetition_full"),
-    ]
-
 
 REPETITION_FULL_FIELDS = [
     ("n_tokens", "long"),
@@ -311,30 +181,29 @@ REPETITION_FULL_FIELDS = [
 
 
 def repetition_struct_full_udf():
-    r"""Arrow-batched :func:`repetition_struct_full` — the production path
-    for the full Gopher §A1.1 signal family. The Column form plans NINE
-    interpreted sorted-run folds (one :func:`run_stats_col` per gram order
-    2..10) plus the token/bigram fold — CodegenFallback per element with
-    the array rebuilt per lambda step (perf lessons #10/#13); measured
-    round 6 at sf0.1 local[32] it is 27 s of single-stage compute (and its
-    expression tree alone costs visible analysis time per plan). This
-    kernel computes the same exact integers with C-level ``Counter`` calls
-    and rides the per-core Python workers.
+    """Arrow-batched FULL Gopher §A1.1 repetition family, one struct of
+    :data:`REPETITION_FULL_FIELDS` per document: the
+    :func:`_repetition_basics` signals, the normalized character count
+    ``length(array_join(tokens, " "))``, the character mass (occurrences ×
+    chars of the space-joined gram) of the HEAVIEST {2,3,4}-gram, the mass
+    of DUPLICATED {5..10}-grams (every occurrence of a gram seen ≥ 2 times
+    counted — a conservative over-count of Gopher's overlap-aware
+    fraction), and an all-gates keep flag. Every signal is an exact integer
+    and every threshold an integer cross-multiplication, so the filter
+    replays bit-identically in SQL. Null text → null signals, except the
+    nine gram masses, which are 0 (the SQL oracle's empty gram list).
 
-    Byte-exact with the Column spec (equality pytest in
-    ``tests/test_sampling.py``), same tokenization discipline as
-    :func:`repetition_keep_udf`: ``.strip(" ")`` = ``F.trim`` (ASCII space
-    only), Java's ``\s`` class spelled out, ``str.lower`` (locale caveat
-    as documented there). Gram character mass uses
-    ``sum(len(tok)) + (k-1)`` = ``length(concat_ws(" ", gram))`` exactly.
-    Null text → all-null row, like the null-propagating Column form. The
-    Column formulation stays as the readable spec and the DuckDB oracle's
-    independent mirror."""
-    import re
+    The Column form (``tests/specs.py``) plans nine interpreted sorted-run
+    folds — 27 s of single-stage compute at sf0.1 on local[32]; this kernel
+    computes the same integers with C-level ``Counter`` calls on the
+    per-core Python workers."""
     from collections import Counter
 
-    java_ws = re.compile(r"[ \t\n\x0B\f\r]+")
+    tokenize = jvm_tokenizer()
+    basics = _repetition_basics()
+    names = [n for n, _ in REPETITION_FULL_FIELDS]
     schema = ", ".join(f"{n} {t}" for n, t in REPETITION_FULL_FIELDS)
+    null_row = [0 if n.endswith("gram_chars") else None for n in names]
     top_pct = dict(GOPHER_TOP_NGRAM_PCT)
     dup_pct = dict(GOPHER_DUP_NGRAM_PCT)
 
@@ -343,32 +212,12 @@ def repetition_struct_full_udf():
         rows = []
         for t in texts:
             if t is None:
-                # the Column spec's _ngram_arr falls to its otherwise()
-                # EMPTY-array branch on null tokens, so the nine gram-mass
-                # fields are 0 — not null — while everything else nulls
-                rows.append(
-                    [
-                        0 if (n.endswith("gram_chars")) else None
-                        for n, _ in REPETITION_FULL_FIELDS
-                    ]
-                )
+                rows.append(list(null_row))
                 continue
-            toks = java_ws.split(t.strip(" ").lower())
-            n = len(toks)
-            nd = len(set(toks))
-            top = max(Counter(toks).values())
-            if n > 1:
-                n_bg = n - 1
-                nd_bg = len(set(zip(toks, toks[1:])))
-            else:
-                n_bg, nd_bg = 0, 0
-            chars = sum(len(x) for x in toks) + (n - 1)
+            toks = tokenize(t)
+            n, nd, top, n_bg, nd_bg, keep = basics(toks)
             lens = [len(x) for x in toks]
-            keep = (
-                nd * 10 >= n * 3
-                and top * 5 <= n
-                and (n_bg - nd_bg) * 2 <= n_bg
-            )
+            chars = sum(lens) + (n - 1)
             keep_full = keep
             tops, dups = {}, {}
             for k in range(2, 11):
@@ -402,9 +251,7 @@ def repetition_struct_full_udf():
                     keep_full,
                 ]
             )
-        return pd.DataFrame(
-            rows, columns=[n for n, _ in REPETITION_FULL_FIELDS]
-        )
+        return pd.DataFrame(rows, columns=names)
 
     return rep
 
@@ -441,8 +288,7 @@ def scrub_pii_col(text: Column) -> Column:
     return F.regexp_replace(out, PHONE_RE, "<PHONE>")
 
 
-def fingerprint_col(text: Column, bits_hex: int = 16) -> Column:
-    """Stable 64-bit-equivalent document fingerprint: md5 prefix of the
-    whitespace-normalized lowercase text (content-defined, portable)."""
-    norm = F.regexp_replace(F.lower(F.trim(text)), r"\s+", " ")
-    return F.substring(F.md5(norm), 1, bits_hex)
+def fingerprint_col(text: Column) -> Column:
+    """Stable 64-bit document fingerprint: the first 16 hex chars of the
+    md5 of :func:`text_signature` (content-defined, portable)."""
+    return F.substring(F.md5(text_signature(text)), 1, 16)

@@ -2,9 +2,9 @@
 
 The reference only has exact signature dedup (``augmentation/utils.py:36-46``,
 first-wins over a (text, sorted-JSON) signature). At 100 TB a training-data
-pipeline additionally needs near-duplicate detection; all variants here are
-pure Column expressions (JVM-side, whole-stage codegen) built on *portable*
-hashing (md5), so every step is reproducible in plain SQL by the oracle.
+pipeline additionally needs near-duplicate detection; every variant here is
+built on *portable* hashing (md5) over ``functions.text`` tokens, so every
+step is reproducible in plain SQL by the oracle.
 
 Scale notes:
 * exact/signature dedup → one hash-partition shuffle on the signature;
@@ -21,6 +21,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import jvm_tokenizer, tokens_col
 from ..sources.tables import materialize
 
 # ---------------------------------------------------------------- exact
@@ -47,83 +48,39 @@ def canonical_json_signature(struct_col: Column) -> Column:
 
 # ---------------------------------------------------------------- shingles
 
-TOKEN_SPLIT_RE = r"\s+"
+SHINGLE_N = 3  # word n-gram width of the near-dup shingles
 
 
-def tokens_col(text: Column) -> Column:
-    return F.split(F.lower(F.trim(text)), TOKEN_SPLIT_RE)
-
-
-def shingles_col(text: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles; null when the text is shorter than n
-    tokens (sequence() would otherwise run backwards)."""
+def shingles_col(text: Column) -> Column:
+    """Distinct word SHINGLE_N-gram shingles; null when the text is shorter
+    than SHINGLE_N tokens (sequence() would otherwise run backwards)."""
     toks = tokens_col(text)
     grams = F.transform(
-        F.sequence(F.lit(0), F.size(toks) - n),
-        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
+        F.sequence(F.lit(0), F.size(toks) - SHINGLE_N),
+        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, SHINGLE_N)),
     )
-    return F.when(F.size(toks) >= n, F.array_distinct(grams))
+    return F.when(F.size(toks) >= SHINGLE_N, F.array_distinct(grams))
 
 
 # ---------------------------------------------------------------- minhash
 
 
-def shingles_udf(n: int = 3):
-    """Arrow-batched :func:`shingles_col` for the near-dup VERIFY join:
-    distinct word ``n``-gram shingles via the byte-exact tokenization of
-    :func:`minhash_sigs_udf` (ASCII-space trim, Java ``\\s``-class split).
-    Emits the distinct shingle set in sorted order — the Column form emits
-    first-occurrence order, but every consumer here is order-insensitive
-    (``size(array_intersect)`` / ``size(array_union)``), so the outputs
-    are value-identical where it is used; :func:`shingles_col` remains the
-    ordered spec (and the ``jaccard_pairs`` oracle's mirror). Null when
-    the doc has fewer than ``n`` tokens, like the Column form's
-    ``F.when`` guard. The Column form's interpreted slice-per-position
-    lambda measured only ~0.46 core-scaling efficiency (alloc-bound);
-    this kernel rides the per-core Python workers."""
-    import re
-
-    java_ws = re.compile(r"[ \t\n\x0B\f\r]+")
-
-    @F.pandas_udf("array<string>")
-    def sh(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            if t is None:
-                out.append(None)
-                continue
-            toks = java_ws.split(t.strip(" ").lower())
-            if len(toks) < n:
-                out.append(None)
-                continue
-            out.append(
-                sorted({" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)})
-            )
-        return pd.Series(out)
-
-    return sh
-
-
 def ngrams_udf(n: int, distinct: bool = False):
-    """Arrow-batched word n-gram windows — :func:`shingles_udf` generalized
-    beyond n=3 (same byte-exact tokenization: ASCII-space trim, Java
-    ``\\s``-class split, ``str.lower``; see the locale caveat on
-    ``text.repetition_keep_udf``). ``distinct=False`` emits EVERY window in
+    """Arrow-batched word ``n``-gram windows over ``text.tokens_col``
+    tokens (the Python twin ``text.jvm_tokenizer``; contract and locale
+    caveat on ``tokens_col``). ``distinct=False`` emits EVERY window in
     text order with multiplicity, so ``posexplode`` yields the 0-based
     window position — the contract of :func:`duplicate_spans`.
-    ``distinct=True`` emits the sorted distinct set (the
-    ``decontaminate`` contract; its consumers are a distinct-aggregate and
-    a semi-join, both order-insensitive). Null when the doc has fewer than
-    ``n`` tokens — ``posexplode``/``explode`` generate nothing for null,
-    exactly like the Column spec's empty-array guard. The Column forms
-    (``functions.text._ngram_arr`` / :func:`shingles_col`) remain the
-    specs and the DuckDB oracles' mirrors; the interpreted
-    slice-per-position lambda they plan into is the ~0.46-core-scaling
-    CodegenFallback shape of perf lessons #10/#13, and the kernel rides
-    the per-core Python workers instead (equality-pytested)."""
-    import re
-
-    java_ws = re.compile(r"[ \t\n\x0B\f\r]+")
+    ``distinct=True`` emits the sorted distinct set — the near-dup verify
+    and ``decontaminate`` contract, equal as a set to
+    :func:`shingles_col` at ``n = SHINGLE_N``; its consumers
+    (``array_intersect``/``array_union`` sizes, a distinct aggregate, a
+    semi-join) are order-insensitive. Null when the doc has fewer than
+    ``n`` tokens — ``posexplode``/``explode`` generate nothing for null.
+    The Column form's interpreted slice-per-position lambda (the spec in
+    ``tests/specs.py``) is the ~0.46-core-scaling CodegenFallback shape of
+    perf lessons #10/#13; the kernel rides the per-core Python workers."""
+    tokenize = jvm_tokenizer()
 
     @F.pandas_udf("array<string>")
     def grams(texts: pd.Series) -> pd.Series:
@@ -132,7 +89,7 @@ def ngrams_udf(n: int, distinct: bool = False):
             if t is None:
                 out.append(None)
                 continue
-            toks = java_ws.split(t.strip(" ").lower())
+            toks = tokenize(t)
             if len(toks) < n:
                 out.append(None)
                 continue
@@ -143,44 +100,21 @@ def ngrams_udf(n: int, distinct: bool = False):
     return grams
 
 
-def minhash_from_shingles(sh: Column, perms: int = 8) -> list[Column]:
-    """One min-hash per permutation: min over shingles of
-    md5(perm-tag || shingle). md5 is identical in Spark and DuckDB/standard
-    SQL, so signatures are engine-portable. String-min over uniform hex
-    digests is an order-preserving stand-in for integer min-hash."""
-
-    def _mh(j: int) -> Column:
-        # nb: j must be bound via a real closure — a `j=j` lambda default
-        # changes the lambda's arity and pyspark then binds it as (elem, idx)
-        return F.array_min(
-            F.transform(sh, lambda s: F.md5(F.concat(F.lit(f"{j}|"), s)))
-        ).alias(f"mh{j}")
-
-    return [_mh(j) for j in range(perms)]
-
-
-def minhash_signature(text: Column, perms: int = 8, n: int = 3) -> list[Column]:
-    return minhash_from_shingles(shingles_col(text, n), perms)
-
-
-def minhash_sigs_udf(perms: int = 8, n: int = 3):
+def minhash_sigs_udf(perms: int = 8):
     """Arrow-batched MinHash signatures — the production path for
-    :func:`minhash_bands`. Emits exactly the values of
-    :func:`minhash_signature` (which stays as the Column spec the oracles
-    mirror): per doc, min over distinct word-``n``-gram shingles of
-    md5(f"{j}|" || shingle) per permutation, None-filled when the doc has
-    fewer than ``n`` tokens (so downstream band keys stay null and never
-    equi-join). hashlib md5 hex == Spark md5 hex; Python min over hex
-    strings == array_min; tokenization replicates the JVM byte-for-byte —
-    `.strip(" ")` matches `F.trim`'s ASCII-space-only semantics, and the
-    split pattern is Java's `\\s` class ``[ \\t\\n\\x0B\\f\\r]`` spelled
-    out literally, NOT Python's unicode-aware ``\\s``.
-    The Column formulation evaluates perms × shingles interpreted md5
-    lambda steps per row; this kernel is one C md5 per (perm, shingle)."""
+    :func:`minhash_bands`. Per doc, min over the distinct
+    :func:`shingles_col` shingles of md5(f"{j}|" || shingle) per
+    permutation (the Column spec is in ``tests/specs.py`` and mirrored by
+    the DuckDB oracles); None-filled when the text is null or shorter than
+    SHINGLE_N tokens, so downstream band keys stay null and never
+    equi-join. hashlib md5 hex == Spark md5 hex; Python min over hex
+    strings == array_min; tokens via ``text.jvm_tokenizer``. The Column
+    formulation evaluates perms × shingles interpreted md5 lambda steps per
+    row; this kernel is one C md5 per (perm, shingle)."""
     import hashlib
-    import re
 
-    java_ws = re.compile(r"[ \t\n\x0B\f\r]+")
+    tokenize = jvm_tokenizer()
+    n = SHINGLE_N
     md5 = hashlib.md5
     # perm prefixes pre-encoded once per task; the min is taken over raw
     # 16-byte digests and hex-encoded once per perm — bytewise digest order
@@ -192,11 +126,8 @@ def minhash_sigs_udf(perms: int = 8, n: int = 3):
     def sigs(texts: pd.Series) -> pd.Series:
         out = []
         for t in texts:
-            if t is None:
-                out.append(None)
-                continue
-            toks = java_ws.split(t.strip(" ").lower())
-            if len(toks) < n:
+            toks = None if t is None else tokenize(t)
+            if toks is None or len(toks) < n:
                 out.append([None] * perms)
                 continue
             encs = {
@@ -211,7 +142,7 @@ def minhash_sigs_udf(perms: int = 8, n: int = 3):
     return sigs
 
 
-def minhash_bands(df: DataFrame, id_col: str, text_col: str, perms: int = 8, rows_per_band: int = 2, n: int = 3) -> DataFrame:
+def minhash_bands(df: DataFrame, id_col: str, text_col: str, perms: int = 8, rows_per_band: int = 2) -> DataFrame:
     """id, band_idx, band_key — LSH banding of the minhash signature.
 
     Signatures come from the Arrow kernel (:func:`minhash_sigs_udf`, one C
@@ -220,7 +151,7 @@ def minhash_bands(df: DataFrame, id_col: str, text_col: str, perms: int = 8, row
     """
     with_sig = df.select(
         F.col(id_col).alias("id"),
-        minhash_sigs_udf(perms, n)(F.col(text_col)).alias("_mhs"),
+        minhash_sigs_udf(perms)(F.col(text_col)).alias("_mhs"),
     ).select(
         "id",
         *[F.element_at("_mhs", j + 1).alias(f"mh{j}") for j in range(perms)],
@@ -229,7 +160,7 @@ def minhash_bands(df: DataFrame, id_col: str, text_col: str, perms: int = 8, row
 
     def _band_key(b: int):
         # null-PROPAGATING concat (never concat_ws, which skips nulls): a doc
-        # shorter than n tokens has null minhashes ⇒ null band_key, and a
+        # shorter than SHINGLE_N tokens has null minhashes ⇒ null band_key, and a
         # null key never equi-joins — identical to the oracle's `||`
         # semantics. (A filter on the shingle alias would instead be pushed
         # below the projection, re-computing the expensive shingle expr.)
@@ -355,7 +286,6 @@ def minhash_near_duplicates(
     threshold: float = 0.6,
     perms: int = 8,
     rows_per_band: int = 2,
-    n: int = 3,
     bucket_cap: int | None = None,
     overflow_star: bool = False,
 ) -> DataFrame:
@@ -371,7 +301,7 @@ def minhash_near_duplicates(
     any other candidate); the default None keeps exact all-pairs semantics
     for oracle-compared runs.
     """
-    bands = minhash_bands(df, id_col, text_col, perms, rows_per_band, n)
+    bands = minhash_bands(df, id_col, text_col, perms, rows_per_band)
     cand = capped_band_pairs(bands, bucket_cap, overflow_star)
     # Verify needs shingles ONLY for docs appearing in a candidate pair —
     # typically a few % of the corpus. The left-semi join restricts the
@@ -386,7 +316,10 @@ def minhash_near_duplicates(
     ).distinct()
     sh = (
         df.join(cand_ids, id_col, "left_semi")
-        .select(F.col(id_col).alias("id"), shingles_udf(n)(F.col(text_col)).alias("sh"))
+        .select(
+            F.col(id_col).alias("id"),
+            ngrams_udf(SHINGLE_N, distinct=True)(F.col(text_col)).alias("sh"),
+        )
     )
     return (
         cand.join(sh.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
@@ -402,38 +335,11 @@ def minhash_near_duplicates(
 # ---------------------------------------------------------------- simhash
 
 
-def simhash16_col(text: Column) -> Column:
-    """16-bit SimHash over word tokens — the SPEC form. Bit b of a token =
-    high bit of hex nibble b of md5(token) ('8'..'f' ⇒ 1), portable to any
-    SQL with md5(). The document bit is the sign of the per-bit ±1 vote sum.
-
-    This single-Column formulation evaluates md5 once PER BIT (16× per
-    token): each of the 16 vote aggregates carries its own md5 call, and
-    higher-order lambdas offer no cross-expression reuse. It exists as the
-    readable semantic definition and equality pin for the production path —
-    use :func:`with_simhash16` on any real scan (one md5 per token)."""
-    toks = tokens_col(text)
-
-    def _vote(b: int) -> Column:
-        return F.aggregate(
-            toks,
-            F.lit(0),
-            lambda acc, t: acc
-            + F.when(F.substring(F.md5(t), b + 1, 1) >= "8", 1).otherwise(-1),
-        )
-
-    total = None
-    for b in range(16):
-        bit = F.when(_vote(b) > 0, F.lit(2**b)).otherwise(F.lit(0))
-        total = bit if total is None else total + bit
-    return total.cast("int")
-
-
 def simhash16_votes_col(digests: Column) -> Column:
     """All 16 per-bit vote sums in ONE pass over a precomputed md5-digest
     array: fold an int[16] accumulator, adding ±1 per bit from the digest's
-    first 16 hex nibbles. Exactly `[_vote(0..15)]` of :func:`simhash16_col`
-    but with each token hashed once, not 16×."""
+    first 16 hex nibbles. Exactly the 16 per-bit folds of the md5-per-bit
+    spec (``tests/specs.py``), but with each token hashed once, not 16×."""
     return F.aggregate(
         digests,
         F.array(*[F.lit(0)] * 16),
@@ -577,8 +483,8 @@ def duplicate_spans(
 
     Window generation runs in the Arrow kernel :func:`ngrams_udf`
     (ordered, with multiplicity — posexplode position = window position);
-    the Column spec `functions.text._ngram_arr` mirrors the DuckDB oracle
-    and pins the kernel via equality test.
+    its Column spec (``tests/specs.py``) mirrors the DuckDB oracle and pins
+    the kernel via equality test.
     """
     g = corpus.select(
         F.col(id_col).alias("_id"),

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import JAVA_WS_CLASS
+
 FIELDS = ["action", "date", "time", "attendees", "location", "duration", "recurrence", "notes"]
 
 
@@ -69,7 +71,7 @@ def metrics_dict(pred: DataFrame, gold: DataFrame) -> dict:
     return field_metrics(pred, gold).collect()[0].asDict()
 
 
-_ASCII_WS_STRIP = r"^[ \t\n\x0B\f\r]+|[ \t\n\x0B\f\r]+$"
+_ASCII_WS_STRIP = f"^{JAVA_WS_CLASS}+|{JAVA_WS_CLASS}+$"
 
 
 def _strip_ws(c: F.Column) -> F.Column:
@@ -77,7 +79,7 @@ def _strip_ws(c: F.Column) -> F.Column:
     full ASCII whitespace class from both ends (``F.trim`` strips ONLY the
     space character — a '\\t'/'\\n'-padded field would be forgiven by the
     reference but counted as a mismatch; round-3 advice). Documented
-    deviation, same policy as minhash_sigs_udf: Python strip() also removes
+    deviation, same policy as the text tokenizer: Python strip() also removes
     UNICODE whitespace (\\xa0, \\u2028, …), which this ASCII class does
     not — the grammar never emits unicode padding."""
     return F.regexp_replace(c, _ASCII_WS_STRIP, "")

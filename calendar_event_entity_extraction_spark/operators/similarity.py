@@ -52,35 +52,16 @@ def brute_force_topk(
     )
 
 
-def _hyperplane_sign(vec, plane_idx: int, dims: int):
-    """Deterministic pseudo-random hyperplane: component d weight is +1/-1
-    from the high bit of md5('{plane}|{d}'). Sign of <v, h>."""
-    weights = F.array(
-        *[
-            F.when(
-                F.substring(F.md5(F.lit(f"{plane_idx}|{d}")), 1, 1) >= "8", F.lit(1.0)
-            ).otherwise(F.lit(-1.0))
-            for d in range(dims)
-        ]
-    )
-    dot = F.aggregate(
-        F.zip_with(vec, weights, lambda x, w: x.cast("double") * w),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return F.when(dot >= 0, F.lit("1")).otherwise(F.lit("0"))
-
-
 def hyperplane_bucket_udf(planes: int, dims: int, base: int = 0):
     """Arrow-batched hyperplane bucketing — the production path for
-    :func:`lsh_topk` / :func:`cosine_near_duplicates`. Same derivation as
-    :func:`_hyperplane_sign` (which stays as the spec/equality pin): weight
-    (p, d) = +1 iff the first hex char of md5(f"{p}|{d}") ≥ '8', computed
-    here with hashlib (identical digests); the dot product accumulates via
-    numpy ``cumsum`` — the same left fold as the Column ``aggregate`` — so
-    every sign bit is reproduced exactly and the ``ann_lsh_topk`` /
-    ``embedding_neardup`` oracles keep hash-matching. The Column
-    formulation evaluates planes × dims interpreted lambda steps per row
+    :func:`lsh_topk` / :func:`cosine_near_duplicates`. Deterministic
+    pseudo-random hyperplanes: weight (p, d) = +1 iff the first hex char of
+    md5(f"{p}|{d}") ≥ '8', else -1; each bit is the sign of <v, h_p>
+    ("1" when ≥ 0). The dot product accumulates via numpy ``cumsum`` —
+    the same left fold as the Column ``aggregate`` spec in
+    ``tests/specs.py`` — so every sign bit is reproduced exactly and the
+    ``ann_lsh_topk`` / ``embedding_neardup`` oracles keep hash-matching.
+    The Column formulation evaluates planes × dims interpreted lambda steps per row
     (no codegen for higher-order functions); this kernel is two vectorized
     numpy ops per plane per batch. ``base`` offsets the plane index for
     multi-band signatures."""

@@ -17,6 +17,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import text_signature
+
 KNUTH = 2654435761  # multiplicative hash constant; portable across engines
 MOD = 1_000_000_007  # pre-reduction keeps key*KNUTH inside int64 (ANSI-safe)
 
@@ -45,12 +47,6 @@ def assign_split(
         "split",
         F.when(b < train, "train").when(b < train + eval_, "eval").otherwise("test"),
     )
-
-
-def text_signature(text: Column) -> Column:
-    """Normalized text signature for leakage detection
-    (``augmentation/augmentors.py:44-48``: lowercase, collapse whitespace)."""
-    return F.regexp_replace(F.lower(F.trim(text)), r"\s+", " ")
 
 
 def _split_rank(split_col: str) -> Column:
@@ -182,10 +178,9 @@ def decontaminate(
     set itself, but the probe then costs O(1) per corpus gram regardless.
 
     Gram generation runs in the Arrow kernel ``dedup.ngrams_udf(n,
-    distinct=True)`` (byte-exact with the Column spec
-    ``functions.text._ngram_arr`` + ``array_distinct``, which stays as the
-    oracle mirror and equality pin) — the interpreted slice-per-position
-    lambda was the CodegenFallback shape of perf lessons #10/#13."""
+    distinct=True)`` (byte-exact with its Column spec in ``tests/specs.py``,
+    the oracle's mirror) — the interpreted slice-per-position lambda was
+    the CodegenFallback shape of perf lessons #10/#13."""
     from .dedup import ngrams_udf
 
     if bloom_gate == "auto":

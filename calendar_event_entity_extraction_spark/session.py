@@ -23,11 +23,10 @@ from pyspark.sql import SparkSession
 
 # -Duser.language/-Duser.country pin the JVM to a fixed English locale:
 # UTF8String's non-ASCII lower() falls back to Java toLowerCase, which is
-# locale-sensitive (a Turkish-locale JVM maps I→ı), and the Arrow kernels
-# (minhash_sigs_udf, repetition_keep_udf) claim byte-exactness with the
-# Column spec under Python str.lower() — true for en/ROOT, not for tr/az
-# (round-4 advice). The driver's PLAIN session lacks this pin, so the
-# kernels' docstrings also record the residual exposure.
+# locale-sensitive (a Turkish-locale JVM maps I→ı), and the Arrow kernels'
+# Python tokenizer matches Spark's lower() only for en/ROOT, not for tr/az
+# (round-4 advice). A plain session built elsewhere lacks this pin; the
+# tokenization contract (functions.text.tokens_col) records the exposure.
 DEFAULT_DRIVER_JAVA_OPTS = (
     "-Djava.net.preferIPv4Stack=true -Duser.language=en -Duser.country=US"
 )

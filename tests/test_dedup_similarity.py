@@ -3,6 +3,7 @@
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
+from specs import hostile_rows, hyperplane_sign, minhash_signature, simhash16_col
 
 from calendar_event_entity_extraction_spark.operators.dedup import (
     dedup_first_wins,
@@ -171,8 +172,6 @@ def test_simhash_banded_hamming(spark):
     # near-dup docs differ in a few bits; hamming<=3 with 4 bands must find
     # every pair the brute-force hamming check would
     loose = simhash_near_duplicates(docs, "doc_id", "text", max_hamming=3)
-    from calendar_event_entity_extraction_spark.operators.dedup import simhash16_col
-
     sh = {r["doc_id"]: r["s"] for r in docs.select("doc_id", simhash16_col(F.col("text")).alias("s")).collect()}
     brute = {
         (a, b)
@@ -191,7 +190,6 @@ def test_simhash_production_path_matches_spec(spark):
     `simhash16_col` (md5 per bit) on every doc, including empty/degenerate
     text — the 16x-less-hashing path may not change a single bit."""
     from calendar_event_entity_extraction_spark.operators.dedup import (
-        simhash16_col,
         with_simhash16,
     )
 
@@ -208,9 +206,8 @@ def test_minhash_kernel_matches_spec(spark):
     """The Arrow signature kernel must equal the Column spec on adversarial
     inputs: tabs/newlines (Java \\s class), non-breaking space (NOT
     whitespace to Java — must stay inside a token), leading/trailing
-    spaces, short docs, mixed case."""
+    spaces, short docs, mixed case — plus the hostile-text battery."""
     from calendar_event_entity_extraction_spark.operators.dedup import (
-        minhash_signature,
         minhash_sigs_udf,
     )
 
@@ -221,7 +218,7 @@ def test_minhash_kernel_matches_spec(spark):
         (3, "two tokens"),          # < 3 tokens -> null signatures
         (4, "Case MIXED Case mixed case tokens repeated Case"),
         (5, ""),
-    ]
+    ] + hostile_rows(100)
     df = spark.createDataFrame(rows, "doc_id long, text string")
     both = df.select(
         "doc_id",
@@ -234,16 +231,15 @@ def test_minhash_kernel_matches_spec(spark):
 
 def test_hyperplane_bucket_udf_matches_spec(vectors):
     """The Arrow bucket kernel must emit the exact bit pattern of the
-    Column-expression spec `_hyperplane_sign` for every vector, including a
+    Column-expression spec `hyperplane_sign` for every vector, including a
     non-zero plane base (the multi-band path)."""
     from calendar_event_entity_extraction_spark.operators.similarity import (
-        _hyperplane_sign,
         hyperplane_bucket_udf,
     )
 
     df, _ = vectors
     spec = F.concat(
-        *[_hyperplane_sign(F.col("embedding"), 3 + p, 16) for p in range(5)]
+        *[hyperplane_sign(F.col("embedding"), 3 + p, 16) for p in range(5)]
     )
     both = df.select(
         "vec_id",
@@ -322,14 +318,16 @@ def test_kmeans_refine_matches_numpy_exact(spark):
 
 
 def test_shingles_kernel_matches_spec(spark):
-    """shingles_udf must emit exactly shingles_col's distinct shingle SET
-    (the kernel sorts; the Column spec keeps first-occurrence order —
-    every consumer in the verify join is order-insensitive) and replicate
-    its null-when-short guard, on the same adversarial tokenization rows
-    as the minhash kernel plus the sf0.001 documents corpus."""
+    """The near-dup verify's shingle kernel, ngrams_udf(3, distinct=True),
+    must emit exactly shingles_col's distinct shingle SET (the kernel
+    sorts; the Column spec keeps first-occurrence order — every consumer
+    in the verify join is order-insensitive) and replicate its
+    null-when-short guard, on the same adversarial tokenization rows as
+    the minhash kernel, the hostile-text battery and the sf0.001 documents
+    corpus."""
     from calendar_event_entity_extraction_spark.operators.dedup import (
+        ngrams_udf,
         shingles_col,
-        shingles_udf,
     )
 
     rows = [
@@ -341,15 +339,15 @@ def test_shingles_kernel_matches_spec(spark):
         (5, ""),
         (6, None),
         (7, "\tleading separator makes an empty token here ok"),
-    ]
+    ] + hostile_rows(100)
     df = spark.createDataFrame(rows, "doc_id long, text string")
     corpus = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
         "doc_id", "text"
     )
     both = df.unionByName(corpus).select(
         "doc_id",
-        F.array_sort(shingles_col(F.col("text"), 3)).alias("spec"),
-        shingles_udf(3)(F.col("text")).alias("fast"),
+        F.array_sort(shingles_col(F.col("text"))).alias("spec"),
+        ngrams_udf(3, distinct=True)(F.col("text")).alias("fast"),
     )
     bad = both.filter(~F.col("spec").eqNullSafe(F.col("fast")))
     assert bad.count() == 0, bad.limit(3).collect()
@@ -371,7 +369,7 @@ def test_capped_band_pairs_one_exchange_and_prefix_equivalence(spark):
         + [(100 + i, f"unique document number {i} with its own words {i * 7}") for i in range(10)],
         "doc_id long, text string",
     )
-    bands = minhash_bands(docs, "doc_id", "text", perms=8, rows_per_band=2, n=3)
+    bands = minhash_bands(docs, "doc_id", "text", perms=8, rows_per_band=2)
     default = capped_band_pairs(bands, bucket_cap=6)
     plan = default._jdf.queryExecution().executedPlan().toString()
     # Exchanges: ONE capped agg + trailing distinct — no WindowExec
@@ -426,7 +424,7 @@ def test_overflow_star_restores_hot_bucket_connectivity(spark):
         [(i, "same boilerplate text repeated across the entire corpus shard") for i in range(50)],
         "doc_id long, text string",
     )
-    bands = minhash_bands(hot, "doc_id", "text", perms=8, rows_per_band=2, n=3)
+    bands = minhash_bands(hot, "doc_id", "text", perms=8, rows_per_band=2)
     starred = capped_band_pairs(bands, bucket_cap=5, overflow_star=True)
     rows = starred.collect()
     members = {r["id_a"] for r in rows} | {r["id_b"] for r in rows}

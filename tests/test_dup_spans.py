@@ -88,14 +88,13 @@ def test_hash_grams_value_identical(spark):
 
 def test_ngrams_udf_matches_column_spec(spark):
     """Kernel↔spec equality (the minhash_sigs_udf discipline): ordered
-    ngrams_udf must equal posexplode(_ngram_arr(split(lower(trim(text)))))
+    ngrams_udf must equal posexplode(ngram_arr(split(lower(trim(text)))))
     positions AND values; distinct=True must equal
-    array_distinct(_ngram_arr(...)) as a SET — on adversarial whitespace
+    array_distinct(ngram_arr(...)) as a SET — on adversarial whitespace
     (tabs, newlines, form feed, vertical tab, multi-space runs, leading/
     trailing spaces, unicode tokens, short docs, empty-ish strings)."""
-    from calendar_event_entity_extraction_spark.functions.text import (
-        _ngram_arr,
-    )
+    from specs import ngram_arr
+
     from calendar_event_entity_extraction_spark.operators.dedup import (
         ngrams_udf,
     )
@@ -114,7 +113,7 @@ def test_ngrams_udf_matches_column_spec(spark):
     toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
 
     spec = df.select(
-        "doc_id", F.posexplode(_ngram_arr(toks, n)).alias("pos", "g")
+        "doc_id", F.posexplode(ngram_arr(toks, n)).alias("pos", "g")
     )
     kern = df.select(
         "doc_id", F.posexplode(ngrams_udf(n)(F.col("text"))).alias("pos", "g")
@@ -124,7 +123,7 @@ def test_ngrams_udf_matches_column_spec(spark):
 
     spec_d = df.select(
         "doc_id",
-        F.explode(F.array_distinct(_ngram_arr(toks, n))).alias("g"),
+        F.explode(F.array_distinct(ngram_arr(toks, n))).alias("g"),
     )
     kern_d = df.select(
         "doc_id", F.explode(ngrams_udf(n, distinct=True)(F.col("text"))).alias("g")

@@ -161,7 +161,7 @@ def test_augment_pipeline_end_to_end(spark):
     cols = ["conv_id", "turn_idx", "text", "location", "split"]
     assert out.select(cols).exceptAll(out2.select(cols)).count() == 0
     # no leakage: shared signatures never span train and eval/test
-    from calendar_event_entity_extraction_spark.operators.splits import text_signature
+    from calendar_event_entity_extraction_spark.functions.text import text_signature
 
     sigs = out.withColumn("_sig", text_signature(F.col("text")))
     leak = (

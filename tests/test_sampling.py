@@ -3,8 +3,24 @@
 import pytest
 from pyspark.sql import functions as F
 
-from calendar_event_entity_extraction_spark.functions.text import repetition_struct
+from specs import hostile_rows, keep_repetition_col, repetition_struct_full
+
+from calendar_event_entity_extraction_spark.functions.text import (
+    REPETITION_FULL_FIELDS,
+    repetition_keep_udf,
+    repetition_struct_full_udf,
+)
 from calendar_event_entity_extraction_spark.operators.sampling import mixture_sample
+
+
+def _repetition_kernel(df) -> dict:
+    """doc_id → the production kernel's repetition struct as a dict."""
+    return {
+        r["doc_id"]: r["_r"].asDict()
+        for r in df.select(
+            "doc_id", repetition_struct_full_udf()(F.col("text")).alias("_r")
+        ).collect()
+    }
 
 
 @pytest.fixture(scope="module")
@@ -42,8 +58,7 @@ def test_repetition_signals(spark):
         (3, "a b a b a b"),        # repeated bigram pattern
         (4, "solo"),               # single token, no bigrams
     ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["doc_id"]: r.asDict() for r in df.select("doc_id", *repetition_struct(F.col("text"))).collect()}
+    out = _repetition_kernel(spark.createDataFrame(rows, "doc_id long, text string"))
 
     assert out[1]["n_tokens"] == 10 and out[1]["n_distinct"] == 10
     assert out[1]["top_token_count"] == 1
@@ -65,10 +80,6 @@ def test_repetition_signals(spark):
 
 
 def test_repetition_full_family(spark):
-    from calendar_event_entity_extraction_spark.functions.text import (
-        repetition_struct_full,
-    )
-
     clean = " ".join(f"tok{i:02d}" for i in range(30))  # 30 distinct tokens
     rows = [
         (1, clean),
@@ -76,13 +87,7 @@ def test_repetition_full_family(spark):
         (3, "one two three four five six one two three four five six "
             "tail0 tail1 tail2 tail3"),      # duplicated 5- and 6-grams
     ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {
-        r["doc_id"]: r.asDict()
-        for r in df.select(
-            "doc_id", *repetition_struct_full(F.col("text"))
-        ).collect()
-    }
+    out = _repetition_kernel(spark.createDataFrame(rows, "doc_id long, text string"))
     # clean: every gram unique, all dup masses zero, all gates pass
     assert out[1]["dup5gram_chars"] == 0 and out[1]["dup10gram_chars"] == 0
     assert out[1]["top2gram_chars"] == len("tok00 tok01")
@@ -104,12 +109,8 @@ def test_repetition_kernel_equals_column_spec(spark):
     Adversarial rows exercise the tokenization edges the two
     implementations could diverge on (same battery as the minhash kernel):
     ASCII-space-only trim, Java-\\s-class-only splitting (NBSP is a TOKEN
-    character), leading-separator empty tokens, unicode case, null."""
-    from calendar_event_entity_extraction_spark.functions.text import (
-        keep_repetition_col,
-        repetition_keep_udf,
-    )
-
+    character), leading-separator empty tokens, unicode case, null — plus
+    the hostile-text battery."""
     rows = [
         (1, "a b c d e f g h i j"),
         (2, "x x x x"),
@@ -123,7 +124,7 @@ def test_repetition_kernel_equals_column_spec(spark):
         (10, None),
         (11, "a  b\t\tc\n\nd e f g h i j"),  # mixed multi-separators
         (12, "one two three four five six seven eight nine ten " * 3),
-    ]
+    ] + hostile_rows(100)
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = df.select(
         "doc_id",
@@ -136,11 +137,6 @@ def test_repetition_kernel_equals_column_spec(spark):
 
 def test_repetition_kernel_equals_spec_on_corpus(spark):
     """Corpus-wide kernel↔spec equality at sf0.001 (every documents row)."""
-    from calendar_event_entity_extraction_spark.functions.text import (
-        keep_repetition_col,
-        repetition_keep_udf,
-    )
-
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     diff = docs.select(
         keep_repetition_col(F.col("text")).alias("spec"),
@@ -157,12 +153,6 @@ def test_repetition_full_kernel_equals_column_spec(spark):
     `repetition_stats` driver row while repetition_struct_full remains the
     spec the DuckDB oracle mirrors. Same adversarial battery as the keep
     kernel plus the sf0.001 corpus sweep."""
-    from calendar_event_entity_extraction_spark.functions.text import (
-        REPETITION_FULL_FIELDS,
-        repetition_struct_full,
-        repetition_struct_full_udf,
-    )
-
     rows = [
         (1, "a b c d e f g h i j"),
         (2, "x x x x"),
@@ -177,7 +167,7 @@ def test_repetition_full_kernel_equals_column_spec(spark):
         (11, "a  b\t\tc\n\nd e f g h i j"),
         (12, "one two three four five six seven eight nine ten " * 3),
         (13, "lorem ipsum dolor sit amet " * 2 + "unique tail words here"),
-    ]
+    ] + hostile_rows(100)
     # corpus ids offset so they cannot collide with the synthetic rows
     corpus = spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet"

@@ -2,6 +2,7 @@
 
 from pyspark.sql import functions as F
 
+from calendar_event_entity_extraction_spark.functions.text import text_signature
 from calendar_event_entity_extraction_spark.operators import (
     canonicalize_events,
     extract_events,
@@ -16,7 +17,6 @@ from calendar_event_entity_extraction_spark.operators.splits import (
     assign_split,
     deterministic_sample,
     drop_split_leakage,
-    text_signature,
 )
 from calendar_event_entity_extraction_spark.synth import keys_df, transcripts_from_keys
 
