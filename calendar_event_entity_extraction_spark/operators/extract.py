@@ -250,7 +250,6 @@ def attendees_col(text: Column, name_pool: list[str] | None = None) -> Column:
 
 def location_col(
     text: Column,
-    mediums: list[str] | None = None,
     location_pool: list[str] | None = None,
     name_pool: list[str] | None = None,
 ) -> Column:
@@ -258,11 +257,11 @@ def location_col(
     ("on Zoom", "via Google Meet", "using …", "hosted on …") else physical
     "at/in [the] X" phrase (article dropped), else a bare dictionary
     location after a time mention."""
-    med_alt = "|".join(mediums or DEFAULT_MEDIUMS)
+    med_alt = "|".join(DEFAULT_MEDIUMS)
     # "phone" is in the reference's medium list (faker_synth.py:21) but only
     # matches when preposition-introduced ("on phone") — as a bare word it
     # would over-claim ordinary mentions
-    med_intro_alt = "|".join((mediums or DEFAULT_MEDIUMS) + ["Slack", "Meet", "phone"])
+    med_intro_alt = "|".join(DEFAULT_MEDIUMS + ["Slack", "Meet", "phone"])
     # a medium BEFORE the first date/time token belongs to the action
     # phrase, not the location (LEAD_MED_RE, corpus majority)
     not_lead = ~lead_med_col(text)
@@ -416,7 +415,6 @@ def build_lexicons(corpus_texts: DataFrame, text_col: str = "text", top_k: int =
 
 def extract_events(
     transcripts: DataFrame,
-    mediums: list[str] | None = None,
     name_pool: list[str] | None = None,
     location_pool: list[str] | None = None,
 ) -> DataFrame:
@@ -446,7 +444,7 @@ def extract_events(
         date_norm_col(text).alias("date"),
         time_norm_col(text).alias("time"),
         attendees_col(text, name_pool).alias("attendees"),
-        location_col(text, mediums, location_pool, name_pool).alias("location"),
+        location_col(text, location_pool, name_pool).alias("location"),
         duration_norm_col(text).alias("duration"),
         recurrence_col(text).alias("recurrence"),
         notes_col(text).alias("notes"),

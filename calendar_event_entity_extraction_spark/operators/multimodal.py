@@ -63,9 +63,7 @@ FEATURE_SCHEMA = (
 )
 
 
-def extract_features(
-    media: DataFrame, fake: bool = True, batch_hint: int = 1024
-) -> DataFrame:
+def extract_features(media: DataFrame, fake: bool = True) -> DataFrame:
     """Decode + featurize media payloads via mapInPandas (Arrow batches).
 
     Kernel contract is BATCH-LEVEL, never per-element pandas ``.map``: the

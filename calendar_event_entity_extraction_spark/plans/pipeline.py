@@ -3,9 +3,11 @@
     transcripts ─▶ extract ─▶ canonicalize ─▶ triples ─▶ link ─▶ graph
                                                      └▶ entity pools (broadcast)
 
-Each stage materializes to a partitioned table + ``_lineage.json`` manifest
-(sources/manifest.py). A restart with the same input fingerprint skips
-completed stages — partition-level idempotence comes from deterministic
+Each stage materializes through ``stage()`` — the one stage path — to a
+table + ``_lineage.json`` manifest (sources/manifest.py). A restart with the
+same input fingerprint skips completed stages, and a partitioned stage killed
+mid-write writes only its missing partitions; ``resume=False`` rebuilds every
+stage from an empty directory. Idempotence comes from deterministic
 event_ids and overwrite-by-stage semantics.
 
 Physical design for 10^12 turns (SURVEY.md §4):
@@ -13,12 +15,16 @@ Physical design for 10^12 turns (SURVEY.md §4):
 * canonicalize shuffles once on (conv_id, action, date, time);
 * entity pools are one (pred, name) aggregate → tiny per-pred top-k →
   broadcast;
-* the edge table is written partitioned by ``pred`` (8 partitions, each
-  internally bucketed by event_id hash via repartition) so per-predicate
-  scans prune; the node table is the distinct entity set.
+* the edge table is written partitioned by ``pred`` (8 partitions, one
+  file each: the writer hash-distributes by ``pred`` first) so
+  per-predicate scans prune; the node table is the distinct entity set,
+  partitioned by ``kind``.
 """
 
 from __future__ import annotations
+
+import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,11 +38,11 @@ from ..sources import manifest as mf
 
 def input_fingerprint(transcripts: DataFrame) -> str:
     """Cheap content fingerprint: row count + the sum of
-    ``xxhash64(conv_id, turn_idx) % 1_000_003`` over all rows. One pass,
-    executor-side; it sees the row keys only, not ``text``."""
+    ``xxhash64(<every column>) % 1_000_003`` over all rows. One pass,
+    executor-side; an edit to any column (``text`` included) changes it."""
     row = transcripts.agg(
         F.count("*").alias("n"),
-        F.sum(F.xxhash64("conv_id", "turn_idx") % 1_000_003).alias("h"),
+        F.sum(F.xxhash64(*transcripts.columns) % 1_000_003).alias("h"),
     ).collect()[0]
     return f"n={row['n']};h={row['h']}"
 
@@ -52,20 +58,22 @@ def run_pipeline(
 
     ``entity_pools``, ``edges`` and ``nodes`` depend on ``top_k`` as well as
     on the input, so their fingerprint carries it: a resume with another
-    ``top_k`` rebuilds those three and keeps ``events`` and ``triples``."""
+    ``top_k`` rebuilds those three and keeps ``events`` and ``triples``.
+    With ``resume=False`` nothing from a previous run is trusted: each
+    stage's directory is cleared before the stage is built."""
     fp = input_fingerprint(transcripts)
     fp_k = f"{fp};top_k={top_k}"
     manifests = {}
 
     def stage(name: str, fingerprint: str, build, partition_by=None):
         if resume and mf.stage_is_complete(out_dir, name, fingerprint):
-            manifests[name] = mf.read_manifest(out_dir, name)
-            manifests[name]["resumed"] = True
-            return mf.read_stage(spark, out_dir, name)
-        df = build()
-        manifests[name] = mf.write_stage(
-            df, out_dir, name, fingerprint, partition_by
-        )
+            manifests[name] = {**mf.read_manifest(out_dir, name), "resumed": True}
+        else:
+            if not resume:
+                shutil.rmtree(os.path.join(out_dir, name), ignore_errors=True)
+            manifests[name] = mf.write_stage(
+                build(), out_dir, name, fingerprint, partition_by
+            )
         return mf.read_stage(spark, out_dir, name)
 
     # SLIM projection before the canonicalize shuffle AND the write: the KG
@@ -87,17 +95,7 @@ def run_pipeline(
         att_pool = pools.filter(F.col("pred") == "attendee").select("name", "cnt")
         return link_entities(triples, att_pool, "attendee")
 
-    # edges use PARTITION-level checkpointing: a kill mid-stage resumes by
-    # writing only the missing pred partitions (north_rule: per-partition
-    # lineage + resume)
-    if resume and mf.stage_is_complete(out_dir, "edges", fp_k):
-        manifests["edges"] = mf.read_manifest(out_dir, "edges")
-        manifests["edges"]["resumed"] = True
-    else:
-        manifests["edges"] = mf.write_stage_partitioned_resumable(
-            build_edges(), out_dir, "edges", fp_k, "pred"
-        )
-    edges = mf.read_stage(spark, out_dir, "edges")
+    edges = stage("edges", fp_k, build_edges, partition_by=["pred"])
 
     def build_nodes():
         ent = (

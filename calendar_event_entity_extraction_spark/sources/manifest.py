@@ -2,20 +2,29 @@
 
 The `north_rule` requires batch-with-resume: each pipeline stage writes its
 output table plus a ``_lineage.json`` manifest recording the input
-fingerprint, row count, per-partition row counts, and read schema. On
-restart a stage whose manifest exists and whose input fingerprint still
-matches is skipped and its output re-read — the analog of the reference's HF
-``checkpoint-*`` dirs (``simple_output/checkpoint-277``), but content-
-addressed instead of step-numbered.
+fingerprint, row count, per-partition row counts, and read schema — the
+analog of the reference's HF ``checkpoint-*`` dirs
+(``simple_output/checkpoint-277``), but content-addressed instead of
+step-numbered.
 
-Per-partition metrics are collected with ``spark_partition_id()`` grouping —
-an executor-side aggregation, not a driver loop.
+One resume contract, kept by one writer: stage data is written only
+through ``write_stage``. A stage whose manifest is complete and carries
+the caller's fingerprint may be skipped and re-read (``stage_is_complete``
++ ``read_stage``); a partitioned stage killed mid-write resumes by writing
+only its missing partitions; any other write starts from an empty stage
+directory. Whether a previous run is trusted at all is the caller's
+choice (``run_pipeline(resume=False)`` trusts nothing).
+
+Per-partition metrics come from the parquet footers, or from a
+``spark_partition_id()`` grouping — an executor-side aggregation, not a
+driver loop — when the stage wrote many files.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
@@ -92,13 +101,53 @@ def write_stage(
     input_fingerprint: str,
     partition_by: list[str] | None = None,
 ) -> dict:
-    """Write a stage output (Parquet, optionally partitioned) + manifest.
+    """Write a stage output (Parquet, optionally partitioned) + manifest;
+    the one function that writes stage data.
+
+    A partitioned stage resumes per partition: when its manifest carries
+    the same fingerprint and ``partition_by`` but says ``complete: false``
+    (a write was killed partway), the values of the first partition column
+    listed in ``partitions_done`` are kept and only the rest is written.
+    Any other manifest, or none, means the stage directory is cleared and
+    everything is written. Either way ONE Spark job writes all pending
+    partitions in parallel (never a per-value driver loop) with dynamic
+    partition overwrite, which replaces only the partitions present in the
+    pending data, so kept hive directories are untouched. That job's
+    commit renames each finished partition directory into place, so the
+    committed directory listing is what ``partitions_done`` records.
+    Partition values must be path-safe (hive dir names are the resume key);
+    ``_lineage.json`` starts with ``_`` so partition discovery ignores it.
 
     The manifest's ``schema`` comes from ``df`` (``_written_schema``) and,
     for small outputs, its row counts from the parquet footers, so the
     manifest costs no Spark job; ``read_stage`` then reads the stage back
     with that schema instead of inferring it."""
     path = os.path.join(out_dir, stage)
+    partition_by = partition_by or []
+    m = read_manifest(out_dir, stage)
+    if not (
+        partition_by
+        and m
+        and not m.get("complete", True)
+        and m.get("input_fingerprint") == input_fingerprint
+        and m.get("partition_by") == partition_by
+    ):
+        shutil.rmtree(path, ignore_errors=True)
+        m = {
+            "stage": stage,
+            "input_fingerprint": input_fingerprint,
+            "partition_by": partition_by,
+            "partitions_done": [],
+            "complete": False,
+        }
+        if partition_by:
+            write_manifest(out_dir, stage, m)
+
+    pending = df
+    if m["partitions_done"]:
+        # a null value (hive's default partition) is never kept: rewritten
+        done = F.col(partition_by[0]).cast("string").isin(m["partitions_done"])
+        pending = df.filter(~F.coalesce(done, F.lit(False)))
     if partition_by:
         # hash-distribute by the partition columns before a partitioned
         # write (guide §6, the write.distribution-mode=hash analog): an
@@ -108,25 +157,29 @@ def write_stage(
         # (a single giant partition value serializes into one task) is the
         # standard one; callers with that shape pass partition_by=None and
         # lay out the data themselves.
-        df = df.repartition(*[F.col(c) for c in partition_by])
-    writer = df.write.mode("overwrite").option(*_NO_SUCCESS_MARKER)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
+        pending = pending.repartition(*[F.col(c) for c in partition_by])
+    pending.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).option(*_NO_SUCCESS_MARKER).partitionBy(*partition_by).parquet(path)
 
+    if partition_by:
+        prefix = f"{partition_by[0]}="
+        m["partitions_done"] = sorted(
+            d[len(prefix):] for d in os.listdir(path) if d.startswith(prefix)
+        )
     # footer-backed metrics: no post-write Spark job for small outputs
     parts = written_partition_metrics(df.sparkSession, path)
-    manifest = {
-        "stage": stage,
-        "input_fingerprint": input_fingerprint,
-        "rows": sum(p["rows"] for p in parts),
-        "partitions": parts,
-        "partition_by": partition_by or [],
-        "written_at": datetime.now(timezone.utc).isoformat(),
-        "schema": _written_schema(df, partition_by or []),
-    }
-    write_manifest(out_dir, stage, manifest)
-    return manifest
+    m.update(
+        {
+            "complete": True,
+            "rows": sum(p["rows"] for p in parts),
+            "partitions": parts,
+            "written_at": datetime.now(timezone.utc).isoformat(),
+            "schema": _written_schema(df, partition_by),
+        }
+    )
+    write_manifest(out_dir, stage, m)
+    return m
 
 
 def read_manifest(out_dir: str, stage: str) -> dict | None:
@@ -165,72 +218,11 @@ def write_stage_partitioned_resumable(
     input_fingerprint: str,
     partition_col: str,
 ) -> dict:
-    """Partition-level checkpointing: partitions recorded as done in the
-    manifest are skipped; everything pending is written by ONE Spark job
-    with dynamic partition overwrite + ``partitionBy`` — all pending
-    partitions write in parallel (never a sequential per-value driver loop,
-    which would serialize the stage into V back-to-back jobs and re-scan the
-    input per value). Dynamic overwrite replaces only the partitions present
-    in the pending data, so already-done hive directories are untouched.
-
-    Resume safety: the dynamic-overwrite job commit is atomic per job — a
-    kill mid-job leaves only staging dirs, never a half partition — so the
-    committed hive-style directory listing IS the ground truth; the manifest
-    mirrors it for bookkeeping. Partition values must be path-safe (hive dir
-    names are the resume key). (`_lineage.json` starts with '_' so Spark's
-    partition discovery ignores it when the stage is read back.)"""
-    import shutil
-
-    path = os.path.join(out_dir, stage)
-    m = read_manifest(out_dir, stage)
-    if not m or m.get("input_fingerprint") != input_fingerprint or m.get(
-        "partition_by"
-    ) != [partition_col]:
-        shutil.rmtree(path, ignore_errors=True)
-        os.makedirs(path, exist_ok=True)
-        m = {
-            "stage": stage,
-            "input_fingerprint": input_fingerprint,
-            "partition_by": [partition_col],
-            "partitions_done": [],
-            "complete": False,
-        }
-        write_manifest(out_dir, stage, m)
-
-    done = sorted(set(m["partitions_done"]))
-    pending = df
-    if done:
-        pending = df.filter(~F.col(partition_col).cast("string").isin(done))
-
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        # same §6 write-distribution as write_stage: one exchange, one file
-        # per pending partition value instead of tasks × values tiny files
-        pending.repartition(F.col(partition_col)).write.mode(
-            "overwrite"
-        ).option(*_NO_SUCCESS_MARKER).partitionBy(partition_col).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
-    prefix = f"{partition_col}="
-    m["partitions_done"] = sorted(
-        d[len(prefix):] for d in os.listdir(path) if d.startswith(prefix)
-    )
-
-    parts = written_partition_metrics(spark, path)
-    m.update(
-        {
-            "complete": True,
-            "rows": sum(p["rows"] for p in parts),
-            "partitions": parts,
-            "written_at": datetime.now(timezone.utc).isoformat(),
-            "schema": _written_schema(df, [partition_col]),
-        }
-    )
-    write_manifest(out_dir, stage, m)
-    return m
+    """``write_stage`` partitioned by one column. Kept for the benchmark
+    ladder, which calls it by this name; it goes once that ladder reads the
+    package's own layer ledger instead of replaying the pipeline
+    (ROADMAP.md item 1)."""
+    return write_stage(df, out_dir, stage, input_fingerprint, [partition_col])
 
 
 def write_manifest(out_dir: str, stage: str, manifest: dict) -> None:

@@ -6,7 +6,12 @@ below lives in exactly one place in the package. A source scan, no Spark:
 * text tokenizes only through ``functions/text.py``: the Java ``\\s``
   class literal and the ``.strip(" ").lower()`` of the kernels' Python
   tokenizer appear nowhere else, and the Column tokenizer
-  ``F.split(F.lower(F.trim(`` is written only in ``tokens_col``."""
+  ``F.split(F.lower(F.trim(`` is written only in ``tokens_col``;
+* stage data is written only by ``sources/manifest.write_stage`` (the only
+  partition-overwrite option and the only ``_SUCCESS``-marker option), and
+  no code changes the session conf (a write takes per-write options).
+
+A row whose home is ``None`` names a needle that appears nowhere."""
 
 import ast
 import pathlib
@@ -16,14 +21,18 @@ import pytest
 ROOT = pathlib.Path(__file__).resolve().parents[1]
 PACKAGE = ROOT / "calendar_event_entity_extraction_spark"
 TEXT = "functions/text.py"
+MANIFEST = "sources/manifest.py"
 
-# (needle, module that may hold it, function it must sit in — or None)
+# (needle, module that may hold it — or None, function it must sit in — or None)
 HOMES = [
     (".localCheckpoint(", "sources/tables.py", "materialize"),
     (".checkpoint(", "sources/tables.py", "materialize"),
     (r"[ \t\n\x0B\f\r]", TEXT, None),
     ('.strip(" ").lower()', TEXT, None),
     ("F.split(F.lower(F.trim(", TEXT, "tokens_col"),
+    ("partitionOverwriteMode", MANIFEST, "write_stage"),
+    (".option(*_NO_SUCCESS_MARKER)", MANIFEST, "write_stage"),
+    ("conf.set(", None, None),
 ]
 
 
@@ -52,4 +61,4 @@ def test_policy_has_one_home(needle, home, func):
             for i, line in enumerate(lines, 1)
             if needle in line and i not in allowed
         ]
-    assert stray == [], f"{needle!r} outside {home} {func or ''}: {stray}"
+    assert stray == [], f"{needle!r} outside {home or 'nowhere'} {func or ''}: {stray}"

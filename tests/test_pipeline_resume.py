@@ -255,6 +255,53 @@ def test_interrupted_manifest_write_rebuilds_on_resume(
     }
 
 
+def test_resume_false_rebuilds_every_stage(spark, fresh_copy, monkeypatch):
+    """resume=False trusts nothing from a previous run: over an existing
+    output with the same input, every stage is rebuilt with the code as it
+    is now (here a patched linker), and no manifest reports a resume."""
+    from calendar_event_entity_extraction_spark.plans import pipeline
+
+    out = fresh_copy
+    real_link = pipeline.link_entities
+
+    def patched_link(*args):
+        att = F.col("pred") == "attendee"
+        rank = F.when(att, F.lit(-1)).otherwise(F.col("entity_rank"))
+        obj = F.when(att, F.concat("obj", F.lit("*"))).otherwise(F.col("obj"))
+        return real_link(*args).withColumns({"entity_rank": rank, "obj": obj})
+
+    monkeypatch.setattr(pipeline, "link_entities", patched_link)
+    tr = transcripts_from_keys(keys_df(spark, N))
+    m = run_pipeline(spark, tr, out, resume=False)
+    assert not any(man.get("resumed") for man in m.values())
+
+    att_edges = mf.read_stage(spark, out, "edges").filter(F.col("pred") == "attendee")
+    assert [r[0] for r in att_edges.select("entity_rank").distinct().collect()] == [-1]
+    att_nodes = mf.read_stage(spark, out, "nodes").filter(F.col("kind") == "attendee")
+    assert att_nodes.count() > 0
+    assert att_nodes.filter(~F.col("name").endswith("*")).count() == 0
+
+
+def test_text_edit_with_same_keys_rebuilds_every_stage(spark, fresh_copy):
+    """The fingerprint covers every input column: rewriting one turn's text
+    while keeping its (conv_id, turn_idx) must not resume a stale stage."""
+    out = fresh_copy
+    tr = transcripts_from_keys(keys_df(spark, N))
+    first = tr.filter(F.col("role") == "user").orderBy("conv_id", "turn_idx").first()
+    edited = tr.withColumn(
+        "text",
+        F.when(
+            (F.col("conv_id") == first["conv_id"])
+            & (F.col("turn_idx") == first["turn_idx"]),
+            F.concat("text", F.lit(" Thanks!")),
+        ).otherwise(F.col("text")),
+    )
+    m = run_pipeline(spark, edited, out)
+    assert {s: bool(man.get("resumed")) for s, man in m.items()} == {
+        s: False for s in STAGES
+    }
+
+
 def _digest(df):
     row = df.agg(
         F.count("*").alias("n"),
