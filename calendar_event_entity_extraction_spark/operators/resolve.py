@@ -27,6 +27,7 @@ every round is a pure function of the input edge set.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -146,8 +147,11 @@ def connected_components(
         )
         spark = edges.sparkSession
         out_t = canon.schema["u"].dataType.simpleString()
+        # a pandas frame goes to the JVM as Arrow batches; a list of tuples
+        # would be a PythonRDD that starts a Python worker per core
         labels = spark.createDataFrame(
-            sorted(comp.items()), f"node {out_t}, comp {out_t}"
+            pd.DataFrame(sorted(comp.items()), columns=["node", "comp"]),
+            f"node {out_t}, comp {out_t}",
         )
         return (labels, 0) if return_rounds else labels
     cur = canon

@@ -4,11 +4,12 @@
                                                      └▶ entity pools (broadcast)
 
 Each stage materializes through ``stage()`` — the one stage path — to a
-table + ``_lineage.json`` manifest (sources/manifest.py). A restart with the
-same input fingerprint skips completed stages, and a partitioned stage killed
-mid-write writes only its missing partitions; ``resume=False`` rebuilds every
-stage from an empty directory. Idempotence comes from deterministic
-event_ids and overwrite-by-stage semantics.
+table + ``_lineage.json`` manifest (sources/manifest.py). A stage is
+complete with this run's fingerprint, and a restart skips it, or it is
+cleared and rewritten (manifest removed first, written last), so a stage
+killed mid-write is rebuilt whole; ``resume=False`` rebuilds every stage.
+Idempotence comes from deterministic event_ids and overwrite-by-stage
+semantics.
 
 Physical design for 10^12 turns (SURVEY.md §4):
 * extract is narrow (map-only) — scales linearly, no shuffle;
@@ -22,9 +23,6 @@ Physical design for 10^12 turns (SURVEY.md §4):
 """
 
 from __future__ import annotations
-
-import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -59,8 +57,10 @@ def run_pipeline(
     ``entity_pools``, ``edges`` and ``nodes`` depend on ``top_k`` as well as
     on the input, so their fingerprint carries it: a resume with another
     ``top_k`` rebuilds those three and keeps ``events`` and ``triples``.
-    With ``resume=False`` nothing from a previous run is trusted: each
-    stage's directory is cleared before the stage is built."""
+    With ``resume=False`` nothing from a previous run is trusted: every
+    stage is rebuilt. A stage that is not skipped is cleared and rewritten
+    by ``write_stage``, which removes its manifest first and writes it
+    last, so a stage an interrupted run left half-written is rebuilt."""
     fp = input_fingerprint(transcripts)
     fp_k = f"{fp};top_k={top_k}"
     manifests = {}
@@ -69,8 +69,6 @@ def run_pipeline(
         if resume and mf.stage_is_complete(out_dir, name, fingerprint):
             manifests[name] = {**mf.read_manifest(out_dir, name), "resumed": True}
         else:
-            if not resume:
-                shutil.rmtree(os.path.join(out_dir, name), ignore_errors=True)
             manifests[name] = mf.write_stage(
                 build(), out_dir, name, fingerprint, partition_by
             )

@@ -8,12 +8,13 @@ analog of the reference's HF ``checkpoint-*`` dirs
 step-numbered.
 
 One resume contract, kept by one writer: stage data is written only
-through ``write_stage``. A stage whose manifest is complete and carries
-the caller's fingerprint may be skipped and re-read (``stage_is_complete``
-+ ``read_stage``); a partitioned stage killed mid-write resumes by writing
-only its missing partitions; any other write starts from an empty stage
-directory. Whether a previous run is trusted at all is the caller's
-choice (``run_pipeline(resume=False)`` trusts nothing).
+through ``write_stage``. A stage is complete with the caller's
+fingerprint, and may be skipped and re-read (``stage_is_complete`` +
+``read_stage``), or it is cleared and rewritten; the manifest is removed
+first and written last, so a kill anywhere in between leaves a stage
+that the next run rebuilds. Like a ``checkpoint-*`` dir, a stage appears
+whole or not at all. Whether a previous run is trusted at all is the
+caller's choice (``run_pipeline(resume=False)`` trusts nothing).
 
 Per-partition metrics come from the parquet footers, or from a
 ``spark_partition_id()`` grouping — an executor-side aggregation, not a
@@ -104,18 +105,12 @@ def write_stage(
     """Write a stage output (Parquet, optionally partitioned) + manifest;
     the one function that writes stage data.
 
-    A partitioned stage resumes per partition: when its manifest carries
-    the same fingerprint and ``partition_by`` but says ``complete: false``
-    (a write was killed partway), the values of the first partition column
-    listed in ``partitions_done`` are kept and only the rest is written.
-    Any other manifest, or none, means the stage directory is cleared and
-    everything is written. Either way ONE Spark job writes all pending
-    partitions in parallel (never a per-value driver loop) with dynamic
-    partition overwrite, which replaces only the partitions present in the
-    pending data, so kept hive directories are untouched. That job's
-    commit renames each finished partition directory into place, so the
-    committed directory listing is what ``partitions_done`` records.
-    Partition values must be path-safe (hive dir names are the resume key);
+    The stage is cleared, then rewritten by ONE plain overwrite job (all
+    partitions in parallel, never a per-value driver loop). The manifest
+    is removed first and written last: a kill at any point before the
+    last step leaves a stage with no manifest, which a resume rebuilds,
+    and never a complete manifest over partial data. Clearing removes the
+    killed jobs' ``_temporary`` and ``.spark-staging-*`` leftovers too.
     ``_lineage.json`` starts with ``_`` so partition discovery ignores it.
 
     The manifest's ``schema`` comes from ``df`` (``_written_schema``) and,
@@ -124,30 +119,12 @@ def write_stage(
     with that schema instead of inferring it."""
     path = os.path.join(out_dir, stage)
     partition_by = partition_by or []
-    m = read_manifest(out_dir, stage)
-    if not (
-        partition_by
-        and m
-        and not m.get("complete", True)
-        and m.get("input_fingerprint") == input_fingerprint
-        and m.get("partition_by") == partition_by
-    ):
-        shutil.rmtree(path, ignore_errors=True)
-        m = {
-            "stage": stage,
-            "input_fingerprint": input_fingerprint,
-            "partition_by": partition_by,
-            "partitions_done": [],
-            "complete": False,
-        }
-        if partition_by:
-            write_manifest(out_dir, stage, m)
+    try:
+        os.remove(os.path.join(path, MANIFEST_NAME))
+    except FileNotFoundError:
+        pass
+    shutil.rmtree(path, ignore_errors=True)
 
-    pending = df
-    if m["partitions_done"]:
-        # a null value (hive's default partition) is never kept: rewritten
-        done = F.col(partition_by[0]).cast("string").isin(m["partitions_done"])
-        pending = df.filter(~F.coalesce(done, F.lit(False)))
     if partition_by:
         # hash-distribute by the partition columns before a partitioned
         # write (guide §6, the write.distribution-mode=hash analog): an
@@ -157,27 +134,23 @@ def write_stage(
         # (a single giant partition value serializes into one task) is the
         # standard one; callers with that shape pass partition_by=None and
         # lay out the data themselves.
-        pending = pending.repartition(*[F.col(c) for c in partition_by])
-    pending.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).option(*_NO_SUCCESS_MARKER).partitionBy(*partition_by).parquet(path)
+        df = df.repartition(*[F.col(c) for c in partition_by])
+    df.write.mode("overwrite").option(*_NO_SUCCESS_MARKER).partitionBy(
+        *partition_by
+    ).parquet(path)
 
-    if partition_by:
-        prefix = f"{partition_by[0]}="
-        m["partitions_done"] = sorted(
-            d[len(prefix):] for d in os.listdir(path) if d.startswith(prefix)
-        )
     # footer-backed metrics: no post-write Spark job for small outputs
     parts = written_partition_metrics(df.sparkSession, path)
-    m.update(
-        {
-            "complete": True,
-            "rows": sum(p["rows"] for p in parts),
-            "partitions": parts,
-            "written_at": datetime.now(timezone.utc).isoformat(),
-            "schema": _written_schema(df, partition_by),
-        }
-    )
+    m = {
+        "stage": stage,
+        "input_fingerprint": input_fingerprint,
+        "partition_by": partition_by,
+        "complete": True,
+        "rows": sum(p["rows"] for p in parts),
+        "partitions": parts,
+        "written_at": datetime.now(timezone.utc).isoformat(),
+        "schema": _written_schema(df, partition_by),
+    }
     write_manifest(out_dir, stage, m)
     return m
 

@@ -8,8 +8,10 @@ below lives in exactly one place in the package. A source scan, no Spark:
   tokenizer appear nowhere else, and the Column tokenizer
   ``F.split(F.lower(F.trim(`` is written only in ``tokens_col``;
 * stage data is written only by ``sources/manifest.write_stage`` (the only
-  partition-overwrite option and the only ``_SUCCESS``-marker option), and
-  no code changes the session conf (a write takes per-write options).
+  ``_SUCCESS``-marker option), stage directories are cleared only there
+  (the only ``shutil.rmtree(``), no write sets a partition-overwrite mode
+  (a stage is rewritten whole, never per partition), and no code changes
+  the session conf (a write takes per-write options).
 
 A row whose home is ``None`` names a needle that appears nowhere."""
 
@@ -30,7 +32,8 @@ HOMES = [
     (r"[ \t\n\x0B\f\r]", TEXT, None),
     ('.strip(" ").lower()', TEXT, None),
     ("F.split(F.lower(F.trim(", TEXT, "tokens_col"),
-    ("partitionOverwriteMode", MANIFEST, "write_stage"),
+    ("partitionOverwriteMode", None, None),
+    ("shutil.rmtree(", MANIFEST, "write_stage"),
     (".option(*_NO_SUCCESS_MARKER)", MANIFEST, "write_stage"),
     ("conf.set(", None, None),
 ]

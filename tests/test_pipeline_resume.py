@@ -255,6 +255,29 @@ def test_interrupted_manifest_write_rebuilds_on_resume(
     }
 
 
+def test_killed_partition_resume_leftovers_rebuild(spark, fresh_build, fresh_copy):
+    """What a write killed under per-partition resume left behind: an
+    incomplete manifest with the same fingerprint and no partition done,
+    and the killed job's ``.spark-staging-*`` directory. The resume
+    rebuilds the stage whole and clears the leftover."""
+    out = fresh_copy
+    m = mf.read_manifest(out, "edges")
+    mf.write_manifest(out, "edges", {**m, "complete": False, "partitions_done": []})
+    staging = os.path.join(out, "edges", ".spark-staging-x")
+    os.makedirs(staging)
+    open(os.path.join(staging, "part-0.parquet"), "wb").close()
+    assert not mf.stage_is_complete(out, "edges", m["input_fingerprint"])
+
+    tr = transcripts_from_keys(keys_df(spark, N))
+    run = run_pipeline(spark, tr, out)
+    assert not run["edges"].get("resumed")
+    assert _digest(mf.read_stage(spark, out, "edges")) == _digest(
+        mf.read_stage(spark, fresh_build[0], "edges")
+    )
+    names = os.listdir(os.path.join(out, "edges"))
+    assert not [n for n in names if n.startswith(".spark-staging")], names
+
+
 def test_resume_false_rebuilds_every_stage(spark, fresh_copy, monkeypatch):
     """resume=False trusts nothing from a previous run: over an existing
     output with the same input, every stage is rebuilt with the code as it

@@ -122,3 +122,26 @@ def test_durable_checkpoint_dir(spark, tmp_path):
     assert glob.glob(f"{ck}/**/rdd-*", recursive=True), (
         "no durable checkpoint files written"
     )
+
+
+@pytest.mark.parametrize(
+    "typ, edges",
+    [
+        ("bigint", [(1, 2), (2, 3), (10, 11)]),
+        ("string", [("b", "a"), ("c", "b"), ("x", "y")]),
+        ("bigint", []),
+    ],
+)
+def test_driver_path_labels_hold_no_python_rdd(spark, typ, edges):
+    """The driver path hands its labels to Spark as a pandas frame with an
+    explicit schema, which Arrow turns into JVM-side data: the labels and
+    their types are the union-find's, and their lineage holds no PythonRDD
+    (a list of tuples would start a Python worker per core). An empty
+    frame is the exception: pyspark builds it without Arrow."""
+    df = spark.createDataFrame(edges, f"src {typ}, dst {typ}")
+    labels = connected_components(df, "src", "dst")
+    assert labels.schema.simpleString() == f"struct<node:{typ},comp:{typ}>"
+    assert {r["node"]: r["comp"] for r in labels.collect()} == _union_find(edges)
+    if edges:
+        lineage = labels._jdf.queryExecution().toRdd().toDebugString()
+        assert "PythonRDD" not in lineage
