@@ -22,6 +22,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources.tables import driver_table
+
 DEFAULT_TOP_K = 500
 DEFAULT_SALT_BUCKETS = 16
 
@@ -93,15 +95,16 @@ def link_entities(triples: DataFrame, pool: DataFrame, pred: str) -> DataFrame:
     partition key gets optimized away, bringing the WindowExec
     single-partition warning right back).
 
-    The rank table is handed to Spark as a pandas frame with an explicit
-    schema: with Arrow enabled the JVM builds it from Arrow batches, while
-    a list of tuples becomes a PythonRDD whose broadcast job starts a
-    Python worker per core just to read ≤ top_k rows.
+    The rank table is handed to Spark as JVM-side data
+    (``sources.tables.driver_table``): a PythonRDD would start a Python
+    worker per core in the broadcast job just to read ≤ top_k rows. An
+    empty pool gives an empty table the optimizer folds the join away on.
     """
     spark = triples.sparkSession
     ranked = sorted(pool.collect(), key=lambda r: (-r["cnt"], r["name"]))
     names = [r["name"] for r in ranked]
-    w_rank = spark.createDataFrame(
+    w_rank = driver_table(
+        spark,
         pd.DataFrame({"name": names, "entity_rank": range(len(names))}),
         "name string, entity_rank int",
     )

@@ -31,7 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..sources.tables import materialize
+from ..sources.tables import driver_table, materialize
 
 
 def _canonical(edges: DataFrame) -> DataFrame:
@@ -147,9 +147,8 @@ def connected_components(
         )
         spark = edges.sparkSession
         out_t = canon.schema["u"].dataType.simpleString()
-        # a pandas frame goes to the JVM as Arrow batches; a list of tuples
-        # would be a PythonRDD that starts a Python worker per core
-        labels = spark.createDataFrame(
+        labels = driver_table(
+            spark,
             pd.DataFrame(sorted(comp.items()), columns=["node", "comp"]),
             f"node {out_t}, comp {out_t}",
         )

@@ -1,7 +1,16 @@
 """The end-to-end KG-construction pipeline with checkpoint-based resume.
 
-    transcripts ─▶ extract ─▶ canonicalize ─▶ triples ─▶ link ─▶ graph
-                                                     └▶ entity pools (broadcast)
+The five stages form a DAG, not a chain:
+
+    transcripts ─▶ events ─▶ triples ─┬▶ entity_pools ─▶ edges
+                      │               │
+                      └───────────────┴▶ nodes
+
+``nodes`` reads ``events`` and ``triples`` only, so once ``triples`` is
+materialized it is built on its own ``InheritableThread`` while the
+calling thread builds ``entity_pools`` and then ``edges``. The thread
+inherits the caller's job group and description, and ``run_pipeline``
+joins it before it returns or raises, so no job outlives the call.
 
 Each stage materializes through ``stage()`` — the one stage path — to a
 table + ``_lineage.json`` manifest (sources/manifest.py). A stage is
@@ -10,6 +19,11 @@ cleared and rewritten (manifest removed first, written last), so a stage
 killed mid-write is rebuilt whole; ``resume=False`` rebuilds every stage.
 Idempotence comes from deterministic event_ids and overwrite-by-stage
 semantics.
+
+The fingerprint addresses the input and the code. A plan whose every
+leaf is a file scan is addressed by its files (path, length, modification
+time) and its canonicalized plan, with no Spark job; any other plan by a
+scan of every column. Both forms carry a hash of the package's sources.
 
 Physical design for 10^12 turns (SURVEY.md §4):
 * extract is narrow (map-only) — scales linearly, no shuffle;
@@ -24,8 +38,13 @@ Physical design for 10^12 turns (SURVEY.md §4):
 
 from __future__ import annotations
 
+import functools
+import hashlib
+from importlib import resources
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import InheritableThread
 
 from ..operators.canonicalize import canonicalize_events
 from ..operators.entity_link import build_entity_pools, link_entities
@@ -33,16 +52,105 @@ from ..operators.extract import extract_events
 from ..operators.triples import SLIM_EVENT_COLS, events_to_triples
 from ..sources import manifest as mf
 
+STAGES = ("events", "triples", "entity_pools", "edges", "nodes")
+
+
+@functools.cache
+def code_hash() -> str:
+    """sha256 of the package's ``*.py`` sources (relative path + bytes),
+    computed once per process. Read through ``importlib.resources``, so a
+    package shipped as a zip (``--py-files``) hashes its sources too."""
+    h = hashlib.sha256()
+
+    def walk(node, prefix):
+        for child in sorted(node.iterdir(), key=lambda c: c.name):
+            name = f"{prefix}{child.name}"
+            if child.is_dir():
+                walk(child, f"{name}/")
+            elif name.endswith(".py"):
+                h.update(name.encode() + b"\0" + child.read_bytes() + b"\0")
+
+    walk(resources.files(__package__.rsplit(".", 1)[0]), "")
+    return h.hexdigest()[:16]
+
+
+def _file_form(df: DataFrame) -> str | None:
+    """A hash of what a file-backed plan reads, or None if some leaf of
+    its analyzed plan is not a file scan. It covers the Spark version, the
+    canonicalized plan (printed with no field limit), the output schema
+    (the canonical form erases names, and prints no types), and the sorted
+    ``(path, length, modification time)`` of every input file. The file
+    statuses come from Hadoop's ``getFileStatus``, so any scheme works;
+    it reads the lengths and times only, as ``FileStatus.toString`` and
+    ``getPermission`` fork an ``ls`` on the local file system. No Spark
+    job runs."""
+    plan = df._jdf.queryExecution().analyzed()
+    leaves = plan.collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if (
+            leaf.getClass().getSimpleName() != "LogicalRelation"
+            or leaf.relation().getClass().getSimpleName() != "HadoopFsRelation"
+        ):
+            return None
+    spark = df.sparkSession
+    jvm, conf = spark._jvm, spark._jsc.hadoopConfiguration()
+    parts = [
+        spark.version,
+        plan.canonicalized().treeString(True, False, 2**31 - 1, False, False),
+        df.schema.json(),
+    ]
+    for name in sorted(df.inputFiles()):
+        path = jvm.org.apache.hadoop.fs.Path(name)
+        status = path.getFileSystem(conf).getFileStatus(path)
+        parts.append(f"{name}\t{status.getLen()}\t{status.getModificationTime()}")
+    return hashlib.sha256("\n".join(parts).encode()).hexdigest()[:16]
+
 
 def input_fingerprint(transcripts: DataFrame) -> str:
-    """Cheap content fingerprint: row count + the sum of
-    ``xxhash64(<every column>) % 1_000_003`` over all rows. One pass,
-    executor-side; an edit to any column (``text`` included) changes it."""
-    row = transcripts.agg(
-        F.count("*").alias("n"),
-        F.sum(F.xxhash64(*transcripts.columns) % 1_000_003).alias("h"),
-    ).collect()[0]
-    return f"n={row['n']};h={row['h']}"
+    """Fingerprint of the input and the code that reads it.
+
+    A file-backed plan gets ``files=<hash>`` (``_file_form``, no Spark
+    job). Any other plan gets a content fingerprint: row count + the sum
+    of ``xxhash64(<every column>) % 1_000_003`` over all rows, one
+    executor-side pass, so an edit to any column (``text`` included)
+    changes it. Both end in ``code=<hash of the package sources>``, so an
+    edited extractor rebuilds every stage.
+
+    The file form trusts size and modification time: a rewrite that keeps
+    a file's path, length and millisecond mtime goes unseen."""
+    form = _file_form(transcripts)
+    if form is None:
+        row = transcripts.agg(
+            F.count("*").alias("n"),
+            F.sum(F.xxhash64(*transcripts.columns) % 1_000_003).alias("h"),
+        ).collect()[0]
+        form = f"n={row['n']};h={row['h']}"
+    else:
+        form = f"files={form}"
+    return f"{form};code={code_hash()}"
+
+
+def graph_nodes(events: DataFrame, triples: DataFrame) -> DataFrame:
+    """The node table: one row per distinct attendee/location entity and
+    per event. Entities come from the triples; the edges hold the same
+    ``(obj, pred)`` pairs, as linking is a left join against a pool with
+    unique names that only adds ``entity_rank``. Event nodes come from the
+    events stage, where ``event_id`` is one row per event by construction
+    (canonicalize keeps exactly one row per event_id), so no shuffle of
+    the edge table is needed."""
+    ent = (
+        triples.filter(F.col("pred").isin("attendee", "location"))
+        .select(F.col("obj").alias("name"), F.col("pred").alias("kind"))
+        .distinct()
+        .withColumn("node_id", F.xxhash64("kind", "name"))
+    )
+    ev = events.select(
+        F.col("event_id").alias("node_id"),
+        F.col("conv_id").alias("name"),
+        F.lit("event").alias("kind"),
+    )
+    return ent.select("node_id", "name", "kind").unionByName(ev)
 
 
 def run_pipeline(
@@ -54,13 +162,17 @@ def run_pipeline(
 ) -> dict:
     """Run (or resume) the full pipeline; returns the stage manifests.
 
-    ``entity_pools``, ``edges`` and ``nodes`` depend on ``top_k`` as well as
-    on the input, so their fingerprint carries it: a resume with another
-    ``top_k`` rebuilds those three and keeps ``events`` and ``triples``.
-    With ``resume=False`` nothing from a previous run is trusted: every
-    stage is rebuilt. A stage that is not skipped is cleared and rewritten
-    by ``write_stage``, which removes its manifest first and writes it
-    last, so a stage an interrupted run left half-written is rebuilt."""
+    ``entity_pools`` and ``edges`` depend on ``top_k`` as well as on the
+    input, so their fingerprint carries it: a resume with another
+    ``top_k`` rebuilds those two and keeps the other three. With
+    ``resume=False`` nothing from a previous run is trusted: every stage
+    is rebuilt. A stage that is not skipped is cleared and rewritten by
+    ``write_stage``, which removes its manifest first and writes it last,
+    so a stage an interrupted run left half-written is rebuilt.
+
+    ``nodes`` is built on a second thread beside ``entity_pools`` →
+    ``edges``; an exception from either branch is raised after both have
+    stopped."""
     fp = input_fingerprint(transcripts)
     fp_k = f"{fp};top_k={top_k}"
     manifests = {}
@@ -87,38 +199,29 @@ def run_pipeline(
     )
     triples = stage("triples", fp, lambda: events_to_triples(events))
 
-    pools = stage("entity_pools", fp_k, lambda: build_entity_pools(triples, top_k))
+    failed = []
 
-    def build_edges():
+    def nodes_branch():
+        try:
+            stage("nodes", fp, lambda: graph_nodes(events, triples), ["kind"])
+        except BaseException as e:
+            failed.append(e)
+
+    branch = InheritableThread(target=nodes_branch)
+    branch.start()
+    try:
+        pools = stage(
+            "entity_pools", fp_k, lambda: build_entity_pools(triples, top_k)
+        )
         att_pool = pools.filter(F.col("pred") == "attendee").select("name", "cnt")
-        return link_entities(triples, att_pool, "attendee")
-
-    edges = stage("edges", fp_k, build_edges, partition_by=["pred"])
-
-    def build_nodes():
-        ent = (
-            edges.filter(F.col("pred").isin("attendee", "location"))
-            .select(
-                F.col("obj").alias("name"),
-                F.col("pred").alias("kind"),
-            )
-            .distinct()
-            .withColumn("node_id", F.xxhash64("kind", "name"))
+        stage(
+            "edges",
+            fp_k,
+            lambda: link_entities(triples, att_pool, "attendee"),
+            partition_by=["pred"],
         )
-        # event nodes come from the EVENTS stage, where (event_id, conv_id)
-        # is already one row per event by construction (canonicalize keeps
-        # exactly one row per event_id) — value-identical to the former
-        # distinct over the edge table (every detected event carries
-        # non-null date+time triples, so no event is edge-less), minus a
-        # full shuffle of the (much larger) edge table (round-6)
-        ev = events.select(
-            F.col("event_id").alias("node_id"),
-            F.col("conv_id").alias("name"),
-            F.lit("event").alias("kind"),
-        )
-        return ent.select("node_id", "name", "kind").unionByName(
-            ev.select("node_id", "name", "kind")
-        )
-
-    stage("nodes", fp_k, build_nodes, partition_by=["kind"])
-    return manifests
+    finally:
+        branch.join()
+    if failed:
+        raise failed[0]
+    return {name: manifests[name] for name in STAGES}

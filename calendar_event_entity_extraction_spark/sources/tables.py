@@ -11,7 +11,9 @@ environment constraints.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..schemas import TRANSCRIPT_SCHEMA
@@ -105,6 +107,22 @@ def materialize(df: DataFrame, checkpoint_dir: str | None = None) -> DataFrame:
         return df.localCheckpoint()
     df.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
     return df.checkpoint()
+
+
+def driver_table(spark: SparkSession, pdf: pd.DataFrame, ddl: str) -> DataFrame:
+    """A small driver-side table as JVM-side data, with schema ``ddl``.
+
+    A pandas frame goes to the JVM as Arrow batches, while a list of tuples
+    becomes a PythonRDD whose first job starts a Python worker per core
+    (CLAUDE.md lesson 21b). pyspark skips Arrow for a zero-row frame, so an
+    empty table is built from ``spark.range(0)`` instead, which the
+    optimizer also knows to be empty."""
+    if len(pdf):
+        return spark.createDataFrame(pdf, ddl)
+    schema = T.StructType.fromDDL(ddl)
+    return spark.range(0).select(
+        *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema]
+    )
 
 
 def read_jsonl(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:

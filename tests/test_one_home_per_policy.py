@@ -11,7 +11,10 @@ below lives in exactly one place in the package. A source scan, no Spark:
   ``_SUCCESS``-marker option), stage directories are cleared only there
   (the only ``shutil.rmtree(``), no write sets a partition-overwrite mode
   (a stage is rewritten whole, never per partition), and no code changes
-  the session conf (a write takes per-write options).
+  the session conf (a write takes per-write options);
+* jobs run on a second thread only in ``plans/pipeline.run_pipeline``,
+  through ``InheritableThread``, which carries the caller's job group and
+  description; a plain ``threading.Thread`` would launch jobs outside it.
 
 A row whose home is ``None`` names a needle that appears nowhere."""
 
@@ -36,6 +39,8 @@ HOMES = [
     ("shutil.rmtree(", MANIFEST, "write_stage"),
     (".option(*_NO_SUCCESS_MARKER)", MANIFEST, "write_stage"),
     ("conf.set(", None, None),
+    ("InheritableThread(", "plans/pipeline.py", "run_pipeline"),
+    ("threading.Thread(", None, None),
 ]
 
 

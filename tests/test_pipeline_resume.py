@@ -2,16 +2,22 @@
 
 import os
 import shutil
+import subprocess
+import sys
+import threading
 import uuid
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.util import InheritableThread
 
 from calendar_event_entity_extraction_spark.plans.pipeline import (
+    STAGES,
     input_fingerprint,
     run_pipeline,
 )
 from calendar_event_entity_extraction_spark.sources import manifest as mf
+from calendar_event_entity_extraction_spark.sources.tables import read_transcripts
 from calendar_event_entity_extraction_spark.synth import keys_df, transcripts_from_keys
 
 N = 800
@@ -111,7 +117,6 @@ def test_edge_table_partition_pruning(spark, out_dir):
     assert metrics["numFiles"] == len(attendee_files) > 0
 
 
-STAGES = ("events", "triples", "entity_pools", "edges", "nodes")
 # Spark jobs of a fresh run_pipeline at this size. Recording a stage's
 # manifest and reading the stage back launch no job; when each of the five
 # stages ran two one-task footer-merge reads for that, the build ran 25.
@@ -204,18 +209,18 @@ def test_manifest_without_schema_reads_and_resumes(spark, fresh_copy):
 
 
 def test_resume_with_changed_top_k_rebuilds_pool_stages(spark, fresh_copy):
-    """top_k shapes entity_pools, edges and nodes but not events/triples:
-    a resume under another top_k must rebuild exactly those three."""
+    """top_k shapes entity_pools and edges but not events, triples or
+    nodes (built from events + triples): a resume under another top_k must
+    rebuild exactly those two."""
     out = fresh_copy
     tr = transcripts_from_keys(keys_df(spark, N))
     m = run_pipeline(spark, tr, out, top_k=3)
-    resumed = {s: bool(man.get("resumed")) for s, man in m.items()}
-    assert resumed == {
+    assert _resumed(m) == {
         "events": True,
         "triples": True,
         "entity_pools": False,
         "edges": False,
-        "nodes": False,
+        "nodes": True,
     }
     assert m["entity_pools"]["rows"] <= 2 * 3
     ranks = mf.read_stage(spark, out, "edges").filter(
@@ -281,48 +286,60 @@ def test_killed_partition_resume_leftovers_rebuild(spark, fresh_build, fresh_cop
 def test_resume_false_rebuilds_every_stage(spark, fresh_copy, monkeypatch):
     """resume=False trusts nothing from a previous run: over an existing
     output with the same input, every stage is rebuilt with the code as it
-    is now (here a patched linker), and no manifest reports a resume."""
+    is now (here a patched triple builder and linker), and no manifest
+    reports a resume. The patched attendee names reach both graph stages,
+    ``edges`` through the pools and ``nodes`` straight from the triples."""
     from calendar_event_entity_extraction_spark.plans import pipeline
 
     out = fresh_copy
+    real_triples = pipeline.events_to_triples
     real_link = pipeline.link_entities
+    att = F.col("pred") == "attendee"
+
+    def patched_triples(events):
+        obj = F.when(att, F.concat("obj", F.lit("*"))).otherwise(F.col("obj"))
+        return real_triples(events).withColumn("obj", obj)
 
     def patched_link(*args):
-        att = F.col("pred") == "attendee"
         rank = F.when(att, F.lit(-1)).otherwise(F.col("entity_rank"))
-        obj = F.when(att, F.concat("obj", F.lit("*"))).otherwise(F.col("obj"))
-        return real_link(*args).withColumns({"entity_rank": rank, "obj": obj})
+        return real_link(*args).withColumn("entity_rank", rank)
 
+    monkeypatch.setattr(pipeline, "events_to_triples", patched_triples)
     monkeypatch.setattr(pipeline, "link_entities", patched_link)
     tr = transcripts_from_keys(keys_df(spark, N))
     m = run_pipeline(spark, tr, out, resume=False)
     assert not any(man.get("resumed") for man in m.values())
 
-    att_edges = mf.read_stage(spark, out, "edges").filter(F.col("pred") == "attendee")
+    att_edges = mf.read_stage(spark, out, "edges").filter(att)
     assert [r[0] for r in att_edges.select("entity_rank").distinct().collect()] == [-1]
+    assert att_edges.count() > 0
+    assert att_edges.filter(~F.col("obj").endswith("*")).count() == 0
     att_nodes = mf.read_stage(spark, out, "nodes").filter(F.col("kind") == "attendee")
     assert att_nodes.count() > 0
     assert att_nodes.filter(~F.col("name").endswith("*")).count() == 0
+
+
+def _with_one_text_edited(tr):
+    """``tr`` with the first user turn's text changed, keys kept."""
+    first = tr.filter(F.col("role") == "user").orderBy("conv_id", "turn_idx").first()
+    edited = (F.col("conv_id") == first["conv_id"]) & (
+        F.col("turn_idx") == first["turn_idx"]
+    )
+    text = F.when(edited, F.concat("text", F.lit(" Thanks!"))).otherwise(F.col("text"))
+    return tr.withColumn("text", text)
+
+
+def _resumed(m):
+    return {s: bool(man.get("resumed")) for s, man in m.items()}
 
 
 def test_text_edit_with_same_keys_rebuilds_every_stage(spark, fresh_copy):
     """The fingerprint covers every input column: rewriting one turn's text
     while keeping its (conv_id, turn_idx) must not resume a stale stage."""
     out = fresh_copy
-    tr = transcripts_from_keys(keys_df(spark, N))
-    first = tr.filter(F.col("role") == "user").orderBy("conv_id", "turn_idx").first()
-    edited = tr.withColumn(
-        "text",
-        F.when(
-            (F.col("conv_id") == first["conv_id"])
-            & (F.col("turn_idx") == first["turn_idx"]),
-            F.concat("text", F.lit(" Thanks!")),
-        ).otherwise(F.col("text")),
-    )
+    edited = _with_one_text_edited(transcripts_from_keys(keys_df(spark, N)))
     m = run_pipeline(spark, edited, out)
-    assert {s: bool(man.get("resumed")) for s, man in m.items()} == {
-        s: False for s in STAGES
-    }
+    assert _resumed(m) == {s: False for s in STAGES}
 
 
 def _digest(df):
@@ -331,3 +348,184 @@ def _digest(df):
         F.sum(F.xxhash64(*df.columns).cast("decimal(38,0)")).alias("h"),
     ).collect()[0]
     return row["n"], row["h"]
+
+
+# ------------------------------------------------ code hash and the graph DAG
+
+
+def test_code_change_rebuilds_every_stage(spark, fresh_copy, monkeypatch):
+    """The fingerprint carries a hash of the package sources: with the
+    code changed (here its hash patched), a resume rebuilds all five
+    stages, and then resumes them under the new code."""
+    from calendar_event_entity_extraction_spark.plans import pipeline
+
+    out = fresh_copy
+    tr = transcripts_from_keys(keys_df(spark, N))
+    monkeypatch.setattr(pipeline, "code_hash", lambda: "edited")
+    assert _resumed(run_pipeline(spark, tr, out)) == {s: False for s in STAGES}
+    assert _resumed(run_pipeline(spark, tr, out)) == {s: True for s in STAGES}
+
+
+def test_every_job_carries_the_callers_job_group(spark, tmp_path):
+    """The nodes branch runs on its own thread; every job the call
+    launches, on either thread, carries the caller's job group: the
+    group holds as many jobs as the scheduler started during the call."""
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    first = scheduler.nextJobId()
+    tr = transcripts_from_keys(keys_df(spark, N))
+    _, in_group = _count_jobs(
+        spark, lambda: run_pipeline(spark, tr, str(tmp_path / "kg"))
+    )
+    assert in_group == scheduler.nextJobId() - first > 0
+
+
+def test_failed_nodes_branch_raises_after_join(
+    spark, fresh_build, fresh_copy, monkeypatch
+):
+    """A nodes build that fails makes run_pipeline raise once both branches
+    have stopped: edges is complete, nodes has no manifest, no branch
+    thread is left, and a resume rebuilds only nodes, to the clean
+    build's output."""
+    from calendar_event_entity_extraction_spark.plans import pipeline
+
+    out = fresh_copy
+    real_nodes = pipeline.graph_nodes
+
+    def failing_nodes(*args):
+        boom = F.raise_error(F.lit("nodes build failed")).cast("string")
+        return real_nodes(*args).withColumn("name", boom)
+
+    monkeypatch.setattr(pipeline, "graph_nodes", failing_nodes)
+    tr = transcripts_from_keys(keys_df(spark, N))
+    with pytest.raises(Exception, match="nodes build failed"):
+        run_pipeline(spark, tr, out, resume=False)
+    monkeypatch.undo()
+    assert not [t for t in threading.enumerate() if isinstance(t, InheritableThread)]
+    assert mf.read_manifest(out, "nodes") is None
+    edges = mf.read_manifest(out, "edges")
+    assert mf.stage_is_complete(out, "edges", edges["input_fingerprint"])
+
+    m = run_pipeline(spark, tr, out)
+    assert _resumed(m) == {s: s != "nodes" for s in STAGES}
+    clean = fresh_build[0]
+    assert {s: _digest(mf.read_stage(spark, out, s)) for s in STAGES} == {
+        s: _digest(mf.read_stage(spark, clean, s)) for s in STAGES
+    }
+
+
+def test_node_entities_are_the_edge_entities(spark, fresh_build):
+    """nodes is built from the triples, not the edges; its attendee and
+    location nodes are still exactly the distinct (obj, pred) of the
+    edges."""
+    out, _ = fresh_build
+    nodes = mf.read_stage(spark, out, "nodes").filter(F.col("kind") != "event")
+    edges = mf.read_stage(spark, out, "edges").filter(
+        F.col("pred").isin("attendee", "location")
+    )
+    got = [tuple(r) for r in nodes.select("name", "kind").collect()]
+    want = {tuple(r) for r in edges.select("obj", "pred").distinct().collect()}
+    assert len(got) == len(set(got)) and set(got) == want
+    assert {k for _, k in want} == {"attendee", "location"}
+
+
+# ------------------------------------------------------ file-backed input
+
+
+@pytest.fixture(scope="module")
+def file_input(spark, tmp_path_factory):
+    """The transcripts of ``fresh_build`` written to parquet."""
+    path = str(tmp_path_factory.mktemp("tr_file") / "transcripts")
+    transcripts_from_keys(keys_df(spark, N)).write.parquet(path)
+    return path
+
+
+@pytest.fixture(scope="module")
+def file_build(spark, file_input, tmp_path_factory):
+    """A fresh build from ``file_input``, with its Spark job count."""
+    out = str(tmp_path_factory.mktemp("kg_file"))
+    _, n_jobs = _count_jobs(
+        spark,
+        lambda: run_pipeline(
+            spark, read_transcripts(spark, file_input), out, resume=False
+        ),
+    )
+    return out, n_jobs
+
+
+def test_file_backed_build_skips_the_fingerprint_scan(fresh_build, file_build, spark):
+    """A file-backed input is fingerprinted by its files, not scanned: the
+    build runs the in-memory build's jobs minus the scan's two, and writes
+    the same stages."""
+    assert file_build[1] == fresh_build[1] - 2, (file_build[1], fresh_build[1])
+    assert {s: _digest(mf.read_stage(spark, file_build[0], s)) for s in STAGES} == {
+        s: _digest(mf.read_stage(spark, fresh_build[0], s)) for s in STAGES
+    }
+
+
+def test_file_backed_full_resume_runs_no_job(spark, file_input, file_build):
+    m, n_jobs = _count_jobs(
+        spark,
+        lambda: run_pipeline(spark, read_transcripts(spark, file_input), file_build[0]),
+    )
+    assert all(_resumed(m).values())
+    assert n_jobs == 0
+
+
+def test_file_backed_text_edit_rebuilds_every_stage(spark, file_input, tmp_path):
+    """Rewriting the input files with one turn's text edited, keys kept,
+    rebuilds all five stages."""
+    path, out = str(tmp_path / "transcripts"), str(tmp_path / "kg")
+    shutil.copytree(file_input, path)
+    run_pipeline(spark, read_transcripts(spark, path), out)
+    assert all(_resumed(run_pipeline(spark, read_transcripts(spark, path), out)).values())
+
+    edited = _with_one_text_edited(transcripts_from_keys(keys_df(spark, N)))
+    edited.write.mode("overwrite").parquet(path)
+    m = run_pipeline(spark, read_transcripts(spark, path), out)
+    assert _resumed(m) == {s: False for s in STAGES}
+
+
+def test_added_filter_changes_file_fingerprint(spark, file_input):
+    """The file form hashes the plan too: another read of the same files
+    gives the same fingerprint, an added filter another one, and neither
+    runs a Spark job."""
+    fps, n_jobs = _count_jobs(
+        spark,
+        lambda: [
+            input_fingerprint(read_transcripts(spark, file_input)),
+            input_fingerprint(read_transcripts(spark, file_input)),
+            input_fingerprint(
+                read_transcripts(spark, file_input).filter(F.col("turn_idx") > 0)
+            ),
+        ],
+    )
+    assert n_jobs == 0
+    assert all(fp.startswith("files=") for fp in fps)
+    assert fps[0] == fps[1] != fps[2]
+
+
+_FINGERPRINT_CHILD = """
+import sys
+sys.path.insert(0, sys.argv[1])
+from calendar_event_entity_extraction_spark.plans.pipeline import input_fingerprint
+from calendar_event_entity_extraction_spark.session import get_spark
+from calendar_event_entity_extraction_spark.sources.tables import read_transcripts
+spark = get_spark(app_name="fingerprint-child", cores=1)
+print("FP", input_fingerprint(read_transcripts(spark, sys.argv[2])))
+"""
+
+
+def test_file_fingerprint_is_the_same_in_a_new_process(spark, file_input):
+    """A fresh process fingerprints the same files the same way, so a
+    restarted run resumes an unchanged input instead of rebuilding it."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    child = subprocess.run(
+        [sys.executable, "-c", _FINGERPRINT_CHILD, repo, file_input],
+        capture_output=True,
+        text=True,
+        timeout=120,
+        env={**os.environ, "SPARK_DRIVER_MEM": "1g"},
+    )
+    lines = [line for line in child.stdout.splitlines() if line.startswith("FP ")]
+    assert lines, child.stderr[-2000:]
+    assert lines[-1] == f"FP {input_fingerprint(read_transcripts(spark, file_input))}"

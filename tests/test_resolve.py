@@ -133,15 +133,13 @@ def test_durable_checkpoint_dir(spark, tmp_path):
     ],
 )
 def test_driver_path_labels_hold_no_python_rdd(spark, typ, edges):
-    """The driver path hands its labels to Spark as a pandas frame with an
-    explicit schema, which Arrow turns into JVM-side data: the labels and
-    their types are the union-find's, and their lineage holds no PythonRDD
-    (a list of tuples would start a Python worker per core). An empty
-    frame is the exception: pyspark builds it without Arrow."""
+    """The driver path hands its labels to Spark as JVM-side data: the
+    labels and their types are the union-find's, and their lineage holds
+    no PythonRDD (which would start a Python worker per core), also for
+    an edge set with no edges, where pyspark would skip Arrow."""
     df = spark.createDataFrame(edges, f"src {typ}, dst {typ}")
     labels = connected_components(df, "src", "dst")
     assert labels.schema.simpleString() == f"struct<node:{typ},comp:{typ}>"
     assert {r["node"]: r["comp"] for r in labels.collect()} == _union_find(edges)
-    if edges:
-        lineage = labels._jdf.queryExecution().toRdd().toDebugString()
-        assert "PythonRDD" not in lineage
+    lineage = labels._jdf.queryExecution().toRdd().toDebugString()
+    assert "PythonRDD" not in lineage

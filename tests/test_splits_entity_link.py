@@ -95,6 +95,29 @@ def test_entity_pool_topk_and_linking(spark):
     )
 
 
+def test_link_entities_empty_pool_holds_no_python_rdd(spark):
+    """An empty pool keeps every triple unlinked, and neither the result's
+    lineage nor its plan (the broadcast side included) holds Python-built
+    data: pyspark skips Arrow for a zero-row pandas frame, so the rank
+    table must come from the JVM."""
+    tr = spark.range(4).select(
+        F.col("id").alias("event_id"),
+        F.when(F.col("id") < 3, "attendee").otherwise("location").alias("pred"),
+        F.concat(F.lit("n"), F.col("id").cast("string")).alias("obj"),
+    )
+    pool = spark.range(0).select(
+        F.lit("n0").alias("name"), F.lit(1).cast("bigint").alias("cnt")
+    )
+    linked = link_entities(tr, pool, "attendee")
+    assert linked.schema["entity_rank"].dataType.simpleString() == "int"
+    assert sorted(map(tuple, linked.collect())) == [
+        (i, "attendee" if i < 3 else "location", f"n{i}", None) for i in range(4)
+    ]
+    qe = linked._jdf.queryExecution()
+    assert "LogicalRDD" not in qe.optimizedPlan().toString()
+    assert "PythonRDD" not in qe.toRdd().toDebugString()
+
+
 def test_split_assignment_deterministic_and_disjoint(spark):
     df = spark.range(5000).withColumnRenamed("id", "k")
     s1 = assign_split(df, "k")
