@@ -106,19 +106,22 @@ def connected_components(
 
     TWO physical paths behind one semantics:
 
-    * edge count ≤ ``driver_threshold`` → ONE count job + one Arrow
-      collect + driver union-find. A curation near-dup pair list is
-      usually tiny relative to the corpus (pairs, not documents), and the
-      star rounds' per-round job overhead (checkpoint + convergence action
-      × O(log²n) rounds) dominates small graphs by 10-50×. The collect is
-      ``toPandas`` (Arrow batches → two primitive arrays, ~16 bytes/edge ≈
-      16 MB at the 10⁶ threshold), NOT ``collect()`` whose per-Row objects
-      cost ~100+ bytes each (round-3 advice); the count probe reads the
-      already-checkpointed partitions, so it is a cheap scan, not a
-      recompute of the upstream lineage.
-    * larger → alternating large-star/small-star rounds (the 100-TB path:
-      edge-list-only shuffles, no driver materialization). Set
-      ``driver_threshold=0`` to force it (tests do).
+    * edge count ≤ ``driver_threshold`` → ONE Arrow collect of at most
+      ``driver_threshold + 1`` edges, which both decides the path and
+      brings the edges back, + driver union-find. A curation near-dup pair
+      list is usually tiny relative to the corpus (pairs, not documents),
+      and the star rounds' per-round job overhead (checkpoint +
+      convergence action × O(log²n) rounds) dominates small graphs by
+      10-50×. The collect is ``toPandas`` (Arrow batches → two primitive
+      arrays, ~16 bytes/edge ≈ 16 MB at the 10⁶ threshold), NOT
+      ``collect()`` whose per-Row objects cost ~100+ bytes each (round-3
+      advice); it reads the already-checkpointed partitions, not the
+      upstream lineage.
+    * larger (the collect came back with ``driver_threshold + 1`` edges,
+      which are dropped) → alternating large-star/small-star rounds (the
+      100-TB path: edge-list-only shuffles, no driver materialization).
+      Set ``driver_threshold=0`` to force it without the collect (tests
+      do).
 
     ``checkpoint_dir``: when set, per-round lineage truncation is DURABLE
     (``sources.tables.materialize``) — on a real cluster localCheckpoint
@@ -132,16 +135,16 @@ def connected_components(
     graph), but the failure must be loud. ``return_rounds`` additionally
     returns the number of star rounds executed (0 on the driver path).
     """
-    # materialize the canonical edge set ONCE up front: the count probe,
-    # the driver collect, and round 1 of the star path all read the
-    # checkpoint instead of re-executing the (possibly expensive — e.g. a
-    # full MinHash near-dup join) upstream lineage
+    # materialize the canonical edge set ONCE up front: the driver collect
+    # and round 1 of the star path both read the checkpoint instead of
+    # re-executing the (possibly expensive — e.g. a full MinHash near-dup
+    # join) upstream lineage
     canon = materialize(
         _canonical(edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))),
         checkpoint_dir,
     )
-    if driver_threshold and canon.count() <= driver_threshold:
-        pdf = canon.toPandas()
+    pdf = canon.limit(driver_threshold + 1).toPandas() if driver_threshold else None
+    if pdf is not None and len(pdf) <= driver_threshold:
         comp = _driver_union_find(
             list(zip(pdf["u"].tolist(), pdf["v"].tolist()))
         )

@@ -2,7 +2,7 @@
 
 The `north_rule` requires batch-with-resume: each pipeline stage writes its
 output table plus a ``_lineage.json`` manifest recording the input
-fingerprint, row count, per-partition row counts, and read schema — the
+fingerprint, row count, per-file row counts, and read schema — the
 analog of the reference's HF ``checkpoint-*`` dirs
 (``simple_output/checkpoint-277``), but content-addressed instead of
 step-numbered.
@@ -16,13 +16,14 @@ that the next run rebuilds. Like a ``checkpoint-*`` dir, a stage appears
 whole or not at all. Whether a previous run is trusted at all is the
 caller's choice (``run_pipeline(resume=False)`` trusts nothing).
 
-Per-partition metrics come from the parquet footers, or from a
-``spark_partition_id()`` grouping — an executor-side aggregation, not a
-driver loop — when the stage wrote many files.
+The manifest records what the write committed: per-file row counts read
+from the footers of the parquet files on disk (no Spark job), and the
+schema the stage is read back with.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
@@ -38,50 +39,6 @@ MANIFEST_NAME = "_lineage.json"
 # each file the committer creates costs a forked `chmod` (~13 ms on a
 # 4-core VM), and its .crc sidecar a second one.
 _NO_SUCCESS_MARKER = ("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-
-
-def partition_metrics(df: DataFrame) -> list[dict]:
-    rows = (
-        df.groupBy(F.spark_partition_id().alias("pid"))
-        .agg(F.count("*").alias("rows"))
-        .collect()
-    )
-    return [{"partition": r["pid"], "rows": r["rows"]} for r in rows]
-
-
-# footer-walk cutoff: below this many files the driver reads parquet
-# footers directly (~1 ms each); above it the distributed aggregation wins
-_FOOTER_WALK_MAX_FILES = 256
-
-
-def written_partition_metrics(spark: SparkSession, path: str) -> list[dict]:
-    """Per-partition row counts of a JUST-WRITTEN stage (round-6): for the
-    common small-output case, read the parquet FOOTERS driver-side (row
-    counts are manifest metadata — no Spark job, no data scan) with one
-    entry per file, which is exactly the read-partition granularity at
-    these sizes. Falls back to the executor-side
-    ``spark_partition_id``-grouped aggregation when the stage wrote more
-    than ``_FOOTER_WALK_MAX_FILES`` files — at cluster scale a driver loop
-    over every file is the anti-pattern the original design avoided, and
-    the distributed count reads only footer-backed metadata columns
-    anyway. Contract unchanged: ≥1 entries whose rows sum to the stage
-    total (pinned by tests/test_pipeline_resume.py)."""
-    import glob
-
-    files = sorted(
-        glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-    )
-    if files and len(files) <= _FOOTER_WALK_MAX_FILES:
-        try:
-            import pyarrow.parquet as pq
-
-            return [
-                {"partition": i, "rows": pq.ParquetFile(f).metadata.num_rows}
-                for i, f in enumerate(files)
-            ]
-        except Exception:
-            pass
-    return partition_metrics(spark.read.parquet(path))
 
 
 def _written_schema(df: DataFrame, partition_by: list[str]) -> str:
@@ -113,10 +70,14 @@ def write_stage(
     killed jobs' ``_temporary`` and ``.spark-staging-*`` leftovers too.
     ``_lineage.json`` starts with ``_`` so partition discovery ignores it.
 
-    The manifest's ``schema`` comes from ``df`` (``_written_schema``) and,
-    for small outputs, its row counts from the parquet footers, so the
-    manifest costs no Spark job; ``read_stage`` then reads the stage back
-    with that schema instead of inferring it."""
+    The manifest's ``schema`` comes from ``df`` (``_written_schema``) and
+    its row counts, one entry per committed file, from the footers of the
+    parquet files on disk (~1 ms a file; ``glob``'s ``**`` skips the
+    ``.spark-staging-*`` directories). A write of no rows may commit no
+    file: then ``rows`` is 0 and ``partitions`` is empty. Neither costs a
+    Spark job, and ``read_stage`` reads the stage back with that schema."""
+    import pyarrow.parquet as pq
+
     path = os.path.join(out_dir, stage)
     partition_by = partition_by or []
     try:
@@ -130,22 +91,23 @@ def write_stage(
         # write (guide §6, the write.distribution-mode=hash analog): an
         # unshuffled write emits up to tasks × values files — measured 96
         # tiny files for the 8-pred edges stage at sf0.1 — while one
-        # exchange makes it one file per partition value. The known trade
-        # (a single giant partition value serializes into one task) is the
-        # standard one; callers with that shape pass partition_by=None and
-        # lay out the data themselves.
+        # exchange makes it one file per partition value, at the standard
+        # cost that a single giant partition value serializes into one task
         df = df.repartition(*[F.col(c) for c in partition_by])
     df.write.mode("overwrite").option(*_NO_SUCCESS_MARKER).partitionBy(
         *partition_by
     ).parquet(path)
 
-    # footer-backed metrics: no post-write Spark job for small outputs
-    parts = written_partition_metrics(df.sparkSession, path)
+    pattern = os.path.join(glob.escape(path), "**", "*.parquet")
+    files = sorted(glob.glob(pattern, recursive=True))
+    parts = [
+        {"partition": i, "rows": pq.ParquetFile(f).metadata.num_rows}
+        for i, f in enumerate(files)
+    ]
     m = {
         "stage": stage,
         "input_fingerprint": input_fingerprint,
         "partition_by": partition_by,
-        "complete": True,
         "rows": sum(p["rows"] for p in parts),
         "partitions": parts,
         "written_at": datetime.now(timezone.utc).isoformat(),
@@ -164,24 +126,19 @@ def read_manifest(out_dir: str, stage: str) -> dict | None:
 
 
 def stage_is_complete(out_dir: str, stage: str, input_fingerprint: str) -> bool:
+    """True when the stage's manifest is present and holds this
+    fingerprint: ``write_stage`` writes the manifest last, so its presence
+    means the write committed."""
     m = read_manifest(out_dir, stage)
-    return (
-        m is not None
-        and m.get("input_fingerprint") == input_fingerprint
-        and m.get("complete", True)
-    )
+    return m is not None and m["input_fingerprint"] == input_fingerprint
 
 
 def read_stage(spark: SparkSession, out_dir: str, stage: str) -> DataFrame:
-    """Read a stage with the schema its manifest recorded. Without a schema
-    the reader merges the parquet footers in a one-task Spark job (60-80 ms
-    against ~10 ms); a manifest that has no ``schema`` still reads, by
-    inference."""
-    m = read_manifest(out_dir, stage)
-    reader = spark.read
-    if m and m.get("schema"):
-        reader = reader.schema(StructType.fromDDL(m["schema"]))
-    return reader.parquet(os.path.join(out_dir, stage))
+    """Read a stage with the schema its manifest recorded: no footer-merge
+    job (60-80 ms against ~10 ms), and a stage that committed no file
+    reads as empty instead of failing schema inference."""
+    schema = StructType.fromDDL(read_manifest(out_dir, stage)["schema"])
+    return spark.read.schema(schema).parquet(os.path.join(out_dir, stage))
 
 
 def write_stage_partitioned_resumable(

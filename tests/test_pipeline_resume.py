@@ -6,16 +6,19 @@ import subprocess
 import sys
 import threading
 import uuid
+from datetime import datetime
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.util import InheritableThread
+from specs import HOSTILE_TEXTS
 
 from calendar_event_entity_extraction_spark.plans.pipeline import (
     STAGES,
     input_fingerprint,
     run_pipeline,
 )
+from calendar_event_entity_extraction_spark.schemas import TRANSCRIPT_SCHEMA
 from calendar_event_entity_extraction_spark.sources import manifest as mf
 from calendar_event_entity_extraction_spark.sources.tables import read_transcripts
 from calendar_event_entity_extraction_spark.synth import keys_df, transcripts_from_keys
@@ -192,22 +195,6 @@ def test_stage_writes_skip_success_marker(fresh_build):
         assert not [n for n in names if "_SUCCESS" in n], (stage, names)
 
 
-def test_manifest_without_schema_reads_and_resumes(spark, fresh_copy):
-    """Manifests written before the ``schema`` key was used by the reader
-    (or hand-edited ones without it) still read and resume."""
-    out = fresh_copy
-    before = {s: _digest(mf.read_stage(spark, out, s)) for s in STAGES}
-    for stage in ("events", "edges"):
-        m = mf.read_manifest(out, stage)
-        del m["schema"]
-        mf.write_manifest(out, stage, m)
-        assert _digest(mf.read_stage(spark, out, stage)) == before[stage]
-    tr = transcripts_from_keys(keys_df(spark, N))
-    m = run_pipeline(spark, tr, out)
-    assert all(man.get("resumed") for man in m.values())
-    assert {s: _digest(mf.read_stage(spark, out, s)) for s in STAGES} == before
-
-
 def test_resume_with_changed_top_k_rebuilds_pool_stages(spark, fresh_copy):
     """top_k shapes entity_pools and edges but not events, triples or
     nodes (built from events + triples): a resume under another top_k must
@@ -261,17 +248,16 @@ def test_interrupted_manifest_write_rebuilds_on_resume(
 
 
 def test_killed_partition_resume_leftovers_rebuild(spark, fresh_build, fresh_copy):
-    """What a write killed under per-partition resume left behind: an
-    incomplete manifest with the same fingerprint and no partition done,
-    and the killed job's ``.spark-staging-*`` directory. The resume
-    rebuilds the stage whole and clears the leftover."""
+    """What a write killed mid-job leaves behind: a cleared stage with no
+    manifest and the killed job's ``.spark-staging-*`` directory. The
+    resume rebuilds the stage whole and clears the leftover."""
     out = fresh_copy
-    m = mf.read_manifest(out, "edges")
-    mf.write_manifest(out, "edges", {**m, "complete": False, "partitions_done": []})
+    fingerprint = mf.read_manifest(out, "edges")["input_fingerprint"]
+    shutil.rmtree(os.path.join(out, "edges"))
     staging = os.path.join(out, "edges", ".spark-staging-x")
     os.makedirs(staging)
     open(os.path.join(staging, "part-0.parquet"), "wb").close()
-    assert not mf.stage_is_complete(out, "edges", m["input_fingerprint"])
+    assert not mf.stage_is_complete(out, "edges", fingerprint)
 
     tr = transcripts_from_keys(keys_df(spark, N))
     run = run_pipeline(spark, tr, out)
@@ -281,6 +267,21 @@ def test_killed_partition_resume_leftovers_rebuild(spark, fresh_build, fresh_cop
     )
     names = os.listdir(os.path.join(out, "edges"))
     assert not [n for n in names if n.startswith(".spark-staging")], names
+
+
+def test_hostile_text_builds_and_resumes_an_empty_graph(spark, tmp_path):
+    """No hostile text is a calendar request, so the partitioned ``edges``
+    and ``nodes`` stages commit no parquet file: the build still writes
+    all five manifests, and a second call resumes all five."""
+    ts = datetime(2025, 6, 15)
+    rows = [(f"h{i}", 0, "user", t, None, ts) for i, t in enumerate(HOSTILE_TEXTS)]
+    tr = spark.createDataFrame([r for r in rows if r[3] is not None], TRANSCRIPT_SCHEMA)
+    out = str(tmp_path / "kg")
+    m = run_pipeline(spark, tr, out)
+    assert all(mf.read_manifest(out, s) for s in STAGES)
+    assert m["edges"]["rows"] == m["nodes"]["rows"] == 0
+    assert mf.read_stage(spark, out, "edges").count() == 0
+    assert _resumed(run_pipeline(spark, tr, out)) == {s: True for s in STAGES}
 
 
 def test_resume_false_rebuilds_every_stage(spark, fresh_copy, monkeypatch):

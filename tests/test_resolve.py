@@ -2,11 +2,14 @@
 
 import pytest
 from pyspark.sql import functions as F
+from test_pipeline_resume import _count_jobs
 
 from calendar_event_entity_extraction_spark.operators.resolve import (
+    _canonical,
     cluster_representatives,
     connected_components,
 )
+from calendar_event_entity_extraction_spark.sources.tables import materialize
 
 
 def _union_find(edges):
@@ -143,3 +146,27 @@ def test_driver_path_labels_hold_no_python_rdd(spark, typ, edges):
     assert {r["node"]: r["comp"] for r in labels.collect()} == _union_find(edges)
     lineage = labels._jdf.queryExecution().toRdd().toDebugString()
     assert "PythonRDD" not in lineage
+
+
+def test_driver_path_decides_and_collects_in_one_job(spark):
+    """Past the checkpoint of the canonical edges, the driver path runs
+    ONE job: a collect of at most ``driver_threshold + 1`` edges both
+    picks the path and brings the edges back (no count job first)."""
+    df = spark.createDataFrame([(i, i + 1) for i in range(3000)], "src long, dst long")
+    uv = df.select(F.col("src").alias("u"), F.col("dst").alias("v"))
+    _, checkpoint_jobs = _count_jobs(spark, lambda: materialize(_canonical(uv)))
+    _, cc_jobs = _count_jobs(spark, lambda: connected_components(df, "src", "dst"))
+    assert cc_jobs == checkpoint_jobs + 1, (cc_jobs, checkpoint_jobs)
+
+
+@pytest.mark.parametrize("thresh, star_path", [(3, True), (4, False)])
+def test_driver_threshold_boundary(spark, thresh, star_path):
+    """A graph of exactly ``driver_threshold`` canonical edges takes the
+    driver path; one edge more takes the star rounds. Both label alike."""
+    edges = [(1, 2), (2, 3), (3, 1), (2, 1), (7, 8)]  # 4 canonical edges
+    df = spark.createDataFrame(edges, "src long, dst long")
+    labels, rounds = connected_components(
+        df, "src", "dst", return_rounds=True, driver_threshold=thresh
+    )
+    assert (rounds > 0) == star_path
+    assert {r["node"]: r["comp"] for r in labels.collect()} == _union_find(edges)

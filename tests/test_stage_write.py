@@ -44,15 +44,23 @@ def test_complete_manifest_rewrites_every_partition(spark, tmp_path):
     mf.write_stage(df, out, "edges", "fp", partition_by=["pred"])
     changed = df.withColumn("val", F.lit(-1).cast("long"))
     m = mf.write_stage(changed, out, "edges", "fp", partition_by=["pred"])
-    assert m["complete"] and m["rows"] == 400
+    assert m["rows"] == 400
     vals = mf.read_stage(spark, out, "edges").select("val").distinct().collect()
     assert [r[0] for r in vals] == [-1]
 
 
-def test_manifest_partition_metrics_sum_to_rows(spark, tmp_path):
+@pytest.mark.parametrize("n", [400, 0])
+def test_manifest_partition_metrics_sum_to_rows(spark, tmp_path, n):
+    """The per-file counts sum to the rows written; a partitioned write of
+    no rows commits no file, records none, and reads back empty."""
     out = str(tmp_path)
-    m = mf.write_stage(_df(spark), out, "s", "fp", partition_by=["pred"])
-    assert sum(p["rows"] for p in m["partitions"]) == m["rows"] == 400
+    df = _df(spark).filter(F.col("id") < n)
+    m = mf.write_stage(df, out, "s", "fp", partition_by=["pred"])
+    assert sum(p["rows"] for p in m["partitions"]) == m["rows"] == n
+    assert len(m["partitions"]) == min(n, 4)
+    back = mf.read_stage(spark, out, "s")
+    assert back.count() == n
+    assert back.columns == ["id", "val", "pred"]
 
 
 def test_null_partition_value_round_trips(spark, tmp_path):
