@@ -1118,7 +1118,7 @@ SELECT query_id, rank, neighbor_id FROM r WHERE rank <= 5
 def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The multimodal decode/featurize plumbing as an oracle-checked query:
     documents become binary media payloads, the Arrow ``mapInPandas`` stage
-    runs the (deterministic) fake decoder, and DuckDB recomputes byte length
+    runs the deterministic digest featurizer, and DuckDB recomputes byte length
     + md5 checksum directly — a hash match proves the batch plumbing
     (schema, binary round-trip, kernel batching), with only the real
     image/audio kernels stubbed (no codec libs in this environment)."""
@@ -1132,7 +1132,7 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("kind"),
         F.encode("text", "utf-8").alias("payload"),
     )
-    return extract_features(media, fake=True).select(
+    return extract_features(media).select(
         "media_id", "kind", "n_bytes", "checksum"
     )
 

@@ -32,8 +32,6 @@ MONTHS_FULL = [
     "July", "August", "September", "October", "November", "December",
 ]
 MONTHS_3 = [m[:3] for m in MONTHS_FULL]
-MONTH_ALT = "|".join(MONTHS_FULL)
-MON3_ALT = "|".join(MONTHS_3)
 # exact month words (full names first, then abbrevs incl. "Sept") — partial
 # prefix matches like "Mar(y)" or "Mar(keting)" must never count as months
 MONTH_WORD = "(?:" + "|".join(MONTHS_FULL + ["Sept"] + MONTHS_3) + ")"
@@ -74,9 +72,9 @@ DUR_RE = (
 
 # relative-date phrases (G3/G11) resolved against a pinned reference "now" —
 # the reference resolves against datetime.now() (faker_synth.py:100-123,
-# create_enhanced_training_data.py:179-210); an engine must take the
-# reference instant as a job parameter instead. ``ref_hour`` pins the
-# time-of-day so "in N hours" resolves to a date deterministically.
+# create_enhanced_training_data.py:179-210); an engine must pin the
+# reference instant instead. DEFAULT_REF_HOUR pins the time-of-day so
+# "in N hours" resolves to a date deterministically.
 DEFAULT_REF_TODAY = "2025-06-15"
 DEFAULT_REF_HOUR = 9
 _WEEKDAYS = ["monday", "tuesday", "wednesday", "thursday", "friday"]
@@ -132,12 +130,9 @@ def _match_then_group(text: Column, pat: str, groups: list[int]) -> list[Column]
     return [_ne(F.regexp_extract(m, pat, i)) for i in groups]
 
 
-def date_norm_col(
-    text: Column,
-    ref_today: str = DEFAULT_REF_TODAY,
-    ref_hour: int = DEFAULT_REF_HOUR,
-) -> Column:
-    """First date mention → normalized gold form (null if none).
+def date_norm_col(text: Column) -> Column:
+    """First date mention → normalized gold form (null if none); relative
+    phrases resolve against ``DEFAULT_REF_TODAY`` / ``DEFAULT_REF_HOUR``.
 
     The style cascade is gated behind one cheap guard regex: rows with no
     digit / relative keyword (most transcript turns) skip all styles.
@@ -160,8 +155,9 @@ def date_norm_col(
     spaced = _dmy(sp_d, _month_num(F.substring(sp_mon, 1, 3)), sp_y)
     # dayfirst: "5-4-2024" → 05/04/2024
     dash = _split_dmy(_ne(F.regexp_extract(text, DASH_RE, 0)), "-")
-    # year-less "10th May" → NEXT occurrence of (day, month) from ref_today
-    ref = _dt.date.fromisoformat(ref_today)
+    # year-less "10th May" → NEXT occurrence of (day, month) from the
+    # reference date
+    ref = _dt.date.fromisoformat(DEFAULT_REF_TODAY)
     ny_dg, ny_mon = _match_then_group(text, DMON_NOYEAR_RE, [1, 2])
     ny_d = ny_dg.cast("int")
     ny_m = _month_num(F.substring(ny_mon, 1, 3)).cast("int")
@@ -176,14 +172,14 @@ def date_norm_col(
     phrase_off = F.coalesce(
         *[
             F.when(rel_phrase == p, F.lit(off))
-            for p, off in _rel_offset_map(ref_today).items()
+            for p, off in _rel_offset_map(DEFAULT_REF_TODAY).items()
         ]
     )
-    # "in N hours": day offset = (ref_hour + N) // 24 (rolls past midnight)
+    # "in N hours": day offset = (ref hour + N) // 24 (rolls past midnight)
     in_h = _ne(F.regexp_extract(text, IN_HOURS_RE, 1)).cast("int")
-    in_h_off = F.floor((in_h + F.lit(ref_hour)) / F.lit(24)).cast("int")
+    in_h_off = F.floor((in_h + F.lit(DEFAULT_REF_HOUR)) / F.lit(24)).cast("int")
     rel_off = F.coalesce(phrase_off, in_h_off)
-    rel_date = F.date_add(F.lit(ref_today).cast("date"), rel_off)
+    rel_date = F.date_add(F.lit(DEFAULT_REF_TODAY).cast("date"), rel_off)
     rel = F.when(rel_off.isNotNull(), F.date_format(rel_date, "dd/MM/yyyy"))
     return F.when(
         text.rlike(r"[0-9]|today|tomorrow|next "),

@@ -27,7 +27,6 @@ from pyspark.sql import functions as F
 
 from ..functions.datetime_norm import (
     DATE_ANY_RE,
-    MON3_ALT,
     MONTH_WORD,
     TIME_ANY_RE,
     date_norm_col,
@@ -48,7 +47,13 @@ REC_ALT = (
 )
 REC_RE = rf"\b({REC_ALT})\b"
 
-NAME = r"[A-Z][a-z]+"
+# Java's regex engine recurses once per repetition of a variable-length
+# group, so an unbounded ``(?:…)+`` run over ~100 kB of text ("Alex, Alex,
+# …", "4pm 4pm …", "Alex Alex …") overflows the executor thread's stack,
+# and in local mode that StackOverflowError shuts the whole JVM down. Each
+# such group in the cascade repeats at most _MAX_REPEAT times: a longer
+# name chain, leading date/time run or capitalized phrase is cut there.
+_MAX_REPEAT = 64
 
 # clause markers that end a free-text span (action / attendee / location)
 # " for " stops only before a duration / date / "it" — gold actions run
@@ -91,7 +96,7 @@ WITH_RE = rf"\b(?:together with|with|w/) (?!{MONTH_WORD}\.?,? ?\d)(.+?){_ATT_STO
 # bare name LIST: a comma-joined chain of ≥2 Capitalized names (a lone bare
 # token could equally be a location, so singles need the name pool)
 NAME_NM = rf"(?!{MONTH_WORD} \d)[A-Z][a-z]+"
-BARE_RE = rf"({NAME_NM}(?:, {NAME_NM})+(?:,? and {NAME_NM})?)\b"
+BARE_RE = rf"({NAME_NM}(?:, {NAME_NM}){{1,{_MAX_REPEAT}}}(?:,? and {NAME_NM})?)\b"
 
 # location: at/in/by [the] X (gold drops the article, 100:8 in the corpus;
 # a small per-noun train-split majority KEEPS it \u2014 THE_KEEP_NOUNS below).
@@ -169,7 +174,7 @@ def action_col(text: Column, name_pool: list[str] | None = None) -> Column:
     # brainstorming …" → action "brainstorming")
     lead = (
         r"^(?:(?:\d{4}-\d{2}-\d{2}|\d{1,2}:[0-5]\d|\d{1,2}/[0-9/]+|\d{1,2}[apAP]\.?[mM],?|\d{1,2}(?:st|nd|rd|th)?,?"
-        rf"|{MONTH_WORD}\.?,?(?=[\s ]+\d)|\d{{4}},?|[apAP]\.?[mM],?)[\s ]+)*"
+        rf"|{MONTH_WORD}\.?,?(?=[\s ]+\d)|\d{{4}},?|[apAP]\.?[mM],?)[\s ]+){{0,{_MAX_REPEAT}}}"
     )
     stripped = F.regexp_replace(text, lead, "")
     pat = ACTION_RE
@@ -294,7 +299,8 @@ def location_col(
             # location; trailing guards block only date/time digits (9:30,
             # 16/11, 2024-…) so a following duration ("1hr") no longer kills
             # the match
-            r"([A-Z][A-Za-z0-9\u00c0-\u017e-]*(?: [A-Z][A-Za-z0-9\u00c0-\u017e]*)+"
+            r"([A-Z][A-Za-z0-9\u00c0-\u017e-]*"
+            rf"(?: [A-Z][A-Za-z0-9\u00c0-\u017e]*){{1,{_MAX_REPEAT}}}"
             r"(?: \d{1,3}(?![\w:/.-]))?)\b(?! ?\d+[:/-])(?! ?\d{4}\b)(?!,)",
             1,
         )

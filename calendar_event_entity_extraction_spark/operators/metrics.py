@@ -21,18 +21,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import JAVA_WS_CLASS
-
-FIELDS = ["action", "date", "time", "attendees", "location", "duration", "recurrence", "notes"]
+from ..schemas import TARGET_KEYS
 
 
 def join_pred_gold(pred: DataFrame, gold: DataFrame) -> DataFrame:
     """Full-outer equi-join on (conv_id, turn_idx); missing predictions /
     spurious detections surface as all-null sides."""
     p = pred.select(
-        "conv_id", "turn_idx", *[F.col(f).alias(f"p_{f}") for f in FIELDS]
+        "conv_id", "turn_idx", *[F.col(f).alias(f"p_{f}") for f in TARGET_KEYS]
     )
     g = gold.select(
-        "conv_id", "turn_idx", *[F.col(f).alias(f"g_{f}") for f in FIELDS]
+        "conv_id", "turn_idx", *[F.col(f).alias(f"g_{f}") for f in TARGET_KEYS]
     )
     return p.join(g, ["conv_id", "turn_idx"], "full_outer")
 
@@ -41,9 +40,9 @@ def field_metrics(pred: DataFrame, gold: DataFrame) -> DataFrame:
     """One-row DataFrame: per-field accuracy (reference semantics), per-field
     precision/recall, and exact_match. Single partial+final hash aggregate."""
     j = join_pred_gold(pred, gold)
-    eqs = [F.col(f"p_{f}").eqNullSafe(F.col(f"g_{f}")) for f in FIELDS]
+    eqs = [F.col(f"p_{f}").eqNullSafe(F.col(f"g_{f}")) for f in TARGET_KEYS]
     aggs = []
-    for f, eq in zip(FIELDS, eqs):
+    for f, eq in zip(TARGET_KEYS, eqs):
         p_nn = F.col(f"p_{f}").isNotNull()
         g_nn = F.col(f"g_{f}").isNotNull()
         aggs.append(F.avg(eq.cast("double")).alias(f"{f}_accuracy"))
@@ -63,7 +62,7 @@ def field_metrics(pred: DataFrame, gold: DataFrame) -> DataFrame:
         F.when(eqs[0] & eqs[1] & eqs[2] & eqs[3] & eqs[4] & eqs[5] & eqs[6] & eqs[7], 1.0)
         .otherwise(0.0)
     ).alias("exact_match")
-    micro = sum(eq.cast("double") for eq in eqs) / F.lit(float(len(FIELDS)))
+    micro = sum(eq.cast("double") for eq in eqs) / F.lit(float(len(TARGET_KEYS)))
     return j.agg(exact, F.avg(micro).alias("field_accuracy"), *aggs)
 
 
@@ -119,7 +118,7 @@ def field_metrics_canonical_counts_paired(j: DataFrame) -> DataFrame:
     construction, ``extract.py:444``), the full-outer self-join is identity
     pairing, so deriving both column families in ONE projection of ONE
     extraction lineage yields byte-identical counts with half the work."""
-    eqs = {f: canonical_eq(f) for f in FIELDS}
+    eqs = {f: canonical_eq(f) for f in TARGET_KEYS}
     all_eq = None
     for eq in eqs.values():
         all_eq = eq if all_eq is None else (all_eq & eq)
@@ -148,7 +147,7 @@ def field_metrics_counts_paired(j: DataFrame) -> DataFrame:
     etc. themselves. Input is a paired ``p_<field>`` / ``g_<field>``
     DataFrame (see :func:`field_metrics_canonical_counts_paired` for when
     identity pairing replaces :func:`join_pred_gold`)."""
-    eqs = {f: F.col(f"p_{f}").eqNullSafe(F.col(f"g_{f}")) for f in FIELDS}
+    eqs = {f: F.col(f"p_{f}").eqNullSafe(F.col(f"g_{f}")) for f in TARGET_KEYS}
     all_eq = None
     for eq in eqs.values():
         all_eq = eq if all_eq is None else (all_eq & eq)

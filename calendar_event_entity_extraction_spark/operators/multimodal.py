@@ -20,10 +20,10 @@ Two decode layers:
   that don't ship here; headers/dimensions/durations are the honest real
   parse, like PIL's lazy ``Image.open().size`` or a duration probe.)
 * :func:`extract_features` — the generic featurize plumbing for formats
-  whose codecs genuinely need external libs (video): the deterministic
-  ``fake=True`` kernel exercises schema/batching/binary round-trip
-  (oracle row ``multimodal_features``); ``fake=False`` runs the five real
-  stdlib decoders and remains the documented plug-in point for the rest.
+  whose codecs genuinely need external libs (video): a deterministic
+  digest kernel that exercises schema/batching/binary round-trip (oracle
+  row ``multimodal_features``). A library decoder plugs in as one more
+  kind in :func:`decode_media_features`.
 """
 
 from __future__ import annotations
@@ -35,27 +35,6 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("kind", T.StringType(), False),  # image | audio | video
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("width", T.IntegerType(), True),
-                    T.StructField("height", T.IntegerType(), True),
-                    T.StructField("sample_rate", T.IntegerType(), True),
-                    T.StructField("n_frames", T.IntegerType(), True),
-                ]
-            ),
-            True,
-        ),
-    ]
-)
 
 FEATURE_SCHEMA = (
     "media_id long, kind string, n_bytes long, checksum string, "
@@ -63,99 +42,20 @@ FEATURE_SCHEMA = (
 )
 
 
-def extract_features(media: DataFrame, fake: bool = True) -> DataFrame:
-    """Decode + featurize media payloads via mapInPandas (Arrow batches).
+def extract_features(media: DataFrame) -> DataFrame:
+    """Featurize media payloads via mapInPandas (Arrow batches): byte
+    length, md5 checksum and an 8-float feature vector from the digest.
 
     Kernel contract is BATCH-LEVEL, never per-element pandas ``.map``: the
     kernel receives one Arrow batch as columnar arrays and must return
     columnar arrays, doing its numeric work in vectorized numpy/pandas ops
     (a real decoder does its unavoidable per-item C call — PIL decode,
     libav demux — then post-processes the whole batch as one ndarray).
-    The fake path demonstrates the shape: lengths via the vectorized
-    ``.str.len()``, one digest pass per batch whose bytes are featurized by
-    a single numpy reshape/divide over the entire batch.
-
-    With ``fake=False`` the kernel runs the REAL stdlib decoders (RIFF/WAVE
-    PCM, binary PPM, 24-bpp BMP — the same parsers `decode_media_features`
-    uses) and featurizes the decoded content: images → [width, height,
-    mean_r, mean_g, mean_b]/255-scaled, audio → [sample_rate/48000,
-    n_samples, mean |amplitude|/32768], jpeg → [width, height, channels]
-    (dimension parse via the SOF marker scan; the entropy-coded raster
-    needs a DCT/Huffman lib that doesn't ship here), mp3 →
-    [sample_rate/48000, decoded-sample count, channels + bitrate/1000]
-    (frame-header walk; the granules need Huffman/IMDCT). A payload whose
-    ``kind`` has no stdlib codec (video) raises a ValueError naming the
-    kind; plugging a library decoder in means adding one `elif` to this
-    kernel.
+    Here lengths come from the vectorized ``.str.len()``, and one digest
+    pass per batch is featurized by a single numpy reshape/divide over the
+    entire batch.
     """
     import numpy as np
-
-    if not fake:
-
-        def real_op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                feats, checks, lens = [], [], []
-                for payload, kind in zip(pdf["payload"], pdf["kind"]):
-                    b = bytes(payload) if payload is not None else b""
-                    checks.append(hashlib.md5(b).hexdigest())
-                    lens.append(len(b))
-                    if kind == "wav":
-                        sr, ns, amp = _parse_wav(b)
-                        feats.append(
-                            np.array(
-                                [sr / 48000.0, float(ns), amp / max(ns, 1) / 32768.0],
-                                dtype="float32",
-                            )
-                        )
-                    elif kind in ("ppm", "bmp"):
-                        parse = _parse_ppm if kind == "ppm" else _parse_bmp
-                        w, h, r, g, bl = parse(b)
-                        n_px = max(w * h, 1)
-                        feats.append(
-                            np.array(
-                                [
-                                    float(w),
-                                    float(h),
-                                    r / n_px / 255.0,
-                                    g / n_px / 255.0,
-                                    bl / n_px / 255.0,
-                                ],
-                                dtype="float32",
-                            )
-                        )
-                    elif kind == "jpeg":
-                        w, h, ch = _parse_jfif(b)
-                        feats.append(
-                            np.array([float(w), float(h), float(ch)], dtype="float32")
-                        )
-                    elif kind == "mp3":
-                        sr, nf, ch, br = _parse_mp3(b)
-                        feats.append(
-                            np.array(
-                                [
-                                    sr / 48000.0,
-                                    float(nf * MP3_SAMPLES_PER_FRAME),
-                                    float(ch) + br / 1000.0,
-                                ],
-                                dtype="float32",
-                            )
-                        )
-                    else:
-                        raise ValueError(
-                            f"no stdlib codec for media kind {kind!r} — "
-                            "add a library decoder branch to this kernel"
-                        )
-                yield pd.DataFrame(
-                    {
-                        "media_id": pdf["media_id"].to_numpy(),
-                        "kind": pdf["kind"].to_numpy(),
-                        "n_bytes": np.array(lens, dtype="int64"),
-                        "checksum": checks,
-                        "feat": feats,
-                    }
-                )
-
-        return media.mapInPandas(real_op, schema=FEATURE_SCHEMA)
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

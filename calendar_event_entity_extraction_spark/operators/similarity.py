@@ -7,6 +7,12 @@
   corpus; queries probe only their bucket. Hyperplanes are derived
   deterministically from md5 of (plane index, dimension index), so the
   bucketing is reproducible with no RNG state.
+* IVF-flat variant: queries probe their nearest centroid cells.
+
+The three top-k operators differ only in which (query, neighbor) pairs they
+score; they share one ranking (``_rank_topk``), whose tie-break contract the
+``ann_topk``, ``ann_lsh_topk`` and ``ann_ivf_topk`` oracle rows pin.
+
 * Embedding-cosine near-duplicate pairs: multi-band hyperplane signatures
   (MinHash-style banding) with capped buckets, verified by exact cosine.
 """
@@ -18,6 +24,29 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine_col
+
+
+def _rank_topk(
+    corpus: DataFrame, queries: DataFrame, on: str | None, k: int
+) -> DataFrame:
+    """The ranking every top-k operator shares; the operators differ only
+    in the candidate pairs, which are ``corpus`` (neighbor_id, c_vec, …)
+    joined to the broadcast ``queries`` (query_id, q_vec, …) on the column
+    ``on`` (None: every pair). A query is never its own neighbor. Each
+    query keeps its ``k`` best neighbors by cosine quantized to 9 decimals,
+    ties broken on the lower ``neighbor_id``, and reports the cosine
+    rounded to 6: (query_id, rank, neighbor_id, cos)."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc(F.round("cos", 9)), F.asc("neighbor_id")
+    )
+    return (
+        corpus.join(F.broadcast(queries), on)
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .withColumn("cos", cosine_col(F.col("q_vec"), F.col("c_vec")))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "rank", "neighbor_id", F.round("cos", 6).alias("cos"))
+    )
 
 
 def brute_force_topk(
@@ -38,18 +67,7 @@ def brute_force_topk(
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
     )
-    scored = (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos", cosine_col(F.col("q_vec"), F.col("c_vec")))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc(F.round("cos", 9)), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", F.round("cos", 6).alias("cos"))
-    )
+    return _rank_topk(c, q, None, k)
 
 
 def hyperplane_bucket_udf(planes: int, dims: int, base: int = 0):
@@ -141,19 +159,7 @@ def lsh_topk(
         F.col(vec_col).alias("c_vec"),
         bucket.alias("bucket"),
     )
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos", cosine_col(F.col("q_vec"), F.col("c_vec")))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc(F.round("cos", 9)), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", F.round("cos", 6).alias("cos"))
-    )
+    return _rank_topk(c, q, "bucket", k)
 
 
 def nearest_cells_udf(cents: list, n: int):
@@ -328,19 +334,7 @@ def ivf_topk(
         F.col(vec_col).alias("q_vec"),
         F.explode(nearest_cells_udf(cents, n_probe)(F.col(vec_col))).alias("cell"),
     )
-    scored = (
-        c.join(F.broadcast(q), "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos", cosine_col(F.col("q_vec"), F.col("c_vec")))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc(F.round("cos", 9)), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", F.round("cos", 6).alias("cos"))
-    )
+    return _rank_topk(c, q, "cell", k)
 
 
 def cosine_near_duplicates(

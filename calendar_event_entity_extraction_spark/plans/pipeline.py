@@ -158,32 +158,29 @@ def run_pipeline(
     transcripts: DataFrame,
     out_dir: str,
     resume: bool = True,
-    top_k: int = 500,
 ) -> dict:
     """Run (or resume) the full pipeline; returns the stage manifests.
 
-    ``entity_pools`` and ``edges`` depend on ``top_k`` as well as on the
-    input, so their fingerprint carries it: a resume with another
-    ``top_k`` rebuilds those two and keeps the other three. With
-    ``resume=False`` nothing from a previous run is trusted: every stage
-    is rebuilt. A stage that is not skipped is cleared and rewritten by
-    ``write_stage``, which removes its manifest first and writes it last,
-    so a stage an interrupted run left half-written is rebuilt.
+    Every stage carries the one fingerprint of the input and the code
+    (``input_fingerprint``); the pool size is the code constant
+    ``entity_link.DEFAULT_TOP_K``, so changing it is a code change, which
+    rebuilds every stage. With ``resume=False`` nothing from a previous
+    run is trusted: every stage is rebuilt. A stage that is not skipped
+    is cleared and rewritten by ``write_stage``, which removes its
+    manifest first and writes it last, so a stage an interrupted run left
+    half-written is rebuilt.
 
     ``nodes`` is built on a second thread beside ``entity_pools`` →
     ``edges``; an exception from either branch is raised after both have
     stopped."""
     fp = input_fingerprint(transcripts)
-    fp_k = f"{fp};top_k={top_k}"
     manifests = {}
 
-    def stage(name: str, fingerprint: str, build, partition_by=None):
-        if resume and mf.stage_is_complete(out_dir, name, fingerprint):
+    def stage(name: str, build, partition_by=None):
+        if resume and mf.stage_is_complete(out_dir, name, fp):
             manifests[name] = {**mf.read_manifest(out_dir, name), "resumed": True}
         else:
-            manifests[name] = mf.write_stage(
-                build(), out_dir, name, fingerprint, partition_by
-            )
+            manifests[name] = mf.write_stage(build(), out_dir, name, fp, partition_by)
         return mf.read_stage(spark, out_dir, name)
 
     # SLIM projection before the canonicalize shuffle AND the write: the KG
@@ -192,31 +189,27 @@ def run_pipeline(
     # exchange payload and the stage's parquet volume
     events = stage(
         "events",
-        fp,
         lambda: canonicalize_events(
             extract_events(transcripts).select(*SLIM_EVENT_COLS)
         ),
     )
-    triples = stage("triples", fp, lambda: events_to_triples(events))
+    triples = stage("triples", lambda: events_to_triples(events))
 
     failed = []
 
     def nodes_branch():
         try:
-            stage("nodes", fp, lambda: graph_nodes(events, triples), ["kind"])
+            stage("nodes", lambda: graph_nodes(events, triples), ["kind"])
         except BaseException as e:
             failed.append(e)
 
     branch = InheritableThread(target=nodes_branch)
     branch.start()
     try:
-        pools = stage(
-            "entity_pools", fp_k, lambda: build_entity_pools(triples, top_k)
-        )
+        pools = stage("entity_pools", lambda: build_entity_pools(triples))
         att_pool = pools.filter(F.col("pred") == "attendee").select("name", "cnt")
         stage(
             "edges",
-            fp_k,
             lambda: link_entities(triples, att_pool, "attendee"),
             partition_by=["pred"],
         )

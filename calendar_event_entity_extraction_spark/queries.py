@@ -14,8 +14,8 @@ from pyspark.sql import functions as F
 
 from .operators.canonicalize import canonicalize_events
 from .operators.extract import extract_events
+from .schemas import TARGET_KEYS
 from .synth.oracle import (
-    GOLD_FIELDS,
     gold_augment_sql,
     gold_dataset_analysis_sql,
     gold_entity_pool_sql,
@@ -102,7 +102,7 @@ def q_eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan has exactly one transcript scan and zero joins (pinned by
     ``tests/test_driver_contract.py``), halving the dominant extract cost
     at scale vs the former two-lineage join with identical BIGINT counts."""
-    from .operators.metrics import FIELDS, field_metrics_counts_paired
+    from .operators.metrics import field_metrics_counts_paired
 
     ev = canonical_events(spark, sf_dir)
     k = F.substring("conv_id", 6, 20).cast("long")
@@ -110,10 +110,10 @@ def q_eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("location")
     )
     paired = ev.select(
-        *[F.col(f).alias(f"g_{f}") for f in FIELDS],
+        *[F.col(f).alias(f"g_{f}") for f in TARGET_KEYS],
         *[
             (p_loc if f == "location" else F.col(f)).alias(f"p_{f}")
-            for f in FIELDS
+            for f in TARGET_KEYS
         ],
     )
     return field_metrics_counts_paired(paired)
@@ -134,10 +134,7 @@ def q_eval_metrics_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     Single-pass like :func:`q_eval_metrics`: pred/gold derived in ONE
     projection of ONE extraction lineage (identity pairing — unique
     per-turn key), one transcript scan, zero joins."""
-    from .operators.metrics import (
-        FIELDS,
-        field_metrics_canonical_counts_paired,
-    )
+    from .operators.metrics import field_metrics_canonical_counts_paired
 
     ev = canonical_events(spark, sf_dir)
     k = F.substring("conv_id", 6, 20).cast("long")
@@ -154,8 +151,8 @@ def q_eval_metrics_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).otherwise(F.col("time")),
     }
     paired = ev.select(
-        *[F.col(f).alias(f"g_{f}") for f in FIELDS],
-        *[perturb.get(f, F.col(f)).alias(f"p_{f}") for f in FIELDS],
+        *[F.col(f).alias(f"g_{f}") for f in TARGET_KEYS],
+        *[perturb.get(f, F.col(f)).alias(f"p_{f}") for f in TARGET_KEYS],
     )
     return field_metrics_canonical_counts_paired(paired)
 
@@ -213,8 +210,6 @@ def q_augment_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dataset_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A2 analyze_dataset (src/prepare_assignment_data.py:64-102): per-field
     fill counts over the extracted events, one aggregate pass."""
-    from .schemas import TARGET_KEYS
-
     ev = canonical_events(spark, sf_dir)
     return ev.agg(
         F.count("*").alias("n_rows"),
@@ -240,7 +235,7 @@ def kg_queries() -> dict:
         "dataset_analysis": q_dataset_analysis,
         "augment_pipeline": q_augment_pipeline,
     }
-    for f in GOLD_FIELDS:
+    for f in TARGET_KEYS:
         qs[f"extract_{f}"] = _field_query(f)
     return qs
 
@@ -256,6 +251,6 @@ def kg_oracles() -> dict:
         "dataset_analysis": gold_dataset_analysis_sql(),
         "augment_pipeline": gold_augment_sql(AUG_ATT_POOL, AUG_LOC_POOL),
     }
-    for f in GOLD_FIELDS:
+    for f in TARGET_KEYS:
         oracles[f"extract_{f}"] = gold_events_sql([f])
     return oracles

@@ -46,27 +46,3 @@ EVENT_STRUCT = T.StructType(
         T.StructField("notes", T.StringType(), True),
     ]
 )
-
-# (subj, pred, obj) triple rows; obj_idx preserves attendee text-order so the
-# reference's ordered list can be reconstructed (SURVEY.md §1.4).
-TRIPLE_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType(), False),
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("turn_idx", T.IntegerType(), False),
-        T.StructField("pred", T.StringType(), False),
-        T.StructField("obj", T.StringType(), False),
-        T.StructField("obj_idx", T.IntegerType(), False),
-    ]
-)
-
-PREDICATES = [
-    "action",
-    "date",
-    "time",
-    "attendee",
-    "location",
-    "duration",
-    "recurrence",
-    "notes",
-]

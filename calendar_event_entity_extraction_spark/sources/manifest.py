@@ -26,6 +26,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import re
 import shutil
 from datetime import datetime, timezone
 
@@ -136,9 +137,12 @@ def stage_is_complete(out_dir: str, stage: str, input_fingerprint: str) -> bool:
 def read_stage(spark: SparkSession, out_dir: str, stage: str) -> DataFrame:
     """Read a stage with the schema its manifest recorded: no footer-merge
     job (60-80 ms against ~10 ms), and a stage that committed no file
-    reads as empty instead of failing schema inference."""
+    reads as empty instead of failing schema inference. Spark globs every
+    path it reads, so the stage path's Hadoop glob characters are escaped:
+    an ``out_dir`` such as ``out[1]`` names itself, not a pattern."""
     schema = StructType.fromDDL(read_manifest(out_dir, stage)["schema"])
-    return spark.read.schema(schema).parquet(os.path.join(out_dir, stage))
+    path = re.sub(r"([\\*?\[\]{}])", r"\\\1", os.path.join(out_dir, stage))
+    return spark.read.schema(schema).parquet(path)
 
 
 def write_stage_partitioned_resumable(

@@ -4,7 +4,10 @@ The reference is batch-only; the engine's extraction stage is stateless
 per-row, so the exact same Column expressions run unchanged under
 ``readStream`` — one definition, two execution modes. Late transcript turns
 are handled with an event-time watermark; windowed per-conversation rollups
-use append-mode watermarked aggregation.
+use append-mode watermarked aggregation. The streaming canonicalizer is
+``streaming_dedup_events``: Spark's built-in ``dropDuplicatesWithinWatermark``
+keeps the first arrival of an event key, also when its echo arrives in a
+later micro-batch, and drops the key's state once the watermark passes.
 
 (The `north_rule`'s resume requirement is batch-with-manifests — see
 plans/pipeline.py; streaming here is the continuous-ingest variant.)
@@ -47,31 +50,16 @@ def streaming_dedup_events(
     events: DataFrame, watermark: str = "2 hours"
 ) -> DataFrame:
     """Streaming exact dedup: drop co-referent re-detections of the same
-    event across micro-batches. ``dropDuplicatesWithinWatermark`` keys state
-    on the merge key and EVICTS it once the watermark passes — bounded
-    state at any stream length, unlike a plain dropDuplicates whose state
-    grows forever. The batch analog is canonicalize_events (first-wins);
-    within a watermark window the first arrival wins here too."""
+    event, within a micro-batch or across micro-batches.
+    ``dropDuplicatesWithinWatermark`` keys state on the merge key
+    (conv_id, action, date, time) and EVICTS it once the watermark passes —
+    bounded state at any stream length, unlike a plain dropDuplicates or a
+    per-key Python state function whose state grows forever. The batch
+    analog is canonicalize_events (first-wins); within a watermark window
+    the first arrival wins here too."""
     return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
         ["conv_id", "action", "date", "time"]
     )
-
-
-def run_stream_to_memory(
-    spark: SparkSession, input_dir: str, query_name: str = "stream_events"
-):
-    """Drive the streaming extraction synchronously to completion against a
-    static directory (smoke-test harness): memory sink + processAllAvailable."""
-    ev = streaming_extract(spark, input_dir).drop("attendees")
-    q = (
-        ev.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
 
 
 def streaming_curate(

@@ -17,6 +17,7 @@ grammar key (drives every field formula).
 
 from __future__ import annotations
 
+from ..schemas import TARGET_KEYS
 from .grammar import (
     ACTIONS,
     DUR_PAIRS,
@@ -134,15 +135,10 @@ WITH {KEYS_CTE}, f AS (
 )
 """
 
-GOLD_FIELDS = [
-    "action", "date", "time", "attendees",
-    "location", "duration", "recurrence", "notes",
-]
-
 
 def gold_events_sql(fields: list[str] | None = None) -> str:
     """Oracle SQL for the canonical extracted-events table."""
-    cols = ", ".join(["conv_id", "turn_idx"] + (fields or GOLD_FIELDS))
+    cols = ", ".join(["conv_id", "turn_idx"] + (fields or TARGET_KEYS))
     return f"{GOLD_CTE} SELECT {cols} FROM gold"
 
 

@@ -1,6 +1,11 @@
 """The correctness gate: field-level P/R >= 0.95 (BASELINE.json) with the
 reference's compute_metrics semantics (src/evaluate_finetuned.py:48-99)."""
 
+import json
+import os
+import subprocess
+import sys
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -8,10 +13,8 @@ from calendar_event_entity_extraction_spark.operators import (
     canonicalize_events,
     extract_events,
 )
-from calendar_event_entity_extraction_spark.operators.metrics import (
-    FIELDS,
-    metrics_dict,
-)
+from calendar_event_entity_extraction_spark.operators.metrics import metrics_dict
+from calendar_event_entity_extraction_spark.schemas import TARGET_KEYS
 from calendar_event_entity_extraction_spark.synth import (
     gold_events,
     keys_df,
@@ -34,7 +37,7 @@ def test_field_pr_gate(pred_and_gold):
     m = metrics_dict(pred, gold)
     assert m["exact_match"] >= 0.95, m
     assert m["field_accuracy"] >= 0.95, m
-    for f in FIELDS:
+    for f in TARGET_KEYS:
         assert m[f"{f}_accuracy"] >= 0.95, (f, m)
         assert m[f"{f}_precision"] >= 0.95, (f, m)
         assert m[f"{f}_recall"] >= 0.95, (f, m)
@@ -112,3 +115,51 @@ def test_extractor_unit(spark, text, field, expected):
     rows = extract_events(df).collect()
     assert len(rows) == 1
     assert rows[0][field] == expected, rows[0].asDict()
+
+
+# ~100 kB turns that repeat one regex group tens of thousands of times,
+# each with a date and a time so detection lets them into the cascade.
+# Kept out of specs.HOSTILE_TEXTS, which the kernel-equality tests iterate.
+LONG_REPEAT_SHAPES = {
+    "name_chain": "Sync " + "Alex, " * 16_666 + "Bob on 10/05/2024 at 4pm.",
+    "leading_times": "4pm " * 25_000 + "Sync on 10/05/2024.",
+    "capitalized_run": "Sync on 10/05/2024 at 4pm " + "Alex " * 20_000 + "end.",
+}
+LONG_REPEAT_BUDGET_S = 240
+
+# argv: repo dir, tests dir. A child process, because a StackOverflowError
+# in an executor thread shuts the whole local-mode JVM down.
+_LONG_REPEAT_RUN = """
+import json, sys
+sys.path[:0] = sys.argv[1:3]
+from calendar_event_entity_extraction_spark.operators.extract import extract_events
+from calendar_event_entity_extraction_spark.session import get_spark
+from test_extract import LONG_REPEAT_SHAPES
+spark = get_spark(app_name="long-repeat", cores=2)
+df = spark.createDataFrame(
+    [(name, 0, "user", t, None, None) for name, t in LONG_REPEAT_SHAPES.items()],
+    "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
+)
+out = {
+    r["conv_id"]: len(r["attendees"] or [])
+    for r in extract_events(df).select("conv_id", "attendees").collect()
+}
+print(json.dumps(out))
+"""
+
+
+def test_long_repeated_group_turns_complete():
+    """Every repeated group in the cascade is bounded, so these turns
+    extract instead of overflowing the JVM's regex recursion; the name
+    chain is cut at the bound (1 + 64 names)."""
+    tests = os.path.dirname(os.path.abspath(__file__))
+    child = subprocess.run(
+        [sys.executable, "-c", _LONG_REPEAT_RUN, os.path.dirname(tests), tests],
+        capture_output=True,
+        text=True,
+        env={**os.environ, "SPARK_DRIVER_MEM": "1g"},
+        timeout=LONG_REPEAT_BUDGET_S,
+    )
+    assert child.returncode == 0, child.stderr[-3000:]
+    got = json.loads(child.stdout.strip().splitlines()[-1])
+    assert got == {"name_chain": 65, "leading_times": 0, "capitalized_run": 0}

@@ -195,29 +195,6 @@ def test_stage_writes_skip_success_marker(fresh_build):
         assert not [n for n in names if "_SUCCESS" in n], (stage, names)
 
 
-def test_resume_with_changed_top_k_rebuilds_pool_stages(spark, fresh_copy):
-    """top_k shapes entity_pools and edges but not events, triples or
-    nodes (built from events + triples): a resume under another top_k must
-    rebuild exactly those two."""
-    out = fresh_copy
-    tr = transcripts_from_keys(keys_df(spark, N))
-    m = run_pipeline(spark, tr, out, top_k=3)
-    assert _resumed(m) == {
-        "events": True,
-        "triples": True,
-        "entity_pools": False,
-        "edges": False,
-        "nodes": True,
-    }
-    assert m["entity_pools"]["rows"] <= 2 * 3
-    ranks = mf.read_stage(spark, out, "edges").filter(
-        F.col("entity_rank").isNotNull()
-    )
-    assert ranks.agg(F.max("entity_rank")).collect()[0][0] <= 2
-    again = run_pipeline(spark, tr, out, top_k=3)
-    assert all(man.get("resumed") for man in again.values())
-
-
 def test_interrupted_manifest_write_rebuilds_on_resume(
     spark, fresh_build, tmp_path, monkeypatch
 ):
@@ -281,6 +258,20 @@ def test_hostile_text_builds_and_resumes_an_empty_graph(spark, tmp_path):
     assert all(mf.read_manifest(out, s) for s in STAGES)
     assert m["edges"]["rows"] == m["nodes"]["rows"] == 0
     assert mf.read_stage(spark, out, "edges").count() == 0
+    assert _resumed(run_pipeline(spark, tr, out)) == {s: True for s in STAGES}
+
+
+def test_glob_characters_in_out_dir_build_and_resume(spark, fresh_build, tmp_path):
+    """Spark globs every path it reads, so an ``out_dir`` named like a
+    pattern (``out[1]``) must still read back its own stages: the build
+    writes all five, equal to a build elsewhere, and a second call resumes
+    all five."""
+    out = str(tmp_path / "out[1]")
+    tr = transcripts_from_keys(keys_df(spark, N))
+    assert _resumed(run_pipeline(spark, tr, out)) == {s: False for s in STAGES}
+    assert {s: _digest(mf.read_stage(spark, out, s)) for s in STAGES} == {
+        s: _digest(mf.read_stage(spark, fresh_build[0], s)) for s in STAGES
+    }
     assert _resumed(run_pipeline(spark, tr, out)) == {s: True for s in STAGES}
 
 

@@ -1,62 +1,14 @@
-"""Cross-batch stateful canonicalization + as-of join correctness."""
+"""As-of join correctness: the plain, bucketed and grouped forms."""
 
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from calendar_event_entity_extraction_spark.operators.asof import (
     asof_join,
     asof_join_bucketed,
     asof_join_grouped,
 )
-from calendar_event_entity_extraction_spark.operators.extract import extract_events
-from calendar_event_entity_extraction_spark.streaming.stateful import (
-    canonicalize_events_stateful,
-)
-from calendar_event_entity_extraction_spark.schemas import TRANSCRIPT_SCHEMA
-
-
-def test_stateful_dedup_across_microbatches(spark, tmp_path):
-    base = str(tmp_path / "stream_in")
-    req = "Team sync on 10/05/2024 at 4pm with Alice."
-    other = "Budget review on 11/05/2024 at 9:00 am."
-    import datetime as dt
-
-    t0 = dt.datetime(2024, 1, 1)
-    batch1 = spark.createDataFrame(
-        [("c1", 0, "user", req, None, t0), ("c2", 0, "user", other, None, t0)],
-        TRANSCRIPT_SCHEMA,
-    )
-    batch2 = spark.createDataFrame(
-        [
-            ("c1", 3, "user", req, None, t0),  # late echo of c1's event
-            ("c3", 1, "user", other, None, t0),  # new conversation
-        ],
-        TRANSCRIPT_SCHEMA,
-    )
-    batch1.coalesce(1).write.parquet(base)
-    batch2.coalesce(1).write.mode("append").parquet(base)
-
-    stream = (
-        spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(base)
-    )
-    out = canonicalize_events_stateful(extract_events(stream))
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("stateful_out")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    rows = spark.sql("SELECT * FROM stateful_out").collect()
-    by_conv = {r["conv_id"]: r for r in rows}
-    assert set(by_conv) == {"c1", "c2", "c3"}
-    assert by_conv["c1"]["turn_idx"] == 0  # echo dropped (or merged to first)
-    assert len(rows) == 3
 
 
 @pytest.mark.parametrize("bucket_seconds", [100, 365 * 86400])

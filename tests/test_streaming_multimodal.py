@@ -2,13 +2,15 @@
 
 import pytest
 from pyspark.sql import functions as F
+from streams import drain_to_memory
 
 from calendar_event_entity_extraction_spark.operators.multimodal import (
+    decode_media_features,
     extract_features,
     synth_media,
 )
 from calendar_event_entity_extraction_spark.streaming.extract_stream import (
-    run_stream_to_memory,
+    streaming_extract,
 )
 from calendar_event_entity_extraction_spark.synth import keys_df, transcripts_from_keys
 
@@ -20,7 +22,7 @@ def test_streaming_extract_matches_batch(spark, tmp_path):
     path = str(tmp_path / "transcripts")
     tr.write.parquet(path)
 
-    out = run_stream_to_memory(spark, path, query_name="t_stream")
+    out = drain_to_memory(streaming_extract(spark, path).drop("attendees"), "t_stream")
     # stateless extraction: streaming result == batch result row-for-row
     from calendar_event_entity_extraction_spark.operators import extract_events
 
@@ -31,7 +33,7 @@ def test_streaming_extract_matches_batch(spark, tmp_path):
 
 def test_multimodal_feature_plumbing(spark):
     media = synth_media(spark, 48)
-    feats = extract_features(media, fake=True)
+    feats = extract_features(media)
     rows = feats.collect()
     assert len(rows) == 48
     for r in rows:
@@ -43,56 +45,12 @@ def test_multimodal_feature_plumbing(spark):
     assert all(again[r["media_id"]] == r["checksum"] for r in rows)
 
 
-def test_real_featurizer_decodes_stdlib_kinds(spark):
-    """fake=False runs the REAL stdlib decoders and featurizes the decoded
-    content — checked against per-kind expectations computed in pure
-    Python."""
-    from pyspark.sql import functions as F
-
-    from calendar_event_entity_extraction_spark.operators.multimodal import (
-        synth_bmp_hex_col,
-        synth_ppm_hex_col,
-        synth_wav_hex_col,
-    )
-
-    k = F.col("id")
-    media = spark.range(18).select(
-        k.alias("media_id"),
-        F.when(k % 3 == 0, F.lit("wav"))
-        .when(k % 3 == 1, F.lit("ppm"))
-        .otherwise(F.lit("bmp"))
-        .alias("kind"),
-        F.unhex(
-            F.when(k % 3 == 0, synth_wav_hex_col(k))
-            .when(k % 3 == 1, synth_ppm_hex_col(k))
-            .otherwise(synth_bmp_hex_col(k))
-        ).alias("payload"),
-        F.lit(None).cast(
-            "struct<width:int,height:int,sample_rate:int,n_frames:int>"
-        ).alias("meta"),
-    )
-    rows = {r["media_id"]: r for r in extract_features(media, fake=False).collect()}
-    for i in range(18):
-        r = rows[i]
-        if i % 3 == 0:
-            sr, ns = 8000 + (i % 3) * 4000, 4 + i % 8
-            assert r["feat"][0] == pytest.approx(sr / 48000.0)
-            assert r["feat"][1] == ns
-        else:
-            w = 2 + i % 3
-            assert (r["feat"][0], r["feat"][1]) == (w, 2)
-            for ch in range(3):
-                expected = (
-                    sum((i + (3 * p + ch) * 7) % 256 for p in range(w * 2))
-                    / (w * 2)
-                    / 255.0
-                )
-                assert r["feat"][2 + ch] == pytest.approx(expected), (i, ch)
-
-
-def test_real_featurizer_rejects_unknown_kind(spark):
-    with pytest.raises(Exception, match="no stdlib codec"):
-        extract_features(synth_media(spark, 3), fake=False).collect()
+def test_decoder_rejects_unknown_kind(spark):
+    """A kind with no stdlib codec (synth_media's image/audio/video) raises
+    instead of decoding to nulls."""
+    media = synth_media(spark, 3).select("media_id", "kind", "payload")
+    with pytest.raises(Exception, match="unknown media kind"):
+        decode_media_features(media).collect()
 
 
 def _py_wav(k: int) -> bytes:

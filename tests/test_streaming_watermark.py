@@ -3,10 +3,13 @@ windows emit once the watermark passes them (append mode)."""
 
 import datetime as dt
 
-from pyspark.sql import functions as F
+import pytest
+from streams import drain_to_memory
 
+from calendar_event_entity_extraction_spark.operators.extract import extract_events
 from calendar_event_entity_extraction_spark.schemas import TRANSCRIPT_SCHEMA
 from calendar_event_entity_extraction_spark.streaming.extract_stream import (
+    streaming_dedup_events,
     streaming_extract,
     windowed_event_counts,
 )
@@ -35,17 +38,9 @@ def test_watermarked_window_counts(spark, tmp_path):
 
     ev = streaming_extract(spark, base)
     agg = windowed_event_counts(ev, window="1 hour", watermark="2 hours")
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("wm_out")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
     rows = {
         r["window_start"]: r["n_events"]
-        for r in spark.sql("SELECT * FROM wm_out").collect()
+        for r in drain_to_memory(agg, "wm_out").collect()
     }
     # hour-0 and hour-1 windows closed by the advanced watermark
     assert rows.get(h0) == 3
@@ -54,34 +49,51 @@ def test_watermarked_window_counts(spark, tmp_path):
     assert h0 + dt.timedelta(hours=9) not in rows
 
 
-def test_streaming_dedup_within_watermark(spark, tmp_path):
-    from calendar_event_entity_extraction_spark.streaming.extract_stream import (
-        streaming_dedup_events,
-    )
+H0 = dt.datetime(2024, 3, 1, 0, 0, 0)
+BUDGET = "Budget review on 11/05/2024 at 9:00 am."
 
+# input files, one micro-batch each → the (conv_id, turn_idx) that survive
+DEDUP_INPUTS = {
+    # the echo (a, 1) arrives in the same micro-batch as (a, 0)
+    "same_batch": (
+        [[
+            _req("a", 0, H0),
+            _req("a", 1, H0 + dt.timedelta(minutes=1)),
+            _req("b", 0, H0 + dt.timedelta(minutes=2)),
+        ]],
+        [("a", 0), ("b", 0)],
+    ),
+    # c1's late echo at turn 3 arrives in the second micro-batch
+    "across_batches": (
+        [
+            [_req("c1", 0, H0), ("c2", 0, "user", BUDGET, None, H0)],
+            [_req("c1", 3, H0), ("c3", 1, "user", BUDGET, None, H0)],
+        ],
+        [("c1", 0), ("c2", 0), ("c3", 1)],
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(DEDUP_INPUTS))
+def test_streaming_dedup_within_watermark(spark, tmp_path, case):
+    """An echo of an event (same conv_id, action, date, time) is dropped
+    whether it arrives in the same micro-batch or a later one; the first
+    arrival wins."""
+    files, expected = DEDUP_INPUTS[case]
     base = str(tmp_path / "dedup_in")
-    h0 = dt.datetime(2024, 3, 1, 0, 0, 0)
-    rows = [
-        _req("a", 0, h0),
-        _req("a", 1, h0 + dt.timedelta(minutes=1)),  # echo of the same event
-        _req("b", 0, h0 + dt.timedelta(minutes=2)),
-    ]
-    spark.createDataFrame(rows, TRANSCRIPT_SCHEMA).coalesce(1).write.parquet(base)
-
-    ev = streaming_extract(spark, base).drop("attendees")
-    dd = streaming_dedup_events(ev)
-    q = (
-        dd.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("dedup_stream")
-        .start()
+    for rows in files:
+        spark.createDataFrame(rows, TRANSCRIPT_SCHEMA).coalesce(1).write.mode(
+            "append"
+        ).parquet(base)
+    stream = (
+        spark.readStream.schema(TRANSCRIPT_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(base)
     )
-    q.processAllAvailable()
-    q.stop()
-    out = spark.sql("SELECT conv_id, turn_idx FROM dedup_stream").collect()
-    got = {(r["conv_id"], r["turn_idx"]) for r in out}
-    # the echo (a, 1) deduplicates against (a, 0); first arrival wins
-    assert got == {("a", 0), ("b", 0)}, got
+    dd = streaming_dedup_events(extract_events(stream).drop("attendees"))
+    out = drain_to_memory(dd, f"dedup_{case}").collect()
+    got = sorted((r["conv_id"], r["turn_idx"]) for r in out)
+    assert got == expected, got
 
 
 def test_streaming_curate_gates_and_dedup(spark, tmp_path):
@@ -115,14 +127,6 @@ def test_streaming_curate_gates_and_dedup(spark, tmp_path):
     stream = (
         spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(base)
     )
-    out = streaming_curate(stream)
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("curate_out")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    kept = sorted(r["doc_id"] for r in spark.sql("SELECT * FROM curate_out").collect())
+    out = drain_to_memory(streaming_curate(stream), "curate_out")
+    kept = sorted(r["doc_id"] for r in out.collect())
     assert kept == [1, 5], kept
