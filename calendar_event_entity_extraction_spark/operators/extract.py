@@ -53,6 +53,9 @@ REC_RE = rf"\b({REC_ALT})\b"
 # and in local mode that StackOverflowError shuts the whole JVM down. Each
 # such group in the cascade repeats at most _MAX_REPEAT times: a longer
 # name chain, leading date/time run or capitalized phrase is cut there.
+# The ``with …`` phrase (WITH_RE) is a lazy ``.+?`` that needs no such
+# bound, so attendees_col cuts its split list to the same _MAX_REPEAT + 1
+# names: one pasted roster cannot become thousands of attendee triples.
 _MAX_REPEAT = 64
 
 # clause markers that end a free-text span (action / attendee / location)
@@ -250,6 +253,7 @@ def attendees_col(text: Column, name_pool: list[str] | None = None) -> Column:
     arr = F.transform(
         F.filter(arr, lambda x: F.trim(x) != ""), lambda x: F.trim(x)
     )
+    arr = F.slice(arr, 1, _MAX_REPEAT + 1)
     return F.when(phrase.isNotNull() & (F.size(arr) > 0), arr)
 
 

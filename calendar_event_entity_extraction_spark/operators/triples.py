@@ -50,7 +50,8 @@ def extract_triples(
     return events_to_triples(canonicalize_events(slim), preds=preds)
 
 
-_TRIPLE_STRUCT = "array<struct<pred:string,obj:string,obj_idx:int>>"
+_EMPTY_TRIPLES = "CAST(array() AS array<struct<pred:string,obj:string,obj_idx:int>>)"
+_KEY = ["event_id", "conv_id", "turn_idx"]
 
 
 def events_to_triples(
@@ -72,55 +73,45 @@ def events_to_triples(
     inside WholeStageCodegen and the null-obj filter is a row-level
     codegen filter above the explode.
 
+    The plan is written as SQL text, three ``selectExpr`` and one
+    ``where``: ``run_pipeline`` builds it on the driver on every build and
+    resume, and the same plan built from Column objects costs ten times
+    the py4j round trips.
+
     ``preds`` (optional) emits only the named predicates — combined with a
     slim upstream projection this prunes unused extractors.
     """
-    key = ["event_id", "conv_id", "turn_idx"]
     scalars = [p for p in SCALAR_PREDS if preds is None or p in preds]
     with_att = (preds is None or "attendee" in preds) and (
         "attendees" in events.columns
     )
 
+    cols = [*_KEY, *(f"`{p}`" for p in scalars)]
     if with_att:
-        e = events.select(
-            *key, *scalars, F.posexplode_outer("attendees").alias("_ai", "_a")
+        e = events.selectExpr(*cols, "posexplode_outer(attendees) AS (_ai, _a)")
+        first = "_ai IS NULL OR _ai = 0"
+        att_arr = (
+            "CASE WHEN _a IS NOT NULL THEN array(named_struct("
+            "'pred', 'attendee', 'obj', _a, 'obj_idx', CAST(_ai AS INT)))"
+            f" ELSE {_EMPTY_TRIPLES} END"
         )
-        first = F.col("_ai").isNull() | (F.col("_ai") == 0)
-        att_arr = F.when(
-            F.col("_a").isNotNull(),
-            F.array(
-                F.struct(
-                    F.lit("attendee").alias("pred"),
-                    F.col("_a").alias("obj"),
-                    F.col("_ai").cast("int").alias("obj_idx"),
-                )
-            ),
-        ).otherwise(F.array().cast(_TRIPLE_STRUCT))
     else:
-        e = events.select(*key, *scalars)
-        first = F.lit(True)
-        att_arr = F.array().cast(_TRIPLE_STRUCT)
+        e = events.selectExpr(*cols)
+        first = "true"
+        att_arr = _EMPTY_TRIPLES
 
-    scalar_arr = F.when(
-        first,
-        F.array(
-            *[
-                F.struct(
-                    F.lit(p).alias("pred"),
-                    F.col(p).alias("obj"),
-                    F.lit(0).alias("obj_idx"),
-                )
-                for p in scalars
-            ]
+    scalar_arr = _EMPTY_TRIPLES
+    if scalars:
+        structs = ", ".join(
+            f"named_struct('pred', '{p}', 'obj', `{p}`, 'obj_idx', 0)"
+            for p in scalars
         )
-        if scalars
-        else F.array().cast(_TRIPLE_STRUCT),
-    ).otherwise(F.array().cast(_TRIPLE_STRUCT))
+        scalar_arr = f"CASE WHEN {first} THEN array({structs}) ELSE {scalar_arr} END"
 
     return (
-        e.select(*key, F.explode(F.concat(scalar_arr, att_arr)).alias("t"))
-        .filter(F.col("t.obj").isNotNull())
-        .select(*key, "t.pred", "t.obj", "t.obj_idx")
+        e.selectExpr(*_KEY, f"explode(concat({scalar_arr}, {att_arr})) AS t")
+        .where("t.obj IS NOT NULL")
+        .selectExpr(*_KEY, "t.pred", "t.obj", "t.obj_idx")
     )
 
 

@@ -1,22 +1,27 @@
 """The end-to-end KG-construction pipeline with checkpoint-based resume.
 
-The five stages form a DAG, not a chain:
+The four stages form a DAG, not a chain:
 
-    transcripts ─▶ events ─▶ triples ─┬▶ entity_pools ─▶ edges
-                      │               │
-                      └───────────────┴▶ nodes
+    transcripts ─▶ events ─▶ (triples) ─┬▶ entity_pools ─▶ edges
+                                        │
+                                        └▶ nodes
 
-``nodes`` reads ``events`` and ``triples`` only, so once ``triples`` is
-materialized it is built on its own ``InheritableThread`` while the
-calling thread builds ``entity_pools`` and then ``edges``. The thread
-inherits the caller's job group and description, and ``run_pipeline``
-joins it before it returns or raises, so no job outlives the call.
+``triples`` is not a stage: it is one ``events_to_triples(events)`` plan,
+built once on the calling thread, that all three graph stages read. The
+``edges`` stage holds every triple plus ``entity_rank``, so it is the
+triple table. ``nodes`` depends only on ``events``, so it is built on its
+own ``InheritableThread`` while the calling thread builds
+``entity_pools`` and then ``edges``. The thread inherits the caller's job
+group and description, and ``run_pipeline`` joins it before it returns or
+raises, so no job outlives the call.
 
 Each stage materializes through ``stage()`` — the one stage path — to a
 table + ``_lineage.json`` manifest (sources/manifest.py). A stage is
 complete with this run's fingerprint, and a restart skips it, or it is
 cleared and rewritten (manifest removed first, written last), so a stage
 killed mid-write is rebuilt whole; ``resume=False`` rebuilds every stage.
+Only ``events`` and ``entity_pools`` are read back from disk, by the
+stages after them; nothing in the call reads ``edges`` or ``nodes``.
 Idempotence comes from deterministic event_ids and overwrite-by-stage
 semantics.
 
@@ -52,7 +57,7 @@ from ..operators.extract import extract_events
 from ..operators.triples import SLIM_EVENT_COLS, events_to_triples
 from ..sources import manifest as mf
 
-STAGES = ("events", "triples", "entity_pools", "edges", "nodes")
+STAGES = ("events", "entity_pools", "edges", "nodes")
 
 
 @functools.cache
@@ -181,19 +186,19 @@ def run_pipeline(
             manifests[name] = {**mf.read_manifest(out_dir, name), "resumed": True}
         else:
             manifests[name] = mf.write_stage(build(), out_dir, name, fp, partition_by)
-        return mf.read_stage(spark, out_dir, name)
 
     # SLIM projection before the canonicalize shuffle AND the write: the KG
     # stages never read text/ts, and min_by's struct blocks Catalyst's own
     # column pruning there — dropping them up front halves both the
     # exchange payload and the stage's parquet volume
-    events = stage(
+    stage(
         "events",
         lambda: canonicalize_events(
             extract_events(transcripts).select(*SLIM_EVENT_COLS)
         ),
     )
-    triples = stage("triples", lambda: events_to_triples(events))
+    events = mf.read_stage(spark, out_dir, "events")
+    triples = events_to_triples(events)
 
     failed = []
 
@@ -206,7 +211,8 @@ def run_pipeline(
     branch = InheritableThread(target=nodes_branch)
     branch.start()
     try:
-        pools = stage("entity_pools", lambda: build_entity_pools(triples))
+        stage("entity_pools", lambda: build_entity_pools(triples))
+        pools = mf.read_stage(spark, out_dir, "entity_pools")
         att_pool = pools.filter(F.col("pred") == "attendee").select("name", "cnt")
         stage(
             "edges",

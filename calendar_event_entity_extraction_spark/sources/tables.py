@@ -3,10 +3,7 @@
 The reference reads row-oriented JSONL with inference and in-memory lists
 (``augmentation/utils.py:11-18``); here every scan is a lazy, schema-pinned
 columnar read — predicate pushdown and column pruning come free from
-Catalyst. Iceberg is the target catalog on a real cluster; this container
-has no Iceberg jars, so the reader falls back to Parquet with the same
-layout (a partitioned directory per table) behind an import-try, per the
-environment constraints.
+Catalyst. Every table is a Parquet directory.
 """
 
 from __future__ import annotations
@@ -19,21 +16,11 @@ from pyspark.sql import types as T
 from ..schemas import TRANSCRIPT_SCHEMA
 
 
-def _iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.org.apache.iceberg.Table  # noqa: B018
-        return True
-    except Exception:
-        return False
-
-
 def read_table(
     spark: SparkSession, path: str, schema: T.StructType | None = None
 ) -> DataFrame:
-    """Read an Iceberg table if the catalog is on the classpath, else the
-    Parquet directory with the same layout."""
-    if path.startswith("iceberg://") and _iceberg_available(spark):
-        return spark.read.format("iceberg").load(path[len("iceberg://"):])
+    """Read the Parquet table at ``path``, with ``schema`` pinned when
+    given (no inference pass)."""
     reader = spark.read
     if schema is not None:
         reader = reader.schema(schema)

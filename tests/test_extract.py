@@ -122,6 +122,7 @@ def test_extractor_unit(spark, text, field, expected):
 # Kept out of specs.HOSTILE_TEXTS, which the kernel-equality tests iterate.
 LONG_REPEAT_SHAPES = {
     "name_chain": "Sync " + "Alex, " * 16_666 + "Bob on 10/05/2024 at 4pm.",
+    "with_roster": "Sync with " + "Alex and " * 11_111 + "Bob on 10/05/2024 at 4pm.",
     "leading_times": "4pm " * 25_000 + "Sync on 10/05/2024.",
     "capitalized_run": "Sync on 10/05/2024 at 4pm " + "Alex " * 20_000 + "end.",
 }
@@ -151,7 +152,7 @@ print(json.dumps(out))
 def test_long_repeated_group_turns_complete():
     """Every repeated group in the cascade is bounded, so these turns
     extract instead of overflowing the JVM's regex recursion; the name
-    chain is cut at the bound (1 + 64 names)."""
+    chain and the ``with …`` roster are cut at the bound (1 + 64 names)."""
     tests = os.path.dirname(os.path.abspath(__file__))
     child = subprocess.run(
         [sys.executable, "-c", _LONG_REPEAT_RUN, os.path.dirname(tests), tests],
@@ -162,4 +163,9 @@ def test_long_repeated_group_turns_complete():
     )
     assert child.returncode == 0, child.stderr[-3000:]
     got = json.loads(child.stdout.strip().splitlines()[-1])
-    assert got == {"name_chain": 65, "leading_times": 0, "capitalized_run": 0}
+    assert got == {
+        "name_chain": 65,
+        "with_roster": 65,
+        "leading_times": 0,
+        "capitalized_run": 0,
+    }

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.util import InheritableThread
 from specs import HOSTILE_TEXTS
 
+from calendar_event_entity_extraction_spark.operators.triples import events_to_triples
 from calendar_event_entity_extraction_spark.plans.pipeline import (
     STAGES,
     input_fingerprint,
@@ -42,7 +43,7 @@ def _n_events(n):
 def test_pipeline_runs_and_materializes_graph(spark, out_dir):
     tr = transcripts_from_keys(keys_df(spark, N))
     m = run_pipeline(spark, tr, out_dir)
-    assert set(m) == {"events", "triples", "entity_pools", "edges", "nodes"}
+    assert list(m) == ["events", "entity_pools", "edges", "nodes"]
     assert m["events"]["rows"] == _n_events(N)
     edges = spark.read.parquet(f"{out_dir}/edges")
     nodes = spark.read.parquet(f"{out_dir}/nodes")
@@ -121,9 +122,9 @@ def test_edge_table_partition_pruning(spark, out_dir):
 
 
 # Spark jobs of a fresh run_pipeline at this size. Recording a stage's
-# manifest and reading the stage back launch no job; when each of the five
-# stages ran two one-task footer-merge reads for that, the build ran 25.
-FRESH_BUILD_JOBS = 15
+# manifest and reading the stage back launch no job (they once ran two
+# one-task footer-merge reads per stage).
+FRESH_BUILD_JOBS = 14
 
 
 def _count_jobs(spark, fn):
@@ -205,19 +206,19 @@ def test_interrupted_manifest_write_rebuilds_on_resume(
     tr = transcripts_from_keys(keys_df(spark, N))
     real_dump = mf.json.dump
 
-    def dump_killed_mid_triples(obj, f, **kw):
-        if obj.get("stage") == "triples":
-            f.write('{"stage": "tri')
+    def dump_killed_mid_pools(obj, f, **kw):
+        if obj.get("stage") == "entity_pools":
+            f.write('{"stage": "ent')
             raise RuntimeError("killed mid-dump")
         return real_dump(obj, f, **kw)
 
-    monkeypatch.setattr(mf.json, "dump", dump_killed_mid_triples)
+    monkeypatch.setattr(mf.json, "dump", dump_killed_mid_pools)
     with pytest.raises(RuntimeError, match="killed mid-dump"):
         run_pipeline(spark, tr, out, resume=False)
     monkeypatch.undo()
 
     m = run_pipeline(spark, tr, out)
-    assert m["events"].get("resumed") and not m["triples"].get("resumed")
+    assert m["events"].get("resumed") and not m["entity_pools"].get("resumed")
     clean = fresh_build[0]
     assert {s: _digest(mf.read_stage(spark, out, s)) for s in STAGES} == {
         s: _digest(mf.read_stage(spark, clean, s)) for s in STAGES
@@ -249,7 +250,7 @@ def test_killed_partition_resume_leftovers_rebuild(spark, fresh_build, fresh_cop
 def test_hostile_text_builds_and_resumes_an_empty_graph(spark, tmp_path):
     """No hostile text is a calendar request, so the partitioned ``edges``
     and ``nodes`` stages commit no parquet file: the build still writes
-    all five manifests, and a second call resumes all five."""
+    all four manifests, and a second call resumes all four."""
     ts = datetime(2025, 6, 15)
     rows = [(f"h{i}", 0, "user", t, None, ts) for i, t in enumerate(HOSTILE_TEXTS)]
     tr = spark.createDataFrame([r for r in rows if r[3] is not None], TRANSCRIPT_SCHEMA)
@@ -264,8 +265,8 @@ def test_hostile_text_builds_and_resumes_an_empty_graph(spark, tmp_path):
 def test_glob_characters_in_out_dir_build_and_resume(spark, fresh_build, tmp_path):
     """Spark globs every path it reads, so an ``out_dir`` named like a
     pattern (``out[1]``) must still read back its own stages: the build
-    writes all five, equal to a build elsewhere, and a second call resumes
-    all five."""
+    writes all four, equal to a build elsewhere, and a second call resumes
+    all four."""
     out = str(tmp_path / "out[1]")
     tr = transcripts_from_keys(keys_df(spark, N))
     assert _resumed(run_pipeline(spark, tr, out)) == {s: False for s in STAGES}
@@ -347,7 +348,7 @@ def _digest(df):
 
 def test_code_change_rebuilds_every_stage(spark, fresh_copy, monkeypatch):
     """The fingerprint carries a hash of the package sources: with the
-    code changed (here its hash patched), a resume rebuilds all five
+    code changed (here its hash patched), a resume rebuilds all four
     stages, and then resumes them under the new code."""
     from calendar_event_entity_extraction_spark.plans import pipeline
 
@@ -420,6 +421,20 @@ def test_node_entities_are_the_edge_entities(spark, fresh_build):
     assert {k for _, k in want} == {"attendee", "location"}
 
 
+def test_edges_stage_is_the_triple_table(spark, fresh_build):
+    """A build writes the four stage directories and no ``triples`` one:
+    ``edges`` without ``entity_rank`` holds exactly the triples of the
+    ``events`` stage."""
+    out, _ = fresh_build
+    assert sorted(os.listdir(out)) == sorted(STAGES)
+    edges = mf.read_stage(spark, out, "edges").drop("entity_rank")
+    triples = events_to_triples(mf.read_stage(spark, out, "events"))
+    triples = triples.select(*edges.columns)
+    assert edges.count() > 0
+    assert edges.exceptAll(triples).count() == 0
+    assert triples.exceptAll(edges).count() == 0
+
+
 # ------------------------------------------------------ file-backed input
 
 
@@ -465,7 +480,7 @@ def test_file_backed_full_resume_runs_no_job(spark, file_input, file_build):
 
 def test_file_backed_text_edit_rebuilds_every_stage(spark, file_input, tmp_path):
     """Rewriting the input files with one turn's text edited, keys kept,
-    rebuilds all five stages."""
+    rebuilds all four stages."""
     path, out = str(tmp_path / "transcripts"), str(tmp_path / "kg")
     shutil.copytree(file_input, path)
     run_pipeline(spark, read_transcripts(spark, path), out)
